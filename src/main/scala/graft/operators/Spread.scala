@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Scale-adaptive parallelism floor for compute-heavy per-row pipelines
   * (guide §2: derive partitioning from the input, never a constant tuned
@@ -57,18 +58,17 @@ object Spread {
   /** Parallelism floor for a relation feeding a FAN-OUT consumer (an
     * ADC probe joining |queries| LUT rows per code row, an exploding
     * generate): scan-shaped inputs floor exactly like
-    * [[ensureParallel]]; post-shuffle inputs (aggregate/join outputs,
-    * where ensureParallel is deliberately the identity because the plan
-    * carries shuffle partitioning) additionally floor when the
-    * optimizer's size estimate says AQE's partition coalescing would
-    * fold them below `defaultParallelism` — AQE decides by the shuffle
-    * output's BYTES and is blind to the fan-out above it, so a few
-    * hundred KB of PQ codes (m small ints per vector) collapsed to ONE
-    * partition and the whole probe ran on one core (q139: 7.8 s of a
-    * 12.7 s query in a single task). At scale the estimate exceeds the
-    * threshold and this is the identity; the threshold is AQE's own
-    * minPartitionSize × cores, so the floor fires exactly where AQE
-    * would have under-parallelized. */
+    * [[ensureParallel]]; post-shuffle inputs (aggregate / window / sort
+    * / distinct / repartition outputs, where ensureParallel is
+    * deliberately the identity) are walked THROUGH to the scans below
+    * them, and the frame is repartitioned to `defaultParallelism` when
+    * that scan-split estimate is below it. The scan's split count is
+    * the smallness proxy: AQE coalesces a shuffle by its output BYTES
+    * and is blind to the fan-out above it, so a few hundred KB of PQ
+    * codes (m small ints per vector) collapsed to ONE partition and the
+    * whole probe ran on one core (q139: 7.8 s of a 12.7 s query in a
+    * single task). No AQE setting or size estimate is consulted; at
+    * scale the scans carry ≥ cores splits and this is the identity. */
   def ensureParallelForFanout(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
     if (want <= 1 || df.isStreaming) df
@@ -107,7 +107,9 @@ object Spread {
       }
       case r: LogicalRDD => Some(r.rdd.getNumPartitions.toLong)
       case l: LocalRelation => Some(1L)
-      case _: Range => Some(1L)
+      // the node's own slice count, else what RangeExec falls back to
+      case r: Range => Some(r.numSlices.getOrElse(
+        conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).getOrElse(want)).toLong)
       case u: Union =>
         val parts = u.children.map(walk)
         if (parts.forall(_.isDefined)) Some(parts.flatten.sum) else None

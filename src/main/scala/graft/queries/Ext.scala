@@ -45,6 +45,51 @@ object Ext {
   private val scratchRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** [[scratchDir]] wiped to an empty directory: a lifecycle entry's
+    * run must not see the previous run's stores (DailyLoop skips ticks
+    * already committed there, AnnIndex would extend the old chain).
+    * Safe because Verify, Bench and the specs run entries one at a time
+    * and consume each result before the entry runs again. */
+  private def freshScratch(name: String): String = {
+    val d = new java.io.File(scratchDir(name))
+    graft.sources.Landing.deleteNoFollow(d)
+    d.mkdirs()
+    d.getAbsolutePath
+  }
+
+  /** Scheduler day `d` of a lifecycle entry's daily loop. */
+  private final case class Day(p: graft.DailyLoop.Paths, d: Int,
+                               at: java.sql.Timestamp, docs: DataFrame) {
+    /** The empty document delta of a vector-only tick. */
+    def noDocs: DataFrame = docs.limit(0)
+  }
+
+  /** Runs `tick` for days 1..`days` (stamped 2025-04-0d midnight) over
+    * fresh loop paths under the entry's scratch dir; returns the paths
+    * for the probe. `docs` is the documents table's (doc_id, text). */
+  private def dailyLoop(s: SparkSession, dir: String, name: String,
+                        days: Int = 3)(tick: Day => Unit): graft.DailyLoop.Paths = {
+    val p = graft.DailyLoop.Paths(freshScratch(name))
+    val docs = t(s, dir, "documents").select("doc_id", "text")
+    (1 to days).foreach { d =>
+      tick(Day(p, d, java.sql.Timestamp.valueOf(f"2025-04-0$d%d 00:00:00"), docs))
+    }
+    p
+  }
+
+  /** The ranked PQ/ADC probe output: similarity rounded to 6 dp (the
+    * engines' decimal sums differ in the last ulp). */
+  private def pqRanked(df: DataFrame): DataFrame =
+    df.select(col("query_id"), col("cand_id"), col("rank"),
+              round(col("approx_sim"), 6).as("approx_sim"))
+      .orderBy("query_id", "rank")
+
+  /** The ranked posting-store probe output, rounded like [[pqRanked]]. */
+  private def postingsRanked(df: DataFrame): DataFrame =
+    df.select(col("query_id"), col("cand_id"),
+              round(col("sim"), 6).as("sim"), col("rank"))
+      .orderBy("query_id", "rank")
+
   private val JaccardThreshold = 0.8
   private val ContainmentThreshold = 0.9
   private val CosineDupThreshold = 0.4
@@ -436,13 +481,9 @@ object Ext {
     // the same full-corpus truth as q118: orchestration, compaction and
     // tick commits must be answer-invariant.
     "q119_daily_loop_dedup" -> ((s, dir) => {
-      val work = java.nio.file.Files.createTempDirectory("graft_dailyq_")
-      val p = graft.DailyLoop.Paths(work.toString)
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      (1 to 3).foreach { d =>
+      val p = dailyLoop(s, dir, "graft_dailyq") { day =>
         graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(),
-          docs.filter(col("doc_id") % 3 === lit(d - 1)), p,
-          java.sql.Timestamp.valueOf(f"2025-04-0$d%d 00:00:00"),
+          day.docs.filter(col("doc_id") % 3 === lit(day.d - 1)), day.p, day.at,
           threshold = JaccardThreshold, maxChain = 2)
       }
       graft.streaming.DocsStream.readPairs(s, p.pairs)
@@ -581,10 +622,7 @@ object Ext {
     // the whole construction.
     "q61_ann_pq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      Similarity.pqTopK(e, e.filter(col("vec_id") % 100 === 0), k = 5)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(Similarity.pqTopK(e, e.filter(col("vec_id") % 100 === 0), k = 5))
     }),
 
     // The recall dial CLOSING THE LOOP on q82: q82 reports IVF recall
@@ -732,10 +770,7 @@ object Ext {
     // small ints per candidate, never raw floats.
     "q86_ann_ivfpq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      Similarity.ivfPqTopK(e, e.filter(col("vec_id") % 100 === 0), k = 3)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(Similarity.ivfPqTopK(e, e.filter(col("vec_id") % 100 === 0), k = 3))
     }),
 
     // q86's composed IVFADC with the q89 recall dial: each query probes
@@ -747,11 +782,8 @@ object Ext {
     // (spec-pinned against pqTopK).
     "q142_ann_ivfpq_multiprobe" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      Similarity.ivfPqTopKMultiProbe(e, e.filter(col("vec_id") % 100 === 0),
-          k = 3, nprobe = 2)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(Similarity.ivfPqTopKMultiProbe(e, e.filter(col("vec_id") % 100 === 0),
+        k = 3, nprobe = 2))
     }),
 
     // q142's composed multi-probe plan with the FIXED 600-id query
@@ -762,11 +794,8 @@ object Ext {
     // pins q86's single-probe shape.
     "q144_ann_ivfpq_mp_fixedq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      Similarity.ivfPqTopKMultiProbe(e, e.orderBy("vec_id").limit(600),
-          k = 3, nprobe = 2)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(Similarity.ivfPqTopKMultiProbe(e, e.orderBy("vec_id").limit(600),
+        k = 3, nprobe = 2))
     }),
 
     // ANN artifacts PERSISTED (the q106 disk-index move applied to the
@@ -779,15 +808,11 @@ object Ext {
     // persistence is a lifecycle change, bit-identical by construction.
     "q120_ann_pq_persisted" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val idx = java.nio.file.Files.createTempDirectory("graft_annpq_")
-        .resolve("pq").toString
+      val idx = freshScratch("graft_annpq") + "/pq"
       graft.operators.AnnIndex.buildPq(e, idx, m = 4, subLen = 16,
         numCodes = 16, trainIters = 2)
-      graft.operators.AnnIndex
-        .pqTopK(s, idx, e.filter(col("vec_id") % 100 === 0), k = 5)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(graft.operators.AnnIndex
+        .pqTopK(s, idx, e.filter(col("vec_id") % 100 === 0), k = 5))
     }),
 
     // IVF centroids persisted the same way: the q87 Lloyd build publishes
@@ -796,8 +821,7 @@ object Ext {
     // oracle.
     "q121_ann_ivf_persisted" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val idx = java.nio.file.Files.createTempDirectory("graft_annivf_")
-        .resolve("ivf").toString
+      val idx = freshScratch("graft_annivf") + "/ivf"
       graft.operators.AnnIndex.buildIvf(e, idx, refineIters = 1)
       graft.operators.AnnIndex.ivfAssign(s, idx, e)
         .select(col("id"), col("assigned_cell").cast("long").as("assigned_cell"),
@@ -815,16 +839,12 @@ object Ext {
     // even half only, ALL vectors encoded with those books.
     "q123_ann_pq_append" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val idx = java.nio.file.Files.createTempDirectory("graft_annapp_")
-        .resolve("pq").toString
+      val idx = freshScratch("graft_annapp") + "/pq"
       graft.operators.AnnIndex.buildPq(e.filter(col("vec_id") % 2 === 0),
         idx, m = 4, subLen = 16, numCodes = 16, trainIters = 2)
       graft.operators.AnnIndex.appendPq(e.filter(col("vec_id") % 2 === 1), idx)
-      graft.operators.AnnIndex
-        .pqTopK(s, idx, e.filter(col("vec_id") % 100 === 0), k = 5)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(graft.operators.AnnIndex
+        .pqTopK(s, idx, e.filter(col("vec_id") % 100 === 0), k = 5))
     }),
 
     // The inverted file on disk: corpus assigned to its refined cells
@@ -838,15 +858,11 @@ object Ext {
     // probe ranking and within-cell top-k from the q87 Lloyd CTEs.
     "q124_ann_ivf_postings" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val idx = java.nio.file.Files.createTempDirectory("graft_annpost_")
-        .resolve("ivfp").toString
+      val idx = freshScratch("graft_annpost") + "/ivfp"
       graft.operators.AnnIndex.buildIvfPostings(e, idx, refineIters = 1)
-      graft.operators.AnnIndex
+      postingsRanked(graft.operators.AnnIndex
         .postingsTopK(s, idx, e.filter(col("vec_id") % 100 === 0),
-          k = 3, nprobe = 2)
-        .select(col("query_id"), col("cand_id"),
-                round(col("sim"), 6).as("sim"), col("rank"))
-        .orderBy("query_id", "rank")
+          k = 3, nprobe = 2))
     }),
 
     // The posting store's O(delta) ingest (q124's inverted file +
@@ -859,19 +875,15 @@ object Ext {
     // probes corpus-wide, exactly the pinned-quantizer lifecycle.
     "q126_ann_postings_append" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val idx = java.nio.file.Files.createTempDirectory("graft_annpapp_")
-        .resolve("ivfp").toString
+      val idx = freshScratch("graft_annpapp") + "/ivfp"
       graft.operators.AnnIndex.buildIvfPostings(
         e.filter(col("vec_id") % 2 === 0), idx, refineIters = 1)
       graft.operators.AnnIndex.appendIvfPostings(
         e.filter(col("vec_id") % 2 === 1), idx)
       graft.operators.AnnIndex.compactIvfPostings(s, idx)
-      graft.operators.AnnIndex
+      postingsRanked(graft.operators.AnnIndex
         .postingsTopK(s, idx, e.filter(col("vec_id") % 100 === 0),
-          k = 3, nprobe = 2)
-        .select(col("query_id"), col("cand_id"),
-                round(col("sim"), 6).as("sim"), col("rank"))
-        .orderBy("query_id", "rank")
+          k = 3, nprobe = 2))
     }),
 
     // The ANN lifecycle run INSIDE the operational loop (q119's
@@ -885,23 +897,17 @@ object Ext {
     // invisible in the answer.
     "q125_daily_loop_ann" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val work = java.nio.file.Files.createTempDirectory("graft_dailyann_")
-      val p = graft.DailyLoop.Paths(work.toString)
-      val emptyDocs = t(s, dir, "documents").select("doc_id", "text").limit(0)
-      (1 to 3).foreach { d =>
-        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), emptyDocs, p,
-          java.sql.Timestamp.valueOf(f"2025-04-0$d%d 00:00:00"),
+      val p = dailyLoop(s, dir, "graft_dailyann") { day =>
+        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), day.noDocs,
+          day.p, day.at,
           // label dropped: this entry gates the PQ side of the tick;
           // the label-carrying posting-store side is q127's job
           embDelta = Some(e.select("vec_id", "embedding")
-            .filter(col("vec_id") % 3 === lit(d - 1))),
+            .filter(col("vec_id") % 3 === lit(day.d - 1))),
           annMaxChain = 1)
       }
-      graft.operators.AnnIndex
-        .pqTopK(s, p.ann, e.filter(col("vec_id") % 100 === 0), k = 5)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(graft.operators.AnnIndex
+        .pqTopK(s, p.ann, e.filter(col("vec_id") % 100 === 0), k = 5))
     }),
 
     // q125's loop with the posting store engaged: the embedding deltas
@@ -912,21 +918,15 @@ object Ext {
     // truth (q126's SQL under the tick split).
     "q127_daily_loop_postings" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val work = java.nio.file.Files.createTempDirectory("graft_dailypost_")
-      val p = graft.DailyLoop.Paths(work.toString)
-      val emptyDocs = t(s, dir, "documents").select("doc_id", "text").limit(0)
-      (1 to 3).foreach { d =>
-        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), emptyDocs, p,
-          java.sql.Timestamp.valueOf(f"2025-04-0$d%d 00:00:00"),
-          embDelta = Some(e.filter(col("vec_id") % 3 === lit(d - 1))),
+      val p = dailyLoop(s, dir, "graft_dailypost") { day =>
+        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), day.noDocs,
+          day.p, day.at,
+          embDelta = Some(e.filter(col("vec_id") % 3 === lit(day.d - 1))),
           annMaxChain = 1)
       }
-      graft.operators.AnnIndex
+      postingsRanked(graft.operators.AnnIndex
         .postingsTopK(s, p.annPost, e.filter(col("vec_id") % 100 === 0),
-          k = 3, nprobe = 2)
-        .select(col("query_id"), col("cand_id"),
-                round(col("sim"), 6).as("sim"), col("rank"))
-        .orderBy("query_id", "rank")
+          k = 3, nprobe = 2))
     }),
 
     // The DELETE lifecycle through the dedup stores (q119's loop +
@@ -938,23 +938,22 @@ object Ext {
     // corpus — tombstoning, compaction timing and physical drops must
     // all be invisible in the answer.
     "q128_daily_loop_delete" -> ((s, dir) => {
-      val work = java.nio.file.Files.createTempDirectory("graft_dailydel_")
-      val p = graft.DailyLoop.Paths(work.toString)
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      (1 to 3).foreach { d =>
-        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(),
-          docs.filter(col("doc_id") % 3 === lit(d - 1)), p,
-          java.sql.Timestamp.valueOf(f"2025-04-0$d%d 00:00:00"),
-          threshold = JaccardThreshold)
+      val p = dailyLoop(s, dir, "graft_dailydel", days = 5) { day =>
+        day.d match {
+          case d if d <= 3 =>
+            graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(),
+              day.docs.filter(col("doc_id") % 3 === lit(d - 1)), day.p, day.at,
+              threshold = JaccardThreshold)
+          case 4 =>
+            graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), day.noDocs,
+              day.p, day.at, threshold = JaccardThreshold,
+              docRemovals = Some(day.docs.filter(col("doc_id") % 7 === 0)
+                .select("doc_id")))
+          case _ =>
+            graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), day.noDocs,
+              day.p, day.at, threshold = JaccardThreshold, maxChain = 1)
+        }
       }
-      graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), docs.limit(0),
-        p, java.sql.Timestamp.valueOf("2025-04-04 00:00:00"),
-        threshold = JaccardThreshold,
-        docRemovals = Some(docs.filter(col("doc_id") % 7 === 0)
-          .select("doc_id")))
-      graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), docs.limit(0),
-        p, java.sql.Timestamp.valueOf("2025-04-05 00:00:00"),
-        threshold = JaccardThreshold, maxChain = 1)
       graft.streaming.DocsStream.livePairs(s, p.pairs, p.store, 5L)
         .orderBy("a_id", "b_id")
     }),
@@ -967,19 +966,15 @@ object Ext {
     // sets exactly, never rankings of survivors.
     "q129_ann_pq_delete" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val idx = java.nio.file.Files.createTempDirectory("graft_annpqdel_")
-        .resolve("pq").toString
+      val idx = freshScratch("graft_annpqdel") + "/pq"
       graft.operators.AnnIndex.buildPq(e.filter(col("vec_id") % 2 === 0),
         idx, m = 4, subLen = 16, numCodes = 16, trainIters = 2)
       graft.operators.AnnIndex.appendPq(e.filter(col("vec_id") % 2 === 1),
         idx, removals = Some(e.filter(col("vec_id") % 10 === 0)
           .select("vec_id")))
       graft.operators.AnnIndex.compactPq(s, idx)
-      graft.operators.AnnIndex
-        .pqTopK(s, idx, e.filter(col("vec_id") % 100 === 0), k = 5)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(graft.operators.AnnIndex
+        .pqTopK(s, idx, e.filter(col("vec_id") % 100 === 0), k = 5))
     }),
 
     // The DELETE lifecycle through the posting store: q126's pinned-
@@ -989,8 +984,7 @@ object Ext {
     // physical side; here the oracle gates the answer).
     "q130_ann_postings_delete" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val idx = java.nio.file.Files.createTempDirectory("graft_annpodel_")
-        .resolve("ivfp").toString
+      val idx = freshScratch("graft_annpodel") + "/ivfp"
       graft.operators.AnnIndex.buildIvfPostings(
         e.filter(col("vec_id") % 2 === 0), idx, refineIters = 1)
       graft.operators.AnnIndex.appendIvfPostings(
@@ -998,12 +992,9 @@ object Ext {
         removals = Some(e.filter(col("vec_id") % 10 === 0)
           .select("vec_id")))
       graft.operators.AnnIndex.compactIvfPostings(s, idx)
-      graft.operators.AnnIndex
+      postingsRanked(graft.operators.AnnIndex
         .postingsTopK(s, idx, e.filter(col("vec_id") % 100 === 0),
-          k = 3, nprobe = 2)
-        .select(col("query_id"), col("cand_id"),
-                round(col("sim"), 6).as("sim"), col("rank"))
-        .orderBy("query_id", "rank")
+          k = 3, nprobe = 2))
     }),
 
     // The RETRAINING REFRESH as a scheduled quality event (the
@@ -1016,21 +1007,15 @@ object Ext {
     // the chain collapse must leave exactly that relation.
     "q131_daily_loop_refresh" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val work = java.nio.file.Files.createTempDirectory("graft_dailyref_")
-      val p = graft.DailyLoop.Paths(work.toString)
-      val emptyDocs = t(s, dir, "documents").select("doc_id", "text").limit(0)
-      (1 to 3).foreach { d =>
-        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), emptyDocs, p,
-          java.sql.Timestamp.valueOf(f"2025-04-0$d%d 00:00:00"),
+      val p = dailyLoop(s, dir, "graft_dailyref") { day =>
+        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), day.noDocs,
+          day.p, day.at,
           embDelta = Some(e.select("vec_id", "embedding")
-            .filter(col("vec_id") % 3 === lit(d - 1))),
+            .filter(col("vec_id") % 3 === lit(day.d - 1))),
           annRefreshEvery = 2)
       }
-      graft.operators.AnnIndex
-        .pqTopK(s, p.ann, e.filter(col("vec_id") % 100 === 0), k = 5)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(graft.operators.AnnIndex
+        .pqTopK(s, p.ann, e.filter(col("vec_id") % 100 === 0), k = 5))
     }),
 
     // The vec-DELETE lifecycle INSIDE the operational loop (q125's
@@ -1042,24 +1027,18 @@ object Ext {
     // everything except the dead ids.
     "q133_daily_loop_vec_delete" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val work = java.nio.file.Files.createTempDirectory("graft_dailyvdel_")
-      val p = graft.DailyLoop.Paths(work.toString)
-      val emptyDocs = t(s, dir, "documents").select("doc_id", "text").limit(0)
-      (1 to 3).foreach { d =>
-        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), emptyDocs, p,
-          java.sql.Timestamp.valueOf(f"2025-04-0$d%d 00:00:00"),
+      val p = dailyLoop(s, dir, "graft_dailyvdel") { day =>
+        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), day.noDocs,
+          day.p, day.at,
           embDelta = Some(e.select("vec_id", "embedding")
-            .filter(col("vec_id") % 3 === lit(d - 1))),
+            .filter(col("vec_id") % 3 === lit(day.d - 1))),
           annMaxChain = 1,
-          vecRemovals = if (d == 3)
+          vecRemovals = if (day.d == 3)
             Some(e.filter(col("vec_id") % 10 === 0).select("vec_id"))
           else None)
       }
-      graft.operators.AnnIndex
-        .pqTopK(s, p.ann, e.filter(col("vec_id") % 100 === 1), k = 5)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(graft.operators.AnnIndex
+        .pqTopK(s, p.ann, e.filter(col("vec_id") % 100 === 1), k = 5))
     }),
 
     // q133's posting-store side: the labeled deltas maintain the
@@ -1068,24 +1047,18 @@ object Ext {
     // q127's truth restricted to the surviving ids.
     "q134_daily_loop_postings_delete" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val work = java.nio.file.Files.createTempDirectory("graft_dailypdel_")
-      val p = graft.DailyLoop.Paths(work.toString)
-      val emptyDocs = t(s, dir, "documents").select("doc_id", "text").limit(0)
-      (1 to 3).foreach { d =>
-        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), emptyDocs, p,
-          java.sql.Timestamp.valueOf(f"2025-04-0$d%d 00:00:00"),
-          embDelta = Some(e.filter(col("vec_id") % 3 === lit(d - 1))),
+      val p = dailyLoop(s, dir, "graft_dailypdel") { day =>
+        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), day.noDocs,
+          day.p, day.at,
+          embDelta = Some(e.filter(col("vec_id") % 3 === lit(day.d - 1))),
           annMaxChain = 1,
-          vecRemovals = if (d == 3)
+          vecRemovals = if (day.d == 3)
             Some(e.filter(col("vec_id") % 10 === 0).select("vec_id"))
           else None)
       }
-      graft.operators.AnnIndex
+      postingsRanked(graft.operators.AnnIndex
         .postingsTopK(s, p.annPost, e.filter(col("vec_id") % 100 === 1),
-          k = 3, nprobe = 2)
-        .select(col("query_id"), col("cand_id"),
-                round(col("sim"), 6).as("sim"), col("rank"))
-        .orderBy("query_id", "rank")
+          k = 3, nprobe = 2))
     }),
 
     // REFRESH × DELETE interaction: tick 2 both removes vec_id % 10 = 0
@@ -1099,25 +1072,19 @@ object Ext {
     "q135_daily_loop_refresh_delete" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val dead = e.filter(col("vec_id") % 10 === 0).select("vec_id")
-      val work = java.nio.file.Files.createTempDirectory("graft_dailyrefdel_")
-      val p = graft.DailyLoop.Paths(work.toString)
-      val emptyDocs = t(s, dir, "documents").select("doc_id", "text").limit(0)
-      (1 to 3).foreach { d =>
+      val p = dailyLoop(s, dir, "graft_dailyrefdel") { day =>
         val third = e.select("vec_id", "embedding")
-          .filter(col("vec_id") % 3 === lit(d - 1))
-        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), emptyDocs, p,
-          java.sql.Timestamp.valueOf(f"2025-04-0$d%d 00:00:00"),
+          .filter(col("vec_id") % 3 === lit(day.d - 1))
+        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), day.noDocs,
+          day.p, day.at,
           embDelta = Some(
-            if (d == 3) third.join(dead, Seq("vec_id"), "left_anti")
+            if (day.d == 3) third.join(dead, Seq("vec_id"), "left_anti")
             else third),
           annRefreshEvery = 2,
-          vecRemovals = if (d == 2) Some(dead) else None)
+          vecRemovals = if (day.d == 2) Some(dead) else None)
       }
-      graft.operators.AnnIndex
-        .pqTopK(s, p.ann, e.filter(col("vec_id") % 100 === 1), k = 5)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(graft.operators.AnnIndex
+        .pqTopK(s, p.ann, e.filter(col("vec_id") % 100 === 1), k = 5))
     }),
 
     // q135's POSTING-STORE side — the refresh × delete interaction on
@@ -1132,25 +1099,19 @@ object Ext {
     "q136_daily_loop_postings_refresh_delete" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val dead = e.filter(col("vec_id") % 10 === 0).select("vec_id")
-      val work = java.nio.file.Files.createTempDirectory("graft_dailyprefdel_")
-      val p = graft.DailyLoop.Paths(work.toString)
-      val emptyDocs = t(s, dir, "documents").select("doc_id", "text").limit(0)
-      (1 to 3).foreach { d =>
-        val third = e.filter(col("vec_id") % 3 === lit(d - 1))
-        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), emptyDocs, p,
-          java.sql.Timestamp.valueOf(f"2025-04-0$d%d 00:00:00"),
+      val p = dailyLoop(s, dir, "graft_dailyprefdel") { day =>
+        val third = e.filter(col("vec_id") % 3 === lit(day.d - 1))
+        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), day.noDocs,
+          day.p, day.at,
           embDelta = Some(
-            if (d == 3) third.join(dead, Seq("vec_id"), "left_anti")
+            if (day.d == 3) third.join(dead, Seq("vec_id"), "left_anti")
             else third),
           annRefreshEvery = 2,
-          vecRemovals = if (d == 2) Some(dead) else None)
+          vecRemovals = if (day.d == 2) Some(dead) else None)
       }
-      graft.operators.AnnIndex
+      postingsRanked(graft.operators.AnnIndex
         .postingsTopK(s, p.annPost, e.filter(col("vec_id") % 100 === 1),
-          k = 3, nprobe = 2)
-        .select(col("query_id"), col("cand_id"),
-                round(col("sim"), 6).as("sim"), col("rank"))
-        .orderBy("query_id", "rank")
+          k = 3, nprobe = 2))
     }),
 
     // A LONG uncompacted chain under continuous deletion — the shape
@@ -1163,8 +1124,7 @@ object Ext {
     // survivors: every id except the tombstoned residue classes.
     "q137_ann_pq_chain8" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val idx = java.nio.file.Files.createTempDirectory("graft_annchain8_")
-        .resolve("pq").toString
+      val idx = freshScratch("graft_annchain8") + "/pq"
       graft.operators.AnnIndex.buildPq(e.filter(col("vec_id") % 9 === 0),
         idx, m = 4, subLen = 16, numCodes = 16, trainIters = 2)
       (1 to 8).foreach { d =>
@@ -1173,11 +1133,8 @@ object Ext {
           removals = Some(e.filter(col("vec_id") % 9 === (d - 1) &&
             col("vec_id") % 10 === 3).select("vec_id")))
       }
-      graft.operators.AnnIndex
-        .pqTopK(s, idx, e.filter(col("vec_id") % 100 === 0), k = 5)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(graft.operators.AnnIndex
+        .pqTopK(s, idx, e.filter(col("vec_id") % 100 === 0), k = 5))
     }),
 
     // q131's refresh lifecycle with the retrain's Lloyd passes bounded
@@ -1192,21 +1149,15 @@ object Ext {
     // encode pass; PqSpec pins the recall cost vs the full retrain.
     "q138_daily_loop_refresh_sampled" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val work = java.nio.file.Files.createTempDirectory("graft_dailyrefs_")
-      val p = graft.DailyLoop.Paths(work.toString)
-      val emptyDocs = t(s, dir, "documents").select("doc_id", "text").limit(0)
-      (1 to 3).foreach { d =>
-        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), emptyDocs, p,
-          java.sql.Timestamp.valueOf(f"2025-04-0$d%d 00:00:00"),
+      val p = dailyLoop(s, dir, "graft_dailyrefs") { day =>
+        graft.DailyLoop.runTick(s, graft.CvePipeline.Landing(), day.noDocs,
+          day.p, day.at,
           embDelta = Some(e.select("vec_id", "embedding")
-            .filter(col("vec_id") % 3 === lit(d - 1))),
+            .filter(col("vec_id") % 3 === lit(day.d - 1))),
           annRefreshEvery = 2, trainSampleMax = 64L)
       }
-      graft.operators.AnnIndex
-        .pqTopK(s, p.ann, e.filter(col("vec_id") % 100 === 0), k = 5)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(graft.operators.AnnIndex
+        .pqTopK(s, p.ann, e.filter(col("vec_id") % 100 === 0), k = 5))
     }),
 
     // q124's probe with a FIXED-SIZE query batch (first 600 ids): the
@@ -1217,15 +1168,11 @@ object Ext {
     // directories, so the trend should track cell size, not N².
     "q132_ann_postings_fixedq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val idx = java.nio.file.Files.createTempDirectory("graft_annfixq_")
-        .resolve("ivfp").toString
+      val idx = freshScratch("graft_annfixq") + "/ivfp"
       graft.operators.AnnIndex.buildIvfPostings(e, idx, refineIters = 1)
-      graft.operators.AnnIndex
+      postingsRanked(graft.operators.AnnIndex
         .postingsTopK(s, idx, e.orderBy("vec_id").limit(600),
-          k = 3, nprobe = 2)
-        .select(col("query_id"), col("cand_id"),
-                round(col("sim"), 6).as("sim"), col("rank"))
-        .orderBy("query_id", "rank")
+          k = 3, nprobe = 2))
     }),
 
     // q61's flat PQ-ADC scan with the SAME fixed-size query batch as
@@ -1238,10 +1185,7 @@ object Ext {
     // honest cost; q86's IVFADC is the composed scale path).
     "q139_ann_pq_fixedq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      Similarity.pqTopK(e, e.orderBy("vec_id").limit(600), k = 5)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(Similarity.pqTopK(e, e.orderBy("vec_id").limit(600), k = 5))
     }),
 
     // q86's COMPOSED IVFADC path with the same fixed 600-id query batch
@@ -1252,10 +1196,7 @@ object Ext {
     // rows, never raw floats, never other cells).
     "q140_ann_ivfpq_fixedq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      Similarity.ivfPqTopK(e, e.orderBy("vec_id").limit(600), k = 3)
-        .select(col("query_id"), col("cand_id"), col("rank"),
-                round(col("approx_sim"), 6).as("approx_sim"))
-        .orderBy("query_id", "rank")
+      pqRanked(Similarity.ivfPqTopK(e, e.orderBy("vec_id").limit(600), k = 3))
     }),
 
     // Coreset / diversity sampling over embeddings: after IVF assignment,
@@ -1673,6 +1614,91 @@ object Ext {
   private def hitSql(words: Seq[String]): String =
     s"CAST(len(list_filter(tokens, t -> list_contains(${sqlList(words)}, t))) AS BIGINT)"
 
+  /** The pinned-codebook PQ truth with the TRAINING set as a parameter:
+    * books Lloyd-trained (init = the first 16 training ids) on the
+    * vectors passing the SQL predicate `train`, while the ENCODE covers
+    * every vector; top-5 ADC over the %100 query sample. Mirrors
+    * AnnIndex.appendPq's ingest against the root's books. */
+  private def pqTrainedOnSql(train: String): String =
+    s"""WITH $unitCte,
+        subs AS (
+          SELECT vec_id, sub, u[sub*16+1 : sub*16+16] AS sv
+          FROM e, (SELECT unnest(range(0, 4)) AS sub)),
+        tsubs AS (SELECT * FROM subs WHERE $train),
+        b0 AS (
+          SELECT sub, ROW_NUMBER() OVER (PARTITION BY sub ORDER BY vec_id) - 1
+                   AS code, sv AS code_vec
+          FROM tsubs
+          WHERE vec_id IN (SELECT vec_id FROM e WHERE $train
+                           ORDER BY vec_id LIMIT 16)),
+        ${lloydRoundSqlOn(1, "b0", "tsubs")},
+        ${lloydRoundSqlOn(2, "b1", "tsubs")},
+        books AS (SELECT * FROM b2),
+        codes AS (
+          SELECT vec_id AS cand_id, sub, code FROM (
+            SELECT s.vec_id, s.sub, b.code,
+                   ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
+                                      ORDER BY ${foldDot("s.sv", "b.code_vec")} DESC,
+                                               b.code ASC) AS rn
+            FROM subs s JOIN books b ON s.sub = b.sub)
+          WHERE rn = 1),
+        lut AS (
+          SELECT q.vec_id AS query_id, b.sub, b.code,
+                 ${foldDot("q.sv", "b.code_vec")} AS l
+          FROM (SELECT * FROM subs WHERE vec_id % 100 = 0) q
+          JOIN books b ON q.sub = b.sub),
+        adc AS (
+          SELECT lut.query_id, c.cand_id,
+                 CAST(SUM(CAST(lut.l AS DECIMAL(28,16))) AS DOUBLE) AS approx_sim
+          FROM codes c JOIN lut ON c.sub = lut.sub AND c.code = lut.code
+          WHERE c.cand_id <> lut.query_id
+          GROUP BY 1, 2)
+        SELECT query_id, cand_id, CAST(rank AS BIGINT) AS rank,
+               ROUND(approx_sim, 6) AS approx_sim
+        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                           ORDER BY approx_sim DESC, cand_id ASC)
+                          AS rank
+              FROM adc)
+        WHERE rank <= 5 ORDER BY query_id, rank"""
+
+  /** Multi-probe top-k from the q87 Lloyd CTEs: each query's two best
+    * refined cells (sim desc, cell asc — cellTopKMultiProbe's probe
+    * order), candidates = vectors ASSIGNED to a probed cell, ranked by
+    * the exact fold-dot within the probed union. Mirrors
+    * AnnIndex.postingsTopK including self-exclusion and tie-breaks.
+    * `train` (a SQL predicate, None = every vector) restricts the Lloyd
+    * TRAINING relation (es); sims1 still ranks every vector, so the
+    * assignment covers base and appended layers alike. */
+  private def postingsTrainedOnSql(train: Option[String]): String =
+    s"""WITH $unitCte,
+        es AS (SELECT vec_id, u, label AS scell FROM e${train.fold("")(" WHERE " + _)}),
+        $kmeansRefineFromSeeds,
+        a1 AS (SELECT id, cell AS acell FROM (
+                 SELECT id, cell,
+                        ROW_NUMBER() OVER (PARTITION BY id
+                                           ORDER BY sim DESC, cell ASC) AS rn
+                 FROM sims1)
+               WHERE rn = 1),
+        probes AS (SELECT id AS query_id, cell AS pcell FROM (
+                     SELECT id, cell,
+                            ROW_NUMBER() OVER (PARTITION BY id
+                                               ORDER BY sim DESC, cell ASC) AS rn
+                     FROM sims1 WHERE id % 100 = 0)
+                   WHERE rn <= 2),
+        cand AS (SELECT p.query_id, c.vec_id AS cand_id,
+                        ${foldDot("q.u", "c.u")} AS sim
+                 FROM probes p
+                 JOIN e q ON q.vec_id = p.query_id
+                 JOIN a1 ON a1.acell = p.pcell
+                 JOIN e c ON c.vec_id = a1.id AND c.vec_id <> p.query_id)
+        SELECT query_id, cand_id, ROUND(sim, 6) AS sim,
+               CAST(rank AS BIGINT) AS rank
+        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                           ORDER BY sim DESC, cand_id ASC)
+                          AS rank
+              FROM cand)
+        WHERE rank <= 3 ORDER BY query_id, rank"""
+
   // oracle0 is declared below oracle in the source — lazy breaks the
   // object-init ordering dependency.
   val oracle: Map[String, String] = withDeleteOracles(oracle0 ++ Map(
@@ -1684,212 +1710,44 @@ object Ext {
     // q61's construction with the TRAINING set restricted to the even
     // half (the base build) while the ENCODE covers every vector — the
     // pinned-codebook delta-append lifecycle re-derived end-to-end.
-    "q123_ann_pq_append" ->
-      s"""WITH $unitCte,
-          subs AS (
-            SELECT vec_id, sub, u[sub*16+1 : sub*16+16] AS sv
-            FROM e, (SELECT unnest(range(0, 4)) AS sub)),
-          tsubs AS (SELECT * FROM subs WHERE vec_id % 2 = 0),
-          b0 AS (
-            SELECT sub, ROW_NUMBER() OVER (PARTITION BY sub ORDER BY vec_id) - 1
-                     AS code, sv AS code_vec
-            FROM tsubs
-            WHERE vec_id IN (SELECT vec_id FROM e WHERE vec_id % 2 = 0
-                             ORDER BY vec_id LIMIT 16)),
-          ${lloydRoundSqlOn(1, "b0", "tsubs")},
-          ${lloydRoundSqlOn(2, "b1", "tsubs")},
-          books AS (SELECT * FROM b2),
-          codes AS (
-            SELECT vec_id AS cand_id, sub, code FROM (
-              SELECT s.vec_id, s.sub, b.code,
-                     ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-                                        ORDER BY ${foldDot("s.sv", "b.code_vec")} DESC,
-                                                 b.code ASC) AS rn
-              FROM subs s JOIN books b ON s.sub = b.sub)
-            WHERE rn = 1),
-          lut AS (
-            SELECT q.vec_id AS query_id, b.sub, b.code,
-                   ${foldDot("q.sv", "b.code_vec")} AS l
-            FROM (SELECT * FROM subs WHERE vec_id % 100 = 0) q
-            JOIN books b ON q.sub = b.sub),
-          adc AS (
-            SELECT lut.query_id, c.cand_id,
-                   CAST(SUM(CAST(lut.l AS DECIMAL(28,16))) AS DOUBLE) AS approx_sim
-            FROM codes c JOIN lut ON c.sub = lut.sub AND c.code = lut.code
-            WHERE c.cand_id <> lut.query_id
-            GROUP BY 1, 2)
-          SELECT query_id, cand_id, CAST(rank AS BIGINT) AS rank,
-                 ROUND(approx_sim, 6) AS approx_sim
-          FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                             ORDER BY approx_sim DESC, cand_id ASC)
-                            AS rank
-                FROM adc)
-          WHERE rank <= 5 ORDER BY query_id, rank""",
+    "q123_ann_pq_append" -> pqTrainedOnSql("vec_id % 2 = 0"),
 
     // q123's lifecycle under the LOOP's tick split: training set =
     // tick 1's delta (vec_id % 3 = 0), encode = everything. The loop's
     // appends and compactions must leave exactly this relation behind.
-    "q125_daily_loop_ann" ->
-      s"""WITH $unitCte,
-          subs AS (
-            SELECT vec_id, sub, u[sub*16+1 : sub*16+16] AS sv
-            FROM e, (SELECT unnest(range(0, 4)) AS sub)),
-          tsubs AS (SELECT * FROM subs WHERE vec_id % 3 = 0),
-          b0 AS (
-            SELECT sub, ROW_NUMBER() OVER (PARTITION BY sub ORDER BY vec_id) - 1
-                     AS code, sv AS code_vec
-            FROM tsubs
-            WHERE vec_id IN (SELECT vec_id FROM e WHERE vec_id % 3 = 0
-                             ORDER BY vec_id LIMIT 16)),
-          ${lloydRoundSqlOn(1, "b0", "tsubs")},
-          ${lloydRoundSqlOn(2, "b1", "tsubs")},
-          books AS (SELECT * FROM b2),
-          codes AS (
-            SELECT vec_id AS cand_id, sub, code FROM (
-              SELECT s.vec_id, s.sub, b.code,
-                     ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-                                        ORDER BY ${foldDot("s.sv", "b.code_vec")} DESC,
-                                                 b.code ASC) AS rn
-              FROM subs s JOIN books b ON s.sub = b.sub)
-            WHERE rn = 1),
-          lut AS (
-            SELECT q.vec_id AS query_id, b.sub, b.code,
-                   ${foldDot("q.sv", "b.code_vec")} AS l
-            FROM (SELECT * FROM subs WHERE vec_id % 100 = 0) q
-            JOIN books b ON q.sub = b.sub),
-          adc AS (
-            SELECT lut.query_id, c.cand_id,
-                   CAST(SUM(CAST(lut.l AS DECIMAL(28,16))) AS DOUBLE) AS approx_sim
-            FROM codes c JOIN lut ON c.sub = lut.sub AND c.code = lut.code
-            WHERE c.cand_id <> lut.query_id
-            GROUP BY 1, 2)
-          SELECT query_id, cand_id, CAST(rank AS BIGINT) AS rank,
-                 ROUND(approx_sim, 6) AS approx_sim
-          FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                             ORDER BY approx_sim DESC, cand_id ASC)
-                            AS rank
-                FROM adc)
-          WHERE rank <= 5 ORDER BY query_id, rank""",
+    "q125_daily_loop_ann" -> pqTrainedOnSql("vec_id % 3 = 0"),
 
     // q124's probe over a SUBSET-trained quantizer: the Lloyd training
-    // relation (es) is the even half; sims1 still ranks every vector,
-    // so candidate assignment (a1) covers base + appended layers alike.
-    "q126_ann_postings_append" ->
-      s"""WITH $unitCte,
-          es AS (SELECT vec_id, u, label AS scell FROM e WHERE vec_id % 2 = 0),
-          $kmeansRefineFromSeeds,
-          a1 AS (SELECT id, cell AS acell FROM (
-                   SELECT id, cell,
-                          ROW_NUMBER() OVER (PARTITION BY id
-                                             ORDER BY sim DESC, cell ASC) AS rn
-                   FROM sims1)
-                 WHERE rn = 1),
-          probes AS (SELECT id AS query_id, cell AS pcell FROM (
-                       SELECT id, cell,
-                              ROW_NUMBER() OVER (PARTITION BY id
-                                                 ORDER BY sim DESC, cell ASC) AS rn
-                       FROM sims1 WHERE id % 100 = 0)
-                     WHERE rn <= 2),
-          cand AS (SELECT p.query_id, c.vec_id AS cand_id,
-                          ${foldDot("q.u", "c.u")} AS sim
-                   FROM probes p
-                   JOIN e q ON q.vec_id = p.query_id
-                   JOIN a1 ON a1.acell = p.pcell
-                   JOIN e c ON c.vec_id = a1.id AND c.vec_id <> p.query_id)
-          SELECT query_id, cand_id, ROUND(sim, 6) AS sim,
-                 CAST(rank AS BIGINT) AS rank
-          FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                             ORDER BY sim DESC, cand_id ASC)
-                            AS rank
-                FROM cand)
-          WHERE rank <= 3 ORDER BY query_id, rank""",
+    // relation (es) is the even half.
+    "q126_ann_postings_append" -> postingsTrainedOnSql(Some("vec_id % 2 = 0")),
 
     // q126's subset-trained probe under the loop's tick split: the
     // training relation is tick 1's third.
-    "q127_daily_loop_postings" ->
-      s"""WITH $unitCte,
-          es AS (SELECT vec_id, u, label AS scell FROM e WHERE vec_id % 3 = 0),
-          $kmeansRefineFromSeeds,
-          a1 AS (SELECT id, cell AS acell FROM (
-                   SELECT id, cell,
-                          ROW_NUMBER() OVER (PARTITION BY id
-                                             ORDER BY sim DESC, cell ASC) AS rn
-                   FROM sims1)
-                 WHERE rn = 1),
-          probes AS (SELECT id AS query_id, cell AS pcell FROM (
-                       SELECT id, cell,
-                              ROW_NUMBER() OVER (PARTITION BY id
-                                                 ORDER BY sim DESC, cell ASC) AS rn
-                       FROM sims1 WHERE id % 100 = 0)
-                     WHERE rn <= 2),
-          cand AS (SELECT p.query_id, c.vec_id AS cand_id,
-                          ${foldDot("q.u", "c.u")} AS sim
-                   FROM probes p
-                   JOIN e q ON q.vec_id = p.query_id
-                   JOIN a1 ON a1.acell = p.pcell
-                   JOIN e c ON c.vec_id = a1.id AND c.vec_id <> p.query_id)
-          SELECT query_id, cand_id, ROUND(sim, 6) AS sim,
-                 CAST(rank AS BIGINT) AS rank
-          FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                             ORDER BY sim DESC, cand_id ASC)
-                            AS rank
-                FROM cand)
-          WHERE rank <= 3 ORDER BY query_id, rank""",
+    "q127_daily_loop_postings" -> postingsTrainedOnSql(Some("vec_id % 3 = 0")),
 
-    // Multi-probe top-k from the q87 Lloyd CTEs: each query's two best
-    // refined cells (sim desc, cell asc — cellTopKMultiProbe's probe
-    // order), candidates = vectors ASSIGNED to a probed cell, ranked by
-    // the exact fold-dot within the probed union. Mirrors
-    // AnnIndex.postingsTopK including self-exclusion and tie-breaks.
-    "q124_ann_ivf_postings" ->
-      s"""WITH $unitCte,
-          $kmeansRefineCtes,
-          a1 AS (SELECT id, cell AS acell FROM (
-                   SELECT id, cell,
-                          ROW_NUMBER() OVER (PARTITION BY id
-                                             ORDER BY sim DESC, cell ASC) AS rn
-                   FROM sims1)
-                 WHERE rn = 1),
-          probes AS (SELECT id AS query_id, cell AS pcell FROM (
-                       SELECT id, cell,
-                              ROW_NUMBER() OVER (PARTITION BY id
-                                                 ORDER BY sim DESC, cell ASC) AS rn
-                       FROM sims1 WHERE id % 100 = 0)
-                     WHERE rn <= 2),
-          cand AS (SELECT p.query_id, c.vec_id AS cand_id,
-                          ${foldDot("q.u", "c.u")} AS sim
-                   FROM probes p
-                   JOIN e q ON q.vec_id = p.query_id
-                   JOIN a1 ON a1.acell = p.pcell
-                   JOIN e c ON c.vec_id = a1.id AND c.vec_id <> p.query_id)
-          SELECT query_id, cand_id, ROUND(sim, 6) AS sim,
-                 CAST(rank AS BIGINT) AS rank
-          FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                             ORDER BY sim DESC, cand_id ASC)
-                            AS rank
-                FROM cand)
-          WHERE rank <= 3 ORDER BY query_id, rank"""))
+    // the probe trained on the whole corpus (es = all of e)
+    "q124_ann_ivf_postings" -> postingsTrainedOnSql(None)))
 
   /** The delete-lifecycle oracles are their parents' constructions over
     * a RESTRICTED relation — q128 is q119's pair truth with the removed
     * docs gone from the corpus, q129/q130 are q123/q126 with the dead
     * ids gone from the encoded/assigned side (training sets unchanged:
     * the quantizers were built before the deletes). Deriving them
-    * textually from the parent SQL keeps the single source of truth —
+    * textually from the parent SQL (or from the family's builder where
+    * only the training filter differs) keeps the single source of truth —
     * a drift in the parent construction cannot silently diverge from
     * its delete twin. */
   private def withDeleteOracles(base: Map[String, String]): Map[String, String] = {
     // the refresh truth is q125's lifecycle with the training set
     // widened to the refresh tick's live corpus (thirds 0+1)
-    val refreshSql = base("q125_daily_loop_ann")
-      .replace("vec_id % 3 = 0", "vec_id % 3 <> 2")
+    val refreshSql = pqTrainedOnSql("vec_id % 3 <> 2")
     base ++ Map(
       // refresh × delete: training restricted to the LIVE thirds 0+1
       // (the tick's tombstones land before the retrain reads the
       // store), codes restricted to live ids, query sample off the
       // removed residue class
-      "q135_daily_loop_refresh_delete" -> refreshSql
-        .replace("vec_id % 3 <> 2", "vec_id % 3 <> 2 AND vec_id % 10 <> 0")
+      "q135_daily_loop_refresh_delete" ->
+        pqTrainedOnSql("vec_id % 3 <> 2 AND vec_id % 10 <> 0")
         .replace("FROM subs s JOIN books b ON s.sub = b.sub)",
           "FROM subs s JOIN books b ON s.sub = b.sub " +
             "WHERE s.vec_id % 10 <> 0)")
@@ -1904,8 +1762,7 @@ object Ext {
       // %9=0, codes = survivors of eight per-layer tombstone sets —
       // dead iff the id sits in slices 0..7 AND the %10=3 residue
       // (slice 8's residue is never tombstoned by a newer layer)
-      "q137_ann_pq_chain8" -> base("q123_ann_pq_append")
-        .replace("vec_id % 2 = 0", "vec_id % 9 = 0")
+      "q137_ann_pq_chain8" -> pqTrainedOnSql("vec_id % 9 = 0")
         .replace("FROM subs s JOIN books b ON s.sub = b.sub)",
           "FROM subs s JOIN books b ON s.sub = b.sub " +
             "WHERE s.vec_id % 9 = 8 OR s.vec_id % 10 <> 3)"),
@@ -1988,9 +1845,7 @@ object Ext {
       // candidates restricted to live ids, query sample off the
       // removed residue class
       "q136_daily_loop_postings_refresh_delete" ->
-        base("q127_daily_loop_postings")
-          .replace("FROM e WHERE vec_id % 3 = 0",
-            "FROM e WHERE vec_id % 3 <> 2 AND vec_id % 10 <> 0")
+        postingsTrainedOnSql(Some("vec_id % 3 <> 2 AND vec_id % 10 <> 0"))
           .replace("JOIN e c ON c.vec_id = a1.id AND c.vec_id <> p.query_id",
             "JOIN e c ON c.vec_id = a1.id AND c.vec_id <> p.query_id " +
               "AND c.vec_id % 10 <> 0")

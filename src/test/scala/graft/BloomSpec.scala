@@ -37,4 +37,20 @@ class BloomSpec extends SparkSpec {
     val bloom = Curation.queries("q67_bloom_decontaminate")(spark, dir).collect().toSet
     assert(bloom == exact)
   }
+
+  test("Bloom.mightContainOffPlan == literal mightContain, no false negatives") {
+    import graft.operators.Bloom
+    val keys = spark.range(0, 3000).select((col("id") * 37 + 11).as("k"))
+    val bits = Bloom.build(keys, "k")
+    // truth-table equality on a superset (members + non-members)
+    val probe = spark.range(0, 120000).select(col("id").as("k"))
+    val viaLit = probe.filter(Bloom.mightContain(bits, col("k")))
+      .collect().map(_.getLong(0)).toSet
+    val viaOff = probe.filter(Bloom.mightContainOffPlan(bits, col("k")))
+      .collect().map(_.getLong(0)).toSet
+    assert(viaLit == viaOff)
+    // the load-bearing contract: every inserted key tests positive
+    val members = keys.collect().map(_.getLong(0)).toSet
+    assert(members.subsetOf(viaOff))
+  }
 }

@@ -1017,4 +1017,14 @@ class DailyLoopSpec extends SparkSpec {
       == rows(Similarity.cellTopKMultiProbe(corpusAssigned, q, cents,
                 k = 3, nprobe = 2)))
   }
+
+  test("Par: all failures preserved — first thrown, rest suppressed") {
+    val e = intercept[RuntimeException] {
+      Par(
+        () => throw new RuntimeException("side A"),
+        () => { Thread.sleep(50); throw new IllegalStateException("side B") })
+    }
+    val all = (e.getMessage +: e.getSuppressed.toSeq.map(_.getMessage)).toSet
+    assert(all == Set("side A", "side B"))
+  }
 }

@@ -25,4 +25,22 @@ class EntrySpec extends SparkSpec {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle entries without queries: $missing")
   }
+
+  test("lifecycle entries rerun in one scratch dir: same rows, no new dirs under tmpdir") {
+    val dir = "/root/testdata/sf0.001"
+    // the scratch-dir name prefixes of the two entries run below
+    val prefixes = Seq("graft_dailyq_", "graft_annpq_")
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def scratchDirs(): Int = Option(tmp.listFiles).fold(0)(_.count(f =>
+      f.isDirectory && prefixes.exists(f.getName.startsWith)))
+    def run(name: String) = SparkEntry.queries(name)(spark, dir).collect().toSeq
+    val names = Seq("q119_daily_loop_dedup", "q120_ann_pq_persisted")
+    val first = names.map(run)
+    val dirsAfterFirst = scratchDirs()
+    val second = names.map(run)
+    assert(first(1).nonEmpty)
+    assert(second == first)
+    assert(scratchDirs() <= dirsAfterFirst,
+      s"rerunning ${names.mkString(", ")} left new scratch dirs in $tmp")
+  }
 }

@@ -661,4 +661,32 @@ class PqSpec extends SparkSpec {
     val used = codes.select("code").distinct().collect().map(_.getInt(0)).toSet
     assert(used.subsetOf((0 until 16).toSet))
   }
+
+  test("pqEncode aggregation form == window row_number reference, ties included") {
+    import org.apache.spark.sql.expressions.Window
+    val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val units = Similarity.unitVectors(e, Seq("vec_id" -> "id"))
+    val books = Similarity.pqTrain(units, m = 4, subLen = 16, k = 16, iters = 1)
+      .localCheckpoint()
+    // the window form pqEncode used before r21 — the literal reference
+    val w = Window.partitionBy(col("id"), col("sub"))
+      .orderBy(col("s").desc, col("code").asc)
+    val subs = units.select(col("id"), explode(array((0 until 4).map(s =>
+        struct(lit(s).as("sub"),
+               slice(col("unit"), s * 16 + 1, 16).as("sv"))): _*)).as("x"))
+      .select(col("id"), col("x.sub").as("sub"), col("x.sv").as("sv"))
+    val windowForm = subs.join(broadcast(books), "sub")
+      .select(col("id"), col("sub"), col("code"),
+              Similarity.dot(col("sv"), col("code_vec")).as("s"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("id"), col("sub"), col("code"))
+    val aggForm = Similarity.pqEncode(units, books, 4, 16)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sorted.toSeq
+    val (aRows, wRows) = (rows(aggForm), rows(windowForm))
+    assert(aRows == wRows && aRows.nonEmpty)
+    // and the plan genuinely lost the sort: no Window node in the agg form
+    assert(!aggForm.queryExecution.executedPlan.toString.contains("Window"))
+  }
 }

@@ -793,4 +793,16 @@ class SimilaritySpec extends SparkSpec {
     val unguarded = Similarity.srpDupPairs(dup, 0.9, dim = 8, maxBucket = 0L).count()
     assert(unguarded == 45L) // guard off: all C(10,2) pairs verify
   }
+
+  test("parseMaxControlRows: valid override, malformed fallback, absent default") {
+    val dflt = 4L * 1000 * 1000
+    assert(Similarity.parseMaxControlRows(None) == dflt)
+    assert(Similarity.parseMaxControlRows(Some("123")) == 123L)
+    assert(Similarity.parseMaxControlRows(Some(" 42 ")) == 42L)
+    // malformed values fall back LOUDLY to the default instead of
+    // surfacing as an ExceptionInInitializerError for the whole object
+    assert(Similarity.parseMaxControlRows(Some("not-a-long")) == dflt)
+    assert(Similarity.parseMaxControlRows(Some("")) == dflt)
+    assert(Similarity.parseMaxControlRows(Some("1e6")) == dflt)
+  }
 }
