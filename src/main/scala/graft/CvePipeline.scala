@@ -87,16 +87,22 @@ object CvePipeline {
                     fidelity: Boolean = false): DataFrame = {
     val ds = deltas(spark, landing, fidelity)
     require(ds.nonEmpty, "at least one landed source required")
-    val empty = Merge.init(
+    // the zero-row base contributes no values; now is irrelevant because
+    // the stamps are dropped — the real stamps come from the outer merge
+    Merge.upsertMany(emptyBase(spark), ds, "id")
+      .drop(Merge.CreatedAt, Merge.UpdatedAt)
+  }
+
+  /** The zero-row `{id: string not null}` base an N-source merge folds
+    * its deltas into, stamped with `now`. */
+  private def emptyBase(spark: SparkSession,
+                        now: Column = current_timestamp()): DataFrame =
+    Merge.init(
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.StringType, nullable = false)))))
-    // the zero-row base contributes no values; now is irrelevant because
-    // the stamps are dropped — the real stamps come from the outer merge
-    Merge.upsertMany(empty, ds, "id")
-      .drop(Merge.CreatedAt, Merge.UpdatedAt)
-  }
+            org.apache.spark.sql.types.StringType, nullable = false)))),
+      now)
 
   /** Build the unified snapshot from landed files. `now` is injectable so
     * golden tests are deterministic (F13 timestamps). */
@@ -105,16 +111,10 @@ object CvePipeline {
                     now: Column = current_timestamp()): DataFrame = {
     val deltas = this.deltas(spark, landing, fidelity)
     require(deltas.nonEmpty, "at least one landed source required")
-    val empty = Merge.init(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.StringType, nullable = false)))),
-      now)
     // One shuffle for the whole N-source merge (union + keyed agg), not
     // N chained full-outer joins — Merge.upsertMany is property-tested
     // equal to the fold.
-    prioritize(Merge.upsertMany(empty, deltas, "id", now))
+    prioritize(Merge.upsertMany(emptyBase(spark, now), deltas, "id", now))
   }
 
   /** §3.3: the prioritization scan as a narrow projection. */

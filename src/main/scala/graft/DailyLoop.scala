@@ -25,7 +25,7 @@ import graft.streaming.DocsStream
   * batch id (doubling shingle rows — exactly the corruption class the
   * round-8 verdict flagged in the old store). Instead a tick COMMITS by
   * atomically creating one marker file (`tick-<seq>-<millis>`, the
-  * BandIndex claim-file pattern); every step before that is idempotent
+  * VersionedChain claim-file pattern); every step before that is idempotent
   * under a full re-run with the SAME batch id (= committed seq + 1):
   * the K1 merge is a keyed upsert, the pair snapshot a keyed upsert,
   * the shingle store a wholesale overwrite of the tick's own

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
@@ -11,11 +9,11 @@ import org.apache.spark.sql.functions._
 
 /** Versioned on-disk ANN build artifacts — PQ codebooks + the encoded
   * corpus, and IVF (Lloyd-refined) centroids — published with the
-  * BandIndex pattern: data lands under a claimed `v-NNNNN` directory,
-  * the sidecar commits LAST via an atomic same-directory rename, and
-  * readers pin the newest COMMITTED version. A crashed build leaves an
-  * uncommitted directory that is invisible to readers and swept by the
-  * next successful publish.
+  * [[VersionedChain]] protocol BandIndex also uses: data lands under a
+  * claimed `v-NNNNN` directory, the sidecar commits LAST via an atomic
+  * same-directory rename, and readers pin the newest COMMITTED version.
+  * A crashed build leaves an uncommitted directory that is invisible to
+  * readers and swept by the next successful publish.
   *
   * Why this exists: at 100 TB a quantizer is a BUILD artifact refreshed
   * on the corpus-publish cadence (nightly, with the band index), not
@@ -36,183 +34,22 @@ import org.apache.spark.sql.functions._
 object AnnIndex {
   private val MetaFile = "_graft_ann"
   private val BloomFile = "idbloom"
-  private val VersionPrefix = "v-"
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** An ANN layer's sidecar names its parent right after its `*-delta`
+    * tag (`pq-delta <parent> …`, `ivfp-delta <parent> …`). */
+  private val store = new VersionedChain(MetaFile, parts =>
+    if (parts(0).endsWith("-delta")) Some(parts(1).toInt) else None)
 
-  private def vdir(path: String, v: Int): Path =
-    new Path(path, f"$VersionPrefix$v%05d")
-
-  private def versionOf(name: String): Option[Int] =
-    if (name.startsWith(VersionPrefix))
-      name.stripPrefix(VersionPrefix).toIntOption
-    else None
-
-  private def versions(spark: SparkSession, path: String): Seq[Int] = {
-    val f = fs(spark, path)
-    val p = new Path(path)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq.flatMap(st => versionOf(
-      st.getPath.getName.stripPrefix(".claim-")))
-  }
-
-  private def claimVersion(spark: SparkSession, path: String): Int = {
-    val f = fs(spark, path)
-    f.mkdirs(new Path(path))
-    var v = (versions(spark, path) :+ 0).max + 1
-    while (true) {
-      try {
-        f.create(new Path(path, f".claim-$VersionPrefix$v%05d"), false).close()
-        return v
-      } catch { // only already-exists means "claimed by a racer; bump"
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => v += 1
-        case _: java.nio.file.FileAlreadyExistsException        => v += 1
-      }
-    }
-    v // unreachable
-  }
-
-  /** Atomic same-dir rename commit, BandIndex.commitMeta's shape. */
-  private def commitMeta(spark: SparkSession, vd: Path, meta: String): Unit = {
-    val f = fs(spark, vd.toString)
-    val tmp = new Path(vd, MetaFile + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(meta.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    require(f.rename(tmp, new Path(vd, MetaFile)),
-      s"ann artifact commit rename failed under $vd")
-  }
-
-  /** Committed versions, newest first. */
-  private def committedVersions(spark: SparkSession, path: String): Seq[Int] = {
-    val f = fs(spark, path)
-    versions(spark, path).distinct.sorted(Ordering[Int].reverse)
-      .filter(v => f.exists(new Path(vdir(path, v), MetaFile)))
-  }
-
-  /** One sidecar read that doubles as the commit probe: a missing meta
-    * file means "uncommitted", never an error — one FS round-trip where
-    * exists()+open() was two. */
-  private def tryMeta(spark: SparkSession, path: String, v: Int): Option[String] =
-    try {
-      val in = fs(spark, path).open(new Path(vdir(path, v), MetaFile))
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    } catch {
-      case _: java.io.FileNotFoundException => None
-      case _: java.nio.file.NoSuchFileException => None
-    }
-
-  /** The committed head and its parent chain (head first, root last)
-    * with every sidecar text, loaded with ONE directory listing and ONE
-    * read per chain element (r22): the lifecycle operations used to
-    * re-list the store and re-walk the chain once per helper call —
-    * pqParams + currentVersion + pqBooks + pqCodes + guardDisjoint each
-    * walked it again, so a depth-8 chain append paid dozens of FS
-    * round-trips of pure control plane. Loaded once per public
-    * operation and threaded through; never cached across operations
-    * (stores mutate between ticks). */
-  private final case class ChainInfo(path: String, chain: Seq[Int],
-                                     metas: Map[Int, String]) {
-    def head: Int = chain.head
-    def headMeta: String = metas(head)
-    def rootMeta: String = metas(chain.last)
-  }
-
-  private def loadChainOpt(spark: SparkSession, path: String): Option[ChainInfo] = {
-    val vs = versions(spark, path).distinct.sorted(Ordering[Int].reverse)
-    // newest committed head: first version whose sidecar reads back
-    val headOpt = vs.iterator
-      .map(v => v -> tryMeta(spark, path, v))
-      .collectFirst { case (v, Some(m)) => (v, m) }
-    headOpt.map { case (head, headMeta) =>
-      val metas = scala.collection.mutable.Map(head -> headMeta)
-      val buf = scala.collection.mutable.ArrayBuffer(head)
-      var cur = head
-      var meta = headMeta.split(" ")
-      while (meta(0).endsWith("-delta")) {
-        val parent = meta(1).toInt
-        // claims are monotone, so a legal parent is always strictly older —
-        // anything else is a tampered/corrupted sidecar, and following it
-        // could walk a cycle forever instead of failing loudly
-        require(parent < cur,
-          s"ann chain under $path corrupt: delta layer v$cur references " +
-            s"parent v$parent (parents must be strictly older)")
-        cur = parent
-        val pm = tryMeta(spark, path, cur)
-        require(pm.nonEmpty,
-          s"ann chain under $path broken: delta layer references missing " +
-            s"committed parent v$cur")
-        metas(cur) = pm.get
-        buf += cur
-        meta = pm.get.split(" ")
-      }
-      ChainInfo(path, buf.toSeq, metas.toMap)
-    }
-  }
-
-  /** Loud when no version ever committed — an unbuilt artifact store
-    * must never silently probe as empty. */
+  /** The committed head's chain. Load it once per public operation and
+    * thread it through: each load costs a listing plus one sidecar read
+    * per layer, pure control plane. Loud when no version ever committed —
+    * an unbuilt artifact store must never silently probe as empty. */
   private def loadChain(spark: SparkSession, path: String): ChainInfo = {
-    val info = loadChainOpt(spark, path)
+    val info = store.load(spark, path)
     require(info.nonEmpty,
       s"no committed ANN artifact version under $path — publish one with " +
         "AnnIndex.buildPq/buildIvf/buildIvfPostings")
     info.get
-  }
-
-  /** Newest committed version; loud when none exists. */
-  private def currentVersion(spark: SparkSession, path: String): Int =
-    loadChain(spark, path).head
-
-  private def currentDir(spark: SparkSession, path: String): Path =
-    vdir(path, currentVersion(spark, path))
-
-  private def metaTextOf(spark: SparkSession, path: String, v: Int): String = {
-    val f = fs(spark, path)
-    val in = f.open(new Path(vdir(path, v), MetaFile))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
-  }
-
-  /** The version chain rooted at `v`: `v` first, then parents down to
-    * the chain root (a full build) — the cold-path walker [[prune]]
-    * needs for an arbitrary (non-head) version; hot paths use
-    * [[loadChain]]. */
-  private def chainOf(spark: SparkSession, path: String, v: Int): Seq[Int] = {
-    val buf = scala.collection.mutable.ArrayBuffer(v)
-    var cur = v
-    var meta = metaTextOf(spark, path, cur).split(" ")
-    while (meta(0).endsWith("-delta")) {
-      val parent = meta(1).toInt
-      require(parent < cur,
-        s"ann chain under $path corrupt: delta layer v$cur references " +
-          s"parent v$parent (parents must be strictly older)")
-      cur = parent
-      val pm = tryMeta(spark, path, cur)
-      require(pm.nonEmpty,
-        s"ann chain under $path broken: delta layer references missing " +
-          s"committed parent v$cur")
-      buf += cur
-      meta = pm.get.split(" ")
-    }
-    buf.toSeq
-  }
-
-  /** Sweep every version below the newly committed one except the newest
-    * committed predecessor's whole CHAIN (kept for probes in flight
-    * across a rebuild — a chained predecessor is only readable with its
-    * parents), including crashed builds' uncommitted junk. */
-  private def prune(spark: SparkSession, path: String, next: Int): Unit = {
-    val f = fs(spark, path)
-    val keep = committedVersions(spark, path).filter(_ < next).headOption
-      .map(v => chainOf(spark, path, v).toSet).getOrElse(Set.empty[Int])
-    versions(spark, path).distinct
-      .filter(v => v < next && !keep.contains(v))
-      .foreach { v =>
-        f.delete(vdir(path, v), true)
-        f.delete(new Path(path, f".claim-$VersionPrefix$v%05d"), false)
-      }
   }
 
   /** [[buildPq]]'s training-depth default — also what [[pqParams]]
@@ -254,7 +91,7 @@ object AnnIndex {
       ((clamped + 63) / 64 * 64).toInt
     }
     val bits = Bloom.build(ids, "id", numBits, Bloom.DefaultHashes)
-    val f = fs(spark, vd.toString)
+    val f = VersionedChain.fs(spark, vd.toString)
     val out = new java.io.DataOutputStream(f.create(new Path(vd, BloomFile), true))
     try {
       out.writeInt(numBits); out.writeInt(Bloom.DefaultHashes)
@@ -266,11 +103,11 @@ object AnnIndex {
     * before blooms existed, which forces the guard to the exact scan. */
   private def readIdBloom(spark: SparkSession, path: String,
                           v: Int): Option[(Array[Long], Int, Int)] = {
-    val f = fs(spark, path)
-    val p = new Path(vdir(path, v), BloomFile)
+    val f = VersionedChain.fs(spark, path)
+    val p = new Path(store.vdir(path, v), BloomFile)
     // open-with-catch: the read is its own existence probe (one FS
-    // round-trip, the tryMeta rule) — a bloom-less legacy layer reads
-    // as None exactly as the exists() probe did
+    // round-trip, VersionedChain's sidecar-read rule) — a bloom-less
+    // legacy layer reads as None exactly as the exists() probe did
     val inOpt =
       try Some(new java.io.DataInputStream(f.open(p)))
       catch {
@@ -462,17 +299,17 @@ object AnnIndex {
           }
         } else units
       val books = Similarity.pqTrain(trainUnits, m, subLen, numCodes, trainIters)
-      val next = claimVersion(spark, path)
-      val vd = vdir(path, next)
+      val next = store.claimVersion(spark, path)
+      val vd = store.vdir(path, next)
       books.write.mode("overwrite").parquet(new Path(vd, "books").toString)
       Similarity.pqEncode(units, books, m, subLen)
         .write.mode("overwrite").parquet(new Path(vd, "codes").toString)
       val codesBack = spark.read.parquet(new Path(vd, "codes").toString)
       writeIdBloom(spark, vd, codesBack.select("id"),
         Some(codesBack.count() / m)) // rows = m × ids (pqEncode contract)
-      commitMeta(spark, vd,
+      store.commit(spark, path, next,
         s"pq $m $subLen $numCodes ti=$trainIters${batchSuffix(batchId)}")
-      prune(spark, path, next)
+      store.prune(spark, path, next)
       next
     } finally { units.unpersist(); () }
     }
@@ -543,8 +380,8 @@ object AnnIndex {
       else
         s"appendPq under $path: delta contains ids already in the chain — " +
           "changed vectors need a rebuild, not an append")
-    val next = claimVersion(spark, path)
-    val vd = vdir(path, next)
+    val next = store.claimVersion(spark, path)
+    val vd = store.vdir(path, next)
     // A REMOVAL-ONLY layer (empty delta + tombstones — the daily loop's
     // vec_removals-without-embeddings tick) writes NO codes dataset at
     // all: a zero-row dynamic write would leave a directory holding only
@@ -566,7 +403,7 @@ object AnnIndex {
       val codesBack = spark.read.parquet(new Path(vd, "codes").toString)
       writeIdBloom(spark, vd, codesBack.select("id"), Some(deltaCount))
     } else writeIdBloom(spark, vd, deltaIds, Some(0L))
-    commitMeta(spark, vd,
+    store.commit(spark, path, next,
       s"pq-delta $parent ${p.m} ${p.subLen} ${p.numCodes} " +
         s"ti=${p.trainIters}${batchSuffix(batchId)}")
     // no prune: every ancestor layer stays live until the next full
@@ -596,16 +433,16 @@ object AnnIndex {
     // exactly one write — a checkpoint here would be an O(corpus) copy
     val books = pqBooksOf(spark, info)
     val codes = foldLayers(spark, path, info.chain, "codes")
-    val next = claimVersion(spark, path)
-    val vd = vdir(path, next)
+    val next = store.claimVersion(spark, path)
+    val vd = store.vdir(path, next)
     books.write.mode("overwrite").parquet(new Path(vd, "books").toString)
     codes.write.mode("overwrite").parquet(new Path(vd, "codes").toString)
     val codesBack = spark.read.parquet(new Path(vd, "codes").toString)
     writeIdBloom(spark, vd, codesBack.select("id"),
       Some(codesBack.count() / p.m)) // rows = m × ids (pqEncode contract)
-    commitMeta(spark, vd,
+    store.commit(spark, path, next,
       s"pq ${p.m} ${p.subLen} ${p.numCodes} ti=${p.trainIters}${batchSuffix(batch)}")
-    prune(spark, path, next)
+    store.prune(spark, path, next)
     next
     }
 
@@ -619,17 +456,17 @@ object AnnIndex {
       Spread.ensureParallel(corpus), Seq(idCol -> "id", cellCol -> "cell"), vecCol)
     val cents = Similarity.kmeansRefineExact(
       units, Similarity.exactCentroids(units), refineIters)
-    val next = claimVersion(spark, path)
-    val vd = vdir(path, next)
-    cents.write.mode("overwrite").parquet(new Path(vd, "centroids").toString)
-    commitMeta(spark, vd, s"ivf $refineIters")
-    prune(spark, path, next)
+    val next = store.claimVersion(spark, path)
+    cents.write.mode("overwrite")
+      .parquet(new Path(store.vdir(path, next), "centroids").toString)
+    store.commit(spark, path, next, s"ivf $refineIters")
+    store.prune(spark, path, next)
     next
   }
 
   /** A sidecar's trailing `key=value` tokens — `batch=<id>` (the
     * daily-loop tick that published the version; the tick's crash
-    * re-run keys its skip-if-done decision on it, see [[pqHeadBatch]])
+    * re-run keys its skip-if-done decision on it, see [[headBatch]])
     * and `ti=<n>` (the PQ training depth, absent in pre-`ti` sidecars).
     * Positional tokens keep their order; keyed tokens are
     * position-independent, which is what keeps old and new sidecars
@@ -671,8 +508,7 @@ object AnnIndex {
   /** Whether any version has ever committed — the day-zero probe (head
     * sidecar read only, no chain walk). */
   def isBuilt(spark: SparkSession, path: String): Boolean =
-    versions(spark, path).distinct.sorted(Ordering[Int].reverse)
-      .iterator.exists(v => tryMeta(spark, path, v).nonEmpty)
+    store.isBuilt(spark, path)
 
   /** The batch id the committed HEAD was published under, if the writer
     * recorded one — artifact-kind-agnostic. The loop's idempotence key:
@@ -684,9 +520,6 @@ object AnnIndex {
     * downstream). */
   def headBatch(spark: SparkSession, path: String): Option[Long] =
     splitBatch(loadChain(spark, path).headMeta.split(" "))._2
-
-  def pqHeadBatch(spark: SparkSession, path: String): Option[Long] =
-    headBatch(spark, path)
 
   /** The chain from the newest committed version down to its full-build
     * root — one element for a freshly built index, root LAST. */
@@ -700,14 +533,14 @@ object AnnIndex {
     pqBooksOf(spark, loadChain(spark, path))
 
   private def pqBooksOf(spark: SparkSession, info: ChainInfo): DataFrame =
-    spark.read.parquet(new Path(vdir(info.path, info.chain.last), "books").toString)
+    spark.read.parquet(new Path(store.vdir(info.path, info.chain.last), "books").toString)
 
   /** A layer's optional dataset (codes/postings/tombs) — delta layers
     * may carry any subset; a chain root always carries its data. */
   private def layerData(spark: SparkSession, path: String, v: Int,
                         name: String): Option[DataFrame] = {
-    val p = new Path(vdir(path, v), name)
-    if (fs(spark, path).exists(p)) Some(spark.read.parquet(p.toString))
+    val p = new Path(store.vdir(path, v), name)
+    if (VersionedChain.fs(spark, path).exists(p)) Some(spark.read.parquet(p.toString))
     else None
   }
 
@@ -752,7 +585,8 @@ object AnnIndex {
     foldLayers(spark, path, pqChain(spark, path), "codes")
 
   def ivfCentroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(new Path(currentDir(spark, path), "centroids").toString)
+    spark.read.parquet(
+      new Path(store.vdir(path, loadChain(spark, path).head), "centroids").toString)
 
   /** PQ-ADC top-k against the persisted index — zero training; the (m,
     * subLen) the LUT needs come from the artifact's own sidecar. ONE
@@ -870,8 +704,8 @@ object AnnIndex {
       val seed = seedPinned.getOrElse(units)
       val cents = Similarity.kmeansRefineExact(
         seed, Similarity.exactCentroids(seed), refineIters)
-      val next = claimVersion(spark, path)
-      val vd = vdir(path, next)
+      val next = store.claimVersion(spark, path)
+      val vd = store.vdir(path, next)
       cents.write.mode("overwrite").parquet(new Path(vd, "centroids").toString)
       writePostings(units.drop("cell")
         .join(Similarity.assignCellsAgg(units, cents)
@@ -879,8 +713,8 @@ object AnnIndex {
         new Path(vd, "postings"), cellTaskCap)
       writeIdBloom(spark, vd, spark.read
         .parquet(new Path(vd, "postings").toString).select("id"))
-      commitMeta(spark, vd, s"ivfp $refineIters${batchSuffix(batchId)}")
-      prune(spark, path, next)
+      store.commit(spark, path, next, s"ivfp $refineIters${batchSuffix(batchId)}")
+      store.prune(spark, path, next)
       next
     } finally { units.unpersist(); seedPinned.foreach(_.unpersist()); () }
     }
@@ -919,7 +753,7 @@ object AnnIndex {
 
   private def ivfpCentroidsOf(spark: SparkSession, info: ChainInfo): DataFrame =
     spark.read.parquet(
-      new Path(vdir(info.path, info.chain.last), "centroids").toString)
+      new Path(store.vdir(info.path, info.chain.last), "centroids").toString)
 
   /** The posting relation (id, unit, cell), cell-partitioned on disk —
     * every layer down the chain, minus ids tombstoned by a later layer
@@ -976,8 +810,8 @@ object AnnIndex {
       else
         s"appendIvfPostings under $path: delta contains ids already in " +
           "the chain — changed vectors need a rebuild, not an append")
-    val next = claimVersion(spark, path)
-    val vd = vdir(path, next)
+    val next = store.claimVersion(spark, path)
+    val vd = store.vdir(path, next)
     // removal-only layer: skip the postings dataset entirely (the
     // appendPq rule — a zero-row dynamic-partitioned write would leave
     // an inference-poison _SUCCESS-only directory) and bloom the empty
@@ -994,7 +828,7 @@ object AnnIndex {
         .parquet(new Path(vd, "postings").toString).select("id")
       else deltaIds,
       Some(deltaCount)) // ≥ distinct ids — sizing-safe, no second count job
-    commitMeta(spark, vd, s"ivfp-delta $parent${batchSuffix(batchId)}")
+    store.commit(spark, path, next, s"ivfp-delta $parent${batchSuffix(batchId)}")
     // no prune: ancestors stay live until a rebuild/compaction collapses
     next
     }
@@ -1015,15 +849,15 @@ object AnnIndex {
     val batch = splitBatch(info.headMeta.split(" "))._2
     val cents = ivfpCentroidsOf(spark, info)
     val posts = foldLayers(spark, path, info.chain, "postings")
-    val next = claimVersion(spark, path)
-    val vd = vdir(path, next)
+    val next = store.claimVersion(spark, path)
+    val vd = store.vdir(path, next)
     cents.write.mode("overwrite").parquet(new Path(vd, "centroids").toString)
     writePostings(posts, new Path(vd, "postings"), cellTaskCap)
     writeIdBloom(spark, vd, spark.read
       .parquet(new Path(vd, "postings").toString).select("id"))
-    commitMeta(spark, vd,
+    store.commit(spark, path, next,
       s"${rootParts.mkString(" ")}${batchSuffix(batch)}")
-    prune(spark, path, next)
+    store.prune(spark, path, next)
     next
     }
 

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,8 +35,8 @@ import org.apache.spark.sql.functions._
   * PUBLISH IS ATOMIC — nightly rebuilds and daily probes may run in
   * different JVMs concurrently: each build writes a fresh `v-NNNNN/`
   * version directory and commits it by RENAMING the layout sidecar into
-  * place as the last step (same-directory rename — atomic on POSIX and
-  * HDFS). Probes resolve "current" = the highest version whose sidecar
+  * place as the last step (the [[VersionedChain]] protocol, shared with
+  * AnnIndex). Probes resolve "current" = the highest version whose sidecar
   * exists, and pin that one version for the whole probe, so a probe
   * never sees a half-written index, a missing sidecar, or a layout from
   * a different build than the rows it bands against. A build retains
@@ -54,7 +52,6 @@ import org.apache.spark.sql.functions._
 object BandIndex {
   val BucketCol = "band_bucket"
   private val MetaFile = "_graft_band_index"
-  private val VersionPrefix = "v-"
 
   /** Uniform, deterministic, stable across ticks: a (band, bkey) always
     * lands in the same directory, so probe pruning is sound. */
@@ -67,144 +64,46 @@ object BandIndex {
     def rowsPerBand: Int = numHashes / bands
   }
 
-  // Resolve the filesystem FROM the index path (not the default FS): the
-  // sidecar must live next to the parquet buckets even when the index is
-  // on an explicit file:/ or object-store URI and fs.defaultFS is HDFS —
-  // a default-FS sidecar would be missing (or STALE from an older build)
-  // exactly when another session probes the index.
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** A band layer's sidecar names its parent as the fourth field. */
+  private val store = new VersionedChain(MetaFile, _.lift(3).map(_.toInt))
 
-  /** Commit the version: write the sidecar under a temp name, then rename
-    * it into place — a same-directory rename of a small file, atomic on
-    * POSIX and HDFS, so a concurrent probe either sees the complete
-    * sidecar (version committed) or none (version invisible). A LAYER
-    * (delta append) records its parent version as a fourth field; a base
-    * build records none. */
-  private def commitMeta(spark: SparkSession, vdir: Path, l: Layout,
-                         parent: Option[Int] = None): Unit = {
-    val f = fs(spark, vdir.toString)
-    val tmp = new Path(vdir, MetaFile + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write((s"${l.buckets} ${l.numHashes} ${l.bands}"
-        + parent.map(p => s" $p").getOrElse(""))
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    require(f.rename(tmp, new Path(vdir, MetaFile)),
-      s"band index commit rename failed under $vdir")
+  private def layoutOf(meta: String): Layout = {
+    val parts = meta.split("\\s+").map(_.toInt)
+    Layout(parts(0), parts(1), parts(2))
   }
 
-  private def versionOf(name: String): Option[Int] =
-    if (name.startsWith(VersionPrefix))
-      name.stripPrefix(VersionPrefix).toIntOption
-    else None
+  /** The sidecar text: the layout, plus the parent version for a LAYER
+    * (delta append); a base build records none. */
+  private def metaText(l: Layout, parent: Option[Int] = None): String =
+    s"${l.buckets} ${l.numHashes} ${l.bands}" + parent.map(p => s" $p").getOrElse("")
 
-  /** All version numbers present under `path` (committed or not). */
-  private def versions(spark: SparkSession, path: String): Seq[Int] = {
-    val f = fs(spark, path)
-    val p = new Path(path)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq
-      .filter(_.isDirectory).flatMap(st => versionOf(st.getPath.getName))
-  }
-
-  /** The directory of the newest COMMITTED version (sidecar present).
-    * Loud failure when none exists — an unbuilt or mid-first-build index
-    * must never silently probe as empty. Exposed for specs/tools that
-    * need to read the current index rows directly. */
-  def currentPath(spark: SparkSession, path: String): String = {
-    val f = fs(spark, path)
-    val committed = versions(spark, path).sorted(Ordering[Int].reverse)
-      .find(v => f.exists(new Path(vdir(path, v), MetaFile)))
-    require(committed.nonEmpty,
+  /** `found` (the committed head or chain), or a loud failure — an
+    * unbuilt or mid-first-build index must never silently probe as
+    * empty. */
+  private def committed[A](path: String, found: Option[A]): A = {
+    require(found.nonEmpty,
       s"no committed band index version under $path — build one with BandIndex.write")
-    vdir(path, committed.get).toString
+    found.get
   }
 
-  private def vdir(path: String, v: Int): Path =
-    new Path(path, f"$VersionPrefix$v%05d")
-
-  /** Newest COMMITTED version strictly below `below` (None when the
-    * index has no committed version there yet). */
-  private def committedHead(spark: SparkSession, path: String,
-                            below: Int): Option[Int] = {
-    val f = fs(spark, path)
-    versions(spark, path).filter(_ < below).sorted(Ordering[Int].reverse)
-      .find(v => f.exists(new Path(vdir(path, v), MetaFile)))
-  }
-
-  private def metaAt(spark: SparkSession,
-                     versionDir: String): (Layout, Option[Int]) = {
-    val in = fs(spark, versionDir).open(new Path(versionDir, MetaFile))
-    val parts =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        .split("\\s+").map(_.toInt)
-      finally in.close()
-    (Layout(parts(0), parts(1), parts(2)), parts.lift(3))
-  }
-
-  private def layoutAt(spark: SparkSession, versionDir: String): Layout =
-    metaAt(spark, versionDir)._1
-
-  /** The version chain of `v`: itself, then parents down to the base.
-    * Parents are always claimed before their children, so the walk must
-    * strictly descend — a sidecar violating that is corrupt and fails
-    * loudly rather than looping. */
-  private def chainOf(spark: SparkSession, path: String, v: Int): Seq[Int] = {
-    val chain = Seq.newBuilder[Int]
-    var cur = Option(v)
-    while (cur.nonEmpty) {
-      val c = cur.get
-      chain += c
-      cur = metaAt(spark, vdir(path, c).toString)._2
-      require(cur.forall(_ < c),
-        s"band index chain corrupt under $path: $c points at ${cur.get}")
-    }
-    chain.result()
-  }
+  /** The directory of the newest COMMITTED version. Exposed for
+    * specs/tools that need to read the current index rows directly. */
+  def currentPath(spark: SparkSession, path: String): String =
+    store.vdir(path, committed(path, store.head(spark, path))._1).toString
 
   def layout(spark: SparkSession, path: String): Layout =
-    layoutAt(spark, currentPath(spark, path))
+    layoutOf(committed(path, store.head(spark, path))._2)
 
   /** Whether any committed version exists — the day-zero bootstrap
     * probe (an unbuilt index must be built, not probed). */
   def isBuilt(spark: SparkSession, path: String): Boolean =
-    committedHead(spark, path, below = Int.MaxValue).nonEmpty
+    store.isBuilt(spark, path)
 
   /** Number of versions in the CURRENT committed chain (base + layers)
     * — what a probe walks, and the compaction-cadence input: probe cost
     * grows with this count, not with corpus size. */
   def chainLength(spark: SparkSession, path: String): Int =
-    committedHead(spark, path, below = Int.MaxValue)
-      .map(v => chainOf(spark, path, v).length)
-      .getOrElse(0)
-
-  /** Claim a version number exclusively: `create(..., overwrite=false)`
-    * of a sibling claim file is atomic on POSIX and HDFS, so two
-    * concurrent builds can never write into the same v-NNNNN directory —
-    * the loser observes the claim and takes the next number. */
-  private def claimVersion(spark: SparkSession, path: String): Int = {
-    val f = fs(spark, path)
-    f.mkdirs(new Path(path))
-    var v = (versions(spark, path) :+ 0).max + 1
-    while (true) {
-      try {
-        f.create(claimFile(path, v), false).close()
-        return v
-      } catch {
-        // ONLY the already-exists outcome means "claimed by a racer; bump".
-        // A generic IOException (permissions, full disk, FS down) used to
-        // take this branch too and loop forever consuming version numbers
-        // — rethrow it instead.
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => v += 1
-        case _: java.nio.file.FileAlreadyExistsException        => v += 1
-      }
-    }
-    v // unreachable
-  }
-
-  private def claimFile(path: String, v: Int): Path =
-    new Path(path, f".claim-$VersionPrefix$v%05d")
+    store.load(spark, path).map(_.chain.length).getOrElse(0)
 
   /** Band the corpus shingle relation and publish a NEW index version.
     * One corpus pass (signatures → band keys), one shuffle into the
@@ -223,9 +122,9 @@ object BandIndex {
     // __HIVE_DEFAULT_PARTITION__ and every probe silently empty
     require(buckets > 0, s"buckets ($buckets) must be positive")
     val spark = corpusSh.sparkSession
-    val next = claimVersion(spark, path)
-    val target = vdir(path, next)
-    bandRows(corpusSh, Layout(buckets, numHashes, bands))
+    val l = Layout(buckets, numHashes, bands)
+    val next = store.claimVersion(spark, path)
+    bandRows(corpusSh, l)
       .withColumn(BucketCol, bucketOf(col("band"), col("bkey"), buckets))
       // cluster each bucket into one task before the partitioned write:
       // without this every shuffle partition writes a sliver into every
@@ -234,22 +133,11 @@ object BandIndex {
       // file count is O(buckets) and the probe opens one file per
       // touched directory
       .repartition(buckets, col(BucketCol))
-      .write.partitionBy(BucketCol).mode("overwrite").parquet(target.toString)
-    requireClaimLive(spark, path, next)
-    commitMeta(spark, target, Layout(buckets, numHashes, bands))
-    prune(spark, path, next)
+      .write.partitionBy(BucketCol).mode("overwrite")
+      .parquet(store.vdir(path, next).toString)
+    store.commit(spark, path, next, metaText(l))
+    store.prune(spark, path, next)
   }
-
-  /** Guard between the data write and the sidecar commit: if a CONCURRENT
-    * builder's [[prune]] swept this version's claim file (it cannot tell a
-    * slow in-flight build from a crashed one), committing would publish a
-    * directory whose data files may already be half-deleted. Fail loudly
-    * and abandon the version instead — the caller re-runs and claims a
-    * fresh number. */
-  private def requireClaimLive(spark: SparkSession, path: String, v: Int): Unit =
-    require(fs(spark, path).exists(claimFile(path, v)),
-      s"band index version $v under $path lost its claim file mid-build " +
-        "(a concurrent writer pruned it) — abandoning this version; re-run")
 
   /** Band a shingle relation under a layout — the ONE banding used by
     * build, append and probe, so a relation is never banded twice with
@@ -289,9 +177,9 @@ object BandIndex {
     * another. */
   final class DeltaTick(path: String, deltaSh: DataFrame) {
     private val spark = deltaSh.sparkSession
-    private val pinnedDir = currentPath(spark, path)
-    private val l = layoutAt(spark, pinnedDir)
-    private val parent = versionOf(new Path(pinnedDir).getName).get
+    private val pinned = committed(path, store.load(spark, path))
+    private val l = layoutOf(pinned.headMeta)
+    private val parent = pinned.head
     /** Delta band rows under the pinned layout; localCheckpoint'ed — the
       * touched-bucket collect, the chain probe join, the delta-internal
       * self-join and the layer write all consume it. */
@@ -308,7 +196,7 @@ object BandIndex {
       val touched = bands
         .select(bucketOf(col("band"), col("bkey"), l.buckets).as("b"))
         .distinct().collect().map(_.getLong(0)).toSeq.sorted
-      val bc = readChain(spark, path, pinnedDir, touched)
+      val bc = readChain(spark, pinned, touched)
       val crossCand = bands.as("x").join(bc.as("y"),
           col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") =!= col("y.doc_id"))
@@ -343,16 +231,16 @@ object BandIndex {
       * stands; the guard exists to turn a near-certain silent shadow
       * into a loud abort. */
     def append(): Unit = {
-      val next = claimVersion(spark, path)
-      val target = vdir(path, next)
+      val next = store.claimVersion(spark, path)
+      val target = store.vdir(path, next)
       bands
         .withColumn(BucketCol, bucketOf(col("band"), col("bkey"), l.buckets))
         .repartition(l.buckets, col(BucketCol))
         .write.partitionBy(BucketCol).mode("overwrite").parquet(target.toString)
       def requireHeadIs(when: String): Unit = {
-        val head = committedHead(spark, path, below = next)
+        val head = store.head(spark, path, below = next).map(_._1)
         if (!head.contains(parent)) {
-          val f = fs(spark, path)
+          val f = VersionedChain.fs(spark, path)
           // un-commit: meta first (flips this version back to
           // uncommitted for any concurrent reader), then the data. The
           // claim file STAYS — the version number is burned, so a retry
@@ -367,33 +255,10 @@ object BandIndex {
         }
       }
       requireHeadIs("while this layer was building")
-      requireClaimLive(spark, path, next)
-      commitMeta(spark, target, l, Some(parent))
+      store.commit(spark, path, next, metaText(l, Some(parent)))
       requireHeadIs("during this layer's commit")
-      prune(spark, path, next)
+      store.prune(spark, path, next)
     }
-  }
-
-  /** Sweep everything below `next` except the LIVE chains: `next`'s own
-    * ancestors (those layers ARE the index) and the newest committed
-    * predecessor's chain (the version an in-flight probe could have
-    * pinned, with its layers). Crashed builds' uncommitted directories
-    * and stale claim files go too. */
-  private def prune(spark: SparkSession, path: String, next: Int): Unit = {
-    val f = fs(spark, path)
-    val prevPinned = versions(spark, path).filter(_ < next)
-      .sorted(Ordering[Int].reverse)
-      .find(v => f.exists(new Path(vdir(path, v), MetaFile)))
-    val keep = (chainOf(spark, path, next) ++
-      prevPinned.toSeq.flatMap(v => chainOf(spark, path, v))).toSet
-    val claimed = f.listStatus(new Path(path)).toSeq.filter(_.isFile)
-      .flatMap(st => versionOf(st.getPath.getName.stripPrefix(".claim-")))
-    (versions(spark, path) ++ claimed).distinct
-      .filter(v => v < next && !keep.contains(v))
-      .foreach { v =>
-        f.delete(vdir(path, v), true)
-        f.delete(claimFile(path, v), false)
-      }
   }
 
   /** The band-key schema the probe expects back from the index. */
@@ -414,20 +279,18 @@ object BandIndex {
     * inference. */
   def readTouched(spark: SparkSession, path: String,
                   touched: Seq[Long]): DataFrame =
-    readChain(spark, path, currentPath(spark, path), touched)
+    readChain(spark, committed(path, store.load(spark, path)), touched)
 
-  private def readChain(spark: SparkSession, path: String, pinnedDir: String,
-                        touched: Seq[Long]): DataFrame = {
-    val v = versionOf(new Path(pinnedDir).getName).get
-    chainOf(spark, path, v)
-      .map(c => readTouchedAt(spark, vdir(path, c).toString, touched))
+  private def readChain(spark: SparkSession, pinned: ChainInfo,
+                        touched: Seq[Long]): DataFrame =
+    pinned.chain
+      .map(c => readTouchedAt(spark, store.vdir(pinned.path, c).toString, touched))
       .reduce(_ union _)
-  }
 
   private def readTouchedAt(spark: SparkSession, versionDir: String,
                             touched: Seq[Long]): DataFrame = {
     val p = new Path(versionDir)
-    val hasBuckets = fs(spark, versionDir).listStatus(p).exists { st =>
+    val hasBuckets = VersionedChain.fs(spark, versionDir).listStatus(p).exists { st =>
       val n = st.getPath.getName
       st.isDirectory && !n.startsWith("_") && !n.startsWith(".")
     }

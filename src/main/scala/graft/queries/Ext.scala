@@ -16,42 +16,13 @@ object Ext {
 
   private def t(s: SparkSession, dir: String, name: String) = Tables.load(s, dir, name)
 
-  /** PID-scoped scratch path under java.io.tmpdir, deleted on JVM exit.
-    * Stable within the process (same name → same dir) so repeated query
-    * runs overwrite rather than accumulate. A SIGKILLed run's hook never
-    * fires, so on first use the same-name dirs of DEAD processes are
-    * reclaimed — /tmp garbage is bounded by live runs, not run history. */
-  private def scratchDir(name: String): String = {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val pid = ProcessHandle.current().pid()
-    val f = new java.io.File(tmp, s"${name}_p$pid")
-    if (scratchRegistered.add(f.getAbsolutePath)) {
-      val Stale = s"""${java.util.regex.Pattern.quote(name)}_p(\\d+)""".r
-      Option(tmp.listFiles).foreach(_.foreach { d =>
-        d.getName match {
-          case Stale(p) if p.toLong != pid && {
-              val h = ProcessHandle.of(p.toLong)
-              !(h.isPresent && h.get.isAlive)
-            } =>
-            graft.sources.Landing.deleteNoFollow(d)
-          case _ => ()
-        }
-      })
-      scala.sys.addShutdownHook(graft.sources.Landing.deleteNoFollow(f))
-      ()
-    }
-    f.getAbsolutePath
-  }
-  private val scratchRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** [[scratchDir]] wiped to an empty directory: a lifecycle entry's
+  /** [[graft.Scratch.dir]] wiped to an empty directory: a lifecycle entry's
     * run must not see the previous run's stores (DailyLoop skips ticks
     * already committed there, AnnIndex would extend the old chain).
     * Safe because Verify, Bench and the specs run entries one at a time
     * and consume each result before the entry runs again. */
   private def freshScratch(name: String): String = {
-    val d = new java.io.File(scratchDir(name))
+    val d = new java.io.File(graft.Scratch.dir(name))
     graft.sources.Landing.deleteNoFollow(d)
     d.mkdirs()
     d.getAbsolutePath
@@ -422,7 +393,7 @@ object Ext {
       // explicit file: scheme pins index AND cleanup to the local FS —
       // a scheme-less path would resolve through fs.defaultFS (HDFS on
       // a cluster) while the java.io.File cleanup stayed local
-      val idxPath = "file:" + scratchDir(
+      val idxPath = "file:" + graft.Scratch.dir(
         s"graft_band_index_${Integer.toHexString(dir.hashCode)}")
       Dedup.withPersisted(corpusSh) { c =>
         graft.operators.BandIndex.write(c, idxPath) // the nightly build
@@ -448,7 +419,7 @@ object Ext {
         docs.filter(col("doc_id") % 10 === 5)))
       val d2Sh = Dedup.explodedShingles(Dedup.shingleSets(
         docs.filter(col("doc_id") % 10 === 0)))
-      val idxPath = "file:" + scratchDir(
+      val idxPath = "file:" + graft.Scratch.dir(
         s"graft_band_layer_${Integer.toHexString(dir.hashCode)}")
       Dedup.withPersisted(baseSh) { c =>
         graft.operators.BandIndex.write(c, idxPath) // nightly compaction

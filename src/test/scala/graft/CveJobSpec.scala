@@ -16,7 +16,7 @@ class CveJobSpec extends SparkSpec {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   test("quirk#1: init vs update inferred from the job watermark") {
-    val work = java.nio.file.Files.createTempDirectory("job").toString
+    val work = SparkSpec.tempDir("job").toString
     val status = s"$work/status"
     assert(CveJob.isInitRun(spark, status))
     CveJob.runTick(spark, landing, s"$work/snap", status, ts("2025-04-01 00:00:00"))
@@ -25,7 +25,7 @@ class CveJobSpec extends SparkSpec {
   }
 
   test("T3: tick due at interval boundary and after downtime, not before") {
-    val work = java.nio.file.Files.createTempDirectory("job2").toString
+    val work = SparkSpec.tempDir("job2").toString
     val status = s"$work/status"
     assert(CveJob.isTickDue(spark, status, ts("2025-04-01 00:00:00"))) // cold
     CveJob.runTick(spark, landing, s"$work/snap", status, ts("2025-04-01 00:00:00"))
@@ -35,7 +35,7 @@ class CveJobSpec extends SparkSpec {
   }
 
   test("T1/T6: loop ticks when due and stops cooperatively") {
-    val work = java.nio.file.Files.createTempDirectory("job3").toString
+    val work = SparkSpec.tempDir("job3").toString
     val status = s"$work/status"
     var calls = 0
     val clockTimes = Seq(

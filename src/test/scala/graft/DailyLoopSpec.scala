@@ -29,7 +29,7 @@ class DailyLoopSpec extends SparkSpec {
     docs.filter(col("doc_id") % 3 === lit((seq - 1) % 3))
 
   private def work() =
-    java.nio.file.Files.createTempDirectory("graft_dailyloop_").toString
+    SparkSpec.tempDir("graft_dailyloop_").toString
 
   private def pairSet(p: DailyLoop.Paths) =
     graft.streaming.DocsStream.readPairs(spark, p.pairs).collect()
@@ -253,7 +253,7 @@ class DailyLoopSpec extends SparkSpec {
     assert(bucketsBefore.size > 2, "fixture spreads over several buckets")
     // tick 2: a TINY epss-only landing touching one existing id — the
     // bounded K1 path must rewrite only that id's bucket
-    val tiny = Files.createTempDirectory("graft_tinyepss_")
+    val tiny = SparkSpec.tempDir("graft_tinyepss_")
       .resolve("epss_tiny.csv")
     Files.write(tiny, java.util.Arrays.asList(
       "#model_version:v2023.03.01,score_date:2025-04-02T00:00:00Z",
@@ -339,7 +339,7 @@ class DailyLoopSpec extends SparkSpec {
       ts("2025-04-01 00:05:00"), embDelta = Some(emb(1)), annMaxChain = 1)
     val m = AnnIndex.pqParams(spark, p.ann).m
     assert(AnnIndex.pqCodes(spark, p.ann).count() == emb(1).count() * m)
-    assert(AnnIndex.pqHeadBatch(spark, p.ann).contains(1L))
+    assert(AnnIndex.headBatch(spark, p.ann).contains(1L))
     // tick 2 appends and annMaxChain=1 compacts mid-sequence; tick 3
     // appends onto the compacted base
     DailyLoop.runTick(spark, CvePipeline.Landing(), emptyDocs, p,
@@ -381,7 +381,7 @@ class DailyLoopSpec extends SparkSpec {
       ts("2025-04-04 00:00:00"))
     DailyLoop.runTick(spark, CvePipeline.Landing(), emptyDocs, p,
       ts("2025-04-05 00:00:00"), embDelta = Some(e.limit(0)))
-    assert(AnnIndex.pqHeadBatch(spark, p.ann).contains(3L))
+    assert(AnnIndex.headBatch(spark, p.ann).contains(3L))
     assert(AnnIndex.headBatch(spark, p.annPost).contains(3L))
     assert(AnnIndex.pqCodes(spark, p.ann).count() == e.count() * m)
     // a LABEL-LESS delta of new ids still maintains BOTH artifacts once
@@ -572,7 +572,7 @@ class DailyLoopSpec extends SparkSpec {
     tick(2) // REFRESH: retrain on thirds 0+1 from the vector store
     // a fresh ROOT, not an append: one-element chain, head batch 2
     assert(AnnIndex.pqChain(spark, p.ann).length == 1)
-    assert(AnnIndex.pqHeadBatch(spark, p.ann).contains(2L))
+    assert(AnnIndex.headBatch(spark, p.ann).contains(2L))
     // and the quantizer genuinely changed — this is the deliberate
     // quality event, not an answer-invariant compaction
     assert(books() != b1)
@@ -606,7 +606,7 @@ class DailyLoopSpec extends SparkSpec {
     assert(AnnIndex.pqParams(spark, p.ann) == custom)
     tick(2) // REFRESH: retrain from the store at the SIDECAR's depth
     assert(AnnIndex.pqChain(spark, p.ann).length == 1)
-    assert(AnnIndex.pqHeadBatch(spark, p.ann).contains(2L))
+    assert(AnnIndex.headBatch(spark, p.ann).contains(2L))
     assert(AnnIndex.pqParams(spark, p.ann) == custom,
       "a refresh must retrain under the committed params, trainIters included")
     tick(3, maxChain = 1) // append then COMPACT: ti survives compaction too
@@ -962,7 +962,7 @@ class DailyLoopSpec extends SparkSpec {
     // the STORE, so it must fire anyway — an exact batch-key match
     // skipped here would defer the quality event a whole period
     tick(2, None)
-    assert(AnnIndex.pqHeadBatch(spark, p.ann).contains(2L),
+    assert(AnnIndex.headBatch(spark, p.ann).contains(2L),
       "a vector-less refresh tick must still retrain")
     assert(AnnIndex.pqChain(spark, p.ann).length == 1)
     assert(AnnIndex.headBatch(spark, p.annPost).contains(2L))

@@ -36,7 +36,7 @@ class DedupSpec extends SparkSpec {
       Dedup.shingleSets(docs.filter($"doc_id" % 5 =!= 0)))
     val deltaSh = Dedup.explodedShingles(
       Dedup.shingleSets(docs.filter($"doc_id" % 5 === 0)))
-    val idx = java.nio.file.Files.createTempDirectory("graft_bandidx")
+    val idx = SparkSpec.tempDir("graft_bandidx")
       .resolve("idx").toString
     graft.operators.BandIndex.write(corpusSh, idx)
 
@@ -102,7 +102,7 @@ class DedupSpec extends SparkSpec {
     val B = graft.operators.BandIndex
 
     // layered: base build + day-1 append, day-2 probe
-    val idx = java.nio.file.Files.createTempDirectory("graft_bandidx_layer")
+    val idx = SparkSpec.tempDir("graft_bandidx_layer")
       .resolve("idx").toString
     B.write(baseSh, idx) // v1
     B.append(d1Sh, idx)  // v2 → parent v1
@@ -114,7 +114,7 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
     // monolithic truth: one index over base ∪ d1
-    val idx2 = java.nio.file.Files.createTempDirectory("graft_bandidx_mono")
+    val idx2 = SparkSpec.tempDir("graft_bandidx_mono")
       .resolve("idx").toString
     B.write(baseSh.union(d1Sh), idx2)
     val mono = B.minhashPairsFromIndex(idx2, baseSh.union(d1Sh), d2Sh, 0.8)
@@ -144,7 +144,7 @@ class DedupSpec extends SparkSpec {
   test("band index: a crashed build's junk version is swept, the committed predecessor survives") {
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val sh = Dedup.explodedShingles(Dedup.shingleSets(docs.limit(20)))
-    val idx = java.nio.file.Files.createTempDirectory("graft_bandidx_crash")
+    val idx = SparkSpec.tempDir("graft_bandidx_crash")
       .resolve("idx").toString
     graft.operators.BandIndex.write(sh, idx) // v1, committed
     // simulate a build that claimed v2 and wrote parquet but DIED before
@@ -173,7 +173,7 @@ class DedupSpec extends SparkSpec {
       docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 0).limit(10)))
     val d2 = Dedup.explodedShingles(Dedup.shingleSets(
       docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 1).limit(10)))
-    val idx = java.nio.file.Files.createTempDirectory("graft_bandidx_sib")
+    val idx = SparkSpec.tempDir("graft_bandidx_sib")
       .resolve("idx").toString
     B.write(sh, idx) // v1, committed head
     // two ticks pin the SAME parent (v1) — the out-of-band append a
@@ -199,7 +199,7 @@ class DedupSpec extends SparkSpec {
   test("band index fails loudly: unbuilt path, zero buckets") {
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val sh = Dedup.explodedShingles(Dedup.shingleSets(docs.limit(5)))
-    val empty = java.nio.file.Files.createTempDirectory("graft_bandidx_none")
+    val empty = SparkSpec.tempDir("graft_bandidx_none")
       .resolve("never_built").toString
     // an unbuilt index must never silently probe as an empty corpus
     val e1 = intercept[IllegalArgumentException] {

@@ -25,7 +25,7 @@ class FetchE2eSpec extends SparkSpec {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   test("S1 e2e: paginated init fetch + watermark-windowed incremental tick") {
-    val work = java.nio.file.Files.createTempDirectory("fetch_e2e").toString
+    val work = SparkSpec.tempDir("fetch_e2e").toString
     val status = s"$work/status"
     val snap = s"$work/snap"
     val policy = Policy(resultsPerPage = 2, retryDelayMs = 1L)
@@ -127,7 +127,7 @@ class FetchE2eSpec extends SparkSpec {
       val transport = Fetch.httpTransport(p =>
         s"$base/rest/json/cves/2.0?resultsPerPage=$PerPage&startIndex=${p * PerPage}")
       val policy = Policy(resultsPerPage = PerPage, retryDelayMs = 1L)
-      val work = java.nio.file.Files.createTempDirectory("fetch_http").toString
+      val work = SparkSpec.tempDir("fetch_http").toString
       // probe → distributed fetch → landing → merge: the exact
       // recorded-fixture pipeline above, now through a real socket
       val total = parseTotal(
@@ -172,7 +172,7 @@ class FetchE2eSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val root = java.nio.file.Files.createTempDirectory("main_fetch_")
+      val root = SparkSpec.tempDir("main_fetch_")
         .resolve("root").toString
       // the reference's in-process fetch+merge (main.py:64-89), one flag:
       // the tick's landing dir starts EMPTY and the fetch step fills it
@@ -215,7 +215,7 @@ class FetchE2eSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val root = java.nio.file.Files.createTempDirectory("main_fetchloop_")
+      val root = SparkSpec.tempDir("main_fetchloop_")
         .resolve("root").toString
       val conf = Config.parse(
         s"""[nvd]
@@ -326,7 +326,7 @@ class FetchE2eSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val root = java.nio.file.Files.createTempDirectory("main_fetch6_")
+      val root = SparkSpec.tempDir("main_fetch6_")
         .resolve("root").toString
       // the reference's full job fetch set (main.py:64-89): NVD paginated
       // plus five single-file sources, each keyed by its config section
@@ -495,7 +495,7 @@ class FetchE2eSpec extends SparkSpec {
     def ranged(k: String) = Option(rangeGets.get(k)).map(_.get()).getOrElse(0)
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val root = java.nio.file.Files.createTempDirectory("main_fresh_")
+      val root = SparkSpec.tempDir("main_fresh_")
         .resolve("root").toString
       val conf = Config.parse(
         s"""[exploitdb]
@@ -590,7 +590,7 @@ class FetchE2eSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val root = java.nio.file.Files.createTempDirectory("main_epssfail_")
+      val root = SparkSpec.tempDir("main_epssfail_")
         .resolve("root").toString
       // the reference's EPSS handler self-guards its update path
       // (epss_handler.py:167-169) — the job survives an EPSS outage
@@ -646,7 +646,7 @@ class FetchE2eSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val root = java.nio.file.Files.createTempDirectory("main_badlog_")
+      val root = SparkSpec.tempDir("main_badlog_")
         .resolve("root").toString
       val conf = Config.parse(
         s"""[cveorg]
@@ -712,7 +712,7 @@ class FetchE2eSpec extends SparkSpec {
            |probe_url: $base/probe/last-commit
            |allowed_url_prefixes: $base/elsewhere/
            |""".stripMargin)
-      val dir = java.nio.file.Files.createTempDirectory("fetch_allow_")
+      val dir = SparkSpec.tempDir("fetch_allow_")
         .toString
       val wm = Timestamp.from(
         java.time.OffsetDateTime.parse("2025-04-01T00:00:00Z").toInstant)
@@ -739,7 +739,7 @@ class FetchE2eSpec extends SparkSpec {
         s"""[cveorg]
            |url_updates: $base/cveorg/deltaLog.json
            |""".stripMargin)
-      val dir2 = java.nio.file.Files.createTempDirectory("fetch_allow2_")
+      val dir2 = SparkSpec.tempDir("fetch_allow2_")
         .toString
       Main.fetchCveOrg(spark, conf2, dir2, Some(wm))
       assert(new java.io.File(s"$dir2/cveorg/CVE-2024-0002.json").isFile)
@@ -772,7 +772,7 @@ class FetchE2eSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val root = java.nio.file.Files.createTempDirectory("main_crashstamp_")
+      val root = SparkSpec.tempDir("main_crashstamp_")
         .resolve("root").toString
       val conf = Config.parse(
         s"[epss]\nurl: $base/epss/epss_scores-current.csv.gz\n")
@@ -849,7 +849,7 @@ class FetchE2eSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val root = java.nio.file.Files.createTempDirectory("main_groups_")
+      val root = SparkSpec.tempDir("main_groups_")
         .resolve("root").toString
       val windowMs = 3000L
       // public tier (no apikey), ONE request per 3 s window, 1-day caps
@@ -946,7 +946,7 @@ class FetchE2eSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val root = java.nio.file.Files.createTempDirectory("main_stop_")
+      val root = SparkSpec.tempDir("main_stop_")
         .resolve("root").toString
       def conf(windowSec: Int) = Config.parse(
         s"""[nvd]
@@ -1057,7 +1057,7 @@ class FetchE2eSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val root = java.nio.file.Files.createTempDirectory("main_window_")
+      val root = SparkSpec.tempDir("main_window_")
         .resolve("root").toString
       val conf = Config.parse(
         s"""[nvd]
@@ -1208,7 +1208,7 @@ class FetchE2eSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val root = java.nio.file.Files.createTempDirectory("main_zerotot_")
+      val root = SparkSpec.tempDir("main_zerotot_")
         .resolve("root").toString
       val conf = Config.parse(
         s"""[nvd]
@@ -1275,7 +1275,7 @@ class FetchE2eSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val work = java.nio.file.Files.createTempDirectory("fetch_stream")
+      val work = SparkSpec.tempDir("fetch_stream")
       val dest = work.resolve("big.bin")
       // the truncated first attempt surfaces as an IO failure the shared
       // retry loop does NOT swallow (it is not a 403/503) — drive it
@@ -1305,7 +1305,7 @@ class FetchE2eSpec extends SparkSpec {
   }
 
   test("landPages: empty fetch lands nothing and returns 0") {
-    val work = java.nio.file.Files.createTempDirectory("fetch_e2e0").toString
+    val work = SparkSpec.tempDir("fetch_e2e0").toString
     val n = Landing.landPages(
       Fetch.fetchPages(spark, totalResults = 0L, Policy(resultsPerPage = 2),
         numPartitions = 2, (_: Long) => "unused"),
@@ -1314,7 +1314,7 @@ class FetchE2eSpec extends SparkSpec {
   }
 
   test("landPages: re-landing a smaller fetch wipes the earlier tick's stale pages") {
-    val work = java.nio.file.Files.createTempDirectory("fetch_reland").toString
+    val work = SparkSpec.tempDir("fetch_reland").toString
     val dir = s"$work/land"
     def pageFiles() = new java.io.File(dir).listFiles
       .map(_.getName).filter(_.startsWith("page-")).sorted.toSeq

@@ -17,7 +17,7 @@ class LandingSpec extends SparkSpec {
   }
 
   test("S11: cvelistV5-style zip extracts and reads end-to-end (S3)") {
-    val work = java.nio.file.Files.createTempDirectory("zip").toString
+    val work = SparkSpec.tempDir("zip").toString
     val rec = (id: String) =>
       s"""{"cveMetadata": {"cveId": "$id", "state": "PUBLISHED"},
           "containers": {"cna": {"title": "t-$id"}}}"""
@@ -33,7 +33,7 @@ class LandingSpec extends SparkSpec {
   }
 
   test("S11: single-member invariant (handlers/utils.py:113-118)") {
-    val work = java.nio.file.Files.createTempDirectory("zip1").toString
+    val work = SparkSpec.tempDir("zip1").toString
     makeZip(s"$work/one.zip", "cwec_latest.xml" -> "<x/>")
     val f = Landing.extractSingleMemberZip(s"$work/one.zip", s"$work/out")
     assert(new File(f).getName == "cwec_latest.xml")
@@ -44,7 +44,7 @@ class LandingSpec extends SparkSpec {
   }
 
   test("S11: zip-slip entries are rejected") {
-    val work = java.nio.file.Files.createTempDirectory("zipslip").toString
+    val work = SparkSpec.tempDir("zipslip").toString
     makeZip(s"$work/evil.zip", "../escape.txt" -> "nope")
     intercept[IllegalArgumentException] {
       Landing.extractZip(s"$work/evil.zip", s"$work/out")
@@ -58,7 +58,7 @@ class LandingSpec extends SparkSpec {
     // scans forever after). The batched landing is one streaming repack
     // pass; the reader dispatches on layout and must produce the
     // IDENTICAL relation — including bodies whose text needs escaping.
-    val work = java.nio.file.Files.createTempDirectory("zipbatch").toString
+    val work = SparkSpec.tempDir("zipbatch").toString
     val rec = (id: String) =>
       s"""{"cveMetadata": {"cveId": "$id", "state": "PUBLISHED"},
           "containers": {"cna": {"title": "t\\"quoted\\"\\t$id"}}}"""
@@ -89,7 +89,7 @@ class LandingSpec extends SparkSpec {
     // batch-*.jsonl from the previous run must be GONE, or the reader
     // would scan old records alongside the fresh ones (the tree layout
     // self-heals via same-name overwrite; the batched layout must wipe)
-    val work = java.nio.file.Files.createTempDirectory("zipbatchrerun").toString
+    val work = SparkSpec.tempDir("zipbatchrerun").toString
     val rec = (id: String) =>
       s"""{"cveMetadata": {"cveId": "$id", "state": "PUBLISHED"},
           "containers": {"cna": {"title": "t-$id"}}}"""
@@ -121,7 +121,7 @@ class LandingSpec extends SparkSpec {
     // swaps in only on success — a bad archive must throw with the old
     // batches (and the relation the reader serves) untouched, and leave
     // no temp residue behind.
-    val work = java.nio.file.Files.createTempDirectory("zipbatchcorrupt").toString
+    val work = SparkSpec.tempDir("zipbatchcorrupt").toString
     val rec = (id: String) =>
       s"""{"cveMetadata": {"cveId": "$id", "state": "PUBLISHED"},
           "containers": {"cna": {"title": "t-$id"}}}"""
@@ -158,7 +158,7 @@ class LandingSpec extends SparkSpec {
     // would shield the orphaned multi-GB temp forever. The age backstop
     // must reclaim it regardless. We fake the recycled-pid case with
     // OUR OWN (definitely alive) pid and an mtime pushed past the bound.
-    val work = java.nio.file.Files.createTempDirectory("zipbatchstale").toString
+    val work = SparkSpec.tempDir("zipbatchstale").toString
     val rec = (id: String) =>
       s"""{"cveMetadata": {"cveId": "$id", "state": "PUBLISHED"},
           "containers": {"cna": {"title": "t-$id"}}}"""
@@ -200,7 +200,7 @@ class LandingSpec extends SparkSpec {
 
   test("landKeyed: executors land <cveId>.json files the cveOrg reader consumes; re-land wipes") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("keyed").toString
+    val work = SparkSpec.tempDir("keyed").toString
     val rec = (id: String) =>
       s"""{"cveMetadata": {"cveId": "$id", "state": "PUBLISHED"},
           "containers": {"cna": {"title": "t-$id"}}}"""
@@ -221,7 +221,7 @@ class LandingSpec extends SparkSpec {
 
   test("landKeyed: a landing name never escapes its dir") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("keyedEvil").toString
+    val work = SparkSpec.tempDir("keyedEvil").toString
     val evil = spark.createDataset(Seq(
       graft.sources.FetchedFile("../escape", 1, "{}")))
     intercept[org.apache.spark.SparkException] {

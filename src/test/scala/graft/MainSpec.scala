@@ -67,7 +67,7 @@ class MainSpec extends SparkSpec {
   }
 
   test("landingFrom probes the upstreams' canonical filenames; missing files skip") {
-    val dir = Files.createTempDirectory("graft_land_").toString
+    val dir = SparkSpec.tempDir("graft_land_").toString
     // land two sources under their upstream names
     Files.copy(JPaths.get(res("epss_scores.csv")),
       JPaths.get(dir, "epss_scores.csv"), StandardCopyOption.REPLACE_EXISTING)
@@ -79,11 +79,11 @@ class MainSpec extends SparkSpec {
     assert(l.nvd.isEmpty && l.exploitDb.isEmpty && l.debian.isEmpty)
     assert(!l.isEmpty)
     // an empty dir lands nothing
-    assert(Main.landingFrom(Files.createTempDirectory("graft_none_").toString).isEmpty)
+    assert(Main.landingFrom(SparkSpec.tempDir("graft_none_").toString).isEmpty)
   }
 
   test("stampsFrom: _STAMPS round-trips; malformed lines drop without failing the tick") {
-    val dir = Files.createTempDirectory("graft_stamps_").toString
+    val dir = SparkSpec.tempDir("graft_stamps_").toString
     assert(Main.stampsFrom(dir).isEmpty) // absent sidecar = no stamps
     Files.write(JPaths.get(dir, Main.StampsFile),
       ("epss=1755176100000\n" + // well-formed
@@ -102,7 +102,7 @@ class MainSpec extends SparkSpec {
 
   test("run --once: a landed tick merges, dedups, and commits its marker") {
     import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("graft_main_").toString
+    val root = SparkSpec.tempDir("graft_main_").toString
     val land1 = JPaths.get(root, "landing", "1")
     Files.createDirectories(land1)
     Files.copy(JPaths.get(res("nvd_page.json")),

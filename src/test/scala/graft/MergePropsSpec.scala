@@ -78,7 +78,7 @@ class MergePropsSpec extends SparkSpec {
   }
 
   test("property: watermark only moves forward under monotone upserts") {
-    val dir = java.nio.file.Files.createTempDirectory("wmprop").toString + "/s"
+    val dir = SparkSpec.tempDir("wmprop").toString + "/s"
     val times = (1 to 5).map(i => java.sql.Timestamp.valueOf(s"2025-01-0$i 00:00:00"))
     times.foreach { t =>
       Watermarks.upsert(spark, dir, "src", t)

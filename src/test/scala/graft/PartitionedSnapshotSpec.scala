@@ -31,7 +31,7 @@ class PartitionedSnapshotSpec extends SparkSpec {
 
   test("initEmpty: day-zero snapshot reads as zero rows WITH schema, then merges deltas") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("psnap_empty").toString + "/snap"
+    val path = SparkSpec.tempDir("psnap_empty").toString + "/snap"
     val schemaDf = Merge.init(
       Seq.empty[(String, Double)].toDF("id", "score"), t0)
     PartitionedSnapshot.initEmpty(schemaDf, path, "id", buckets = 8)
@@ -56,7 +56,7 @@ class PartitionedSnapshotSpec extends SparkSpec {
 
   test("delta-touched partitions rewrite; untouched partition files are byte-identical") {
     import spark.implicits._
-    val work = Files.createTempDirectory("psnap").toString
+    val work = SparkSpec.tempDir("psnap").toString
     val path = s"$work/snap"
     val snap0 = Merge.init(
       spark.range(0, 200).select($"id", concat(lit("name-"), $"id").as("name")),
@@ -114,7 +114,7 @@ class PartitionedSnapshotSpec extends SparkSpec {
 
   test("a bucket left mid-swap by a crash is healed before the next read") {
     import spark.implicits._
-    val work = Files.createTempDirectory("psnap3").toString
+    val work = SparkSpec.tempDir("psnap3").toString
     val path = s"$work/snap"
     PartitionedSnapshot.init(
       Merge.init(spark.range(0, 100).select($"id", lit("x").as("v")), t0),
@@ -138,7 +138,7 @@ class PartitionedSnapshotSpec extends SparkSpec {
 
   test("bucket count survives as layout metadata; empty delta is a no-op") {
     import spark.implicits._
-    val work = Files.createTempDirectory("psnap2").toString
+    val work = SparkSpec.tempDir("psnap2").toString
     val path = s"$work/snap"
     PartitionedSnapshot.init(
       Merge.init(spark.range(0, 50).select($"id", lit("x").as("v")), t0),

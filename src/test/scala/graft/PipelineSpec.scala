@@ -83,7 +83,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("K5: JSON dump round-trips the snapshot (id + priority survive)") {
-    val out = java.nio.file.Files.createTempDirectory("json").toString + "/dump"
+    val out = SparkSpec.tempDir("json").toString + "/dump"
     val snap = CvePipeline.buildSnapshot(spark, landing, now = t0)
     snap.select("id", "priority").write.json(out)
     val back = spark.read.json(out)

@@ -66,7 +66,7 @@ class PqSpec extends SparkSpec {
       }
     }
     val corpus = rows.toDF("vec_id", "embedding")
-    val work = java.nio.file.Files.createTempDirectory("graft_annsamp_")
+    val work = SparkSpec.tempDir("graft_annsamp_")
     val full = work.resolve("full").toString
     val samp = work.resolve("samp").toString
     AnnIndex.buildPq(corpus, full)
@@ -131,7 +131,7 @@ class PqSpec extends SparkSpec {
       s"below the numCodes floor: $sampleN")
     assert(sampleN < n, s"cap must bite on aliased ids: $sampleN of $n")
     // and the build trains on exactly that sample, end to end
-    val path = java.nio.file.Files.createTempDirectory("graft_annalias_")
+    val path = SparkSpec.tempDir("graft_annalias_")
       .resolve("pq").toString
     AnnIndex.buildPq(corpus, path, trainSampleMax = cap)
     def bookSet(df: org.apache.spark.sql.DataFrame) = df
@@ -171,7 +171,7 @@ class PqSpec extends SparkSpec {
     val corpus = (0L until 60L)
       .map(i => (i, Array.fill(64)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
-    val work = java.nio.file.Files.createTempDirectory("graft_annauto_")
+    val work = SparkSpec.tempDir("graft_annauto_")
     val auto = work.resolve("auto").toString
     val expl = work.resolve("expl").toString
     AnnIndex.buildPq(corpus, auto, trainSampleMax = AnnIndex.AutoTrainSampleMax)
@@ -203,7 +203,7 @@ class PqSpec extends SparkSpec {
       .select("id").limit(40).collect().map(_.getLong(0)).toSet
     assert(badIds.size == 40)
     val corpus = all.filter(col("vec_id").isin(badIds.toSeq: _*))
-    val work = java.nio.file.Files.createTempDirectory("graft_annempty2_")
+    val work = SparkSpec.tempDir("graft_annempty2_")
     val capped = work.resolve("capped").toString
     val full = work.resolve("full").toString
     AnnIndex.buildPq(corpus, capped, trainSampleMax = 8L)
@@ -220,7 +220,7 @@ class PqSpec extends SparkSpec {
     import graft.operators.AnnIndex
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.filter(col("vec_id") % 50 === 0)
-    val work = java.nio.file.Files.createTempDirectory("graft_annidx_spec_")
+    val work = SparkSpec.tempDir("graft_annidx_spec_")
     val pqPath = work.resolve("pq").toString
     val ivfPath = work.resolve("ivf").toString
     val v1 = AnnIndex.buildPq(e, pqPath)
@@ -255,7 +255,7 @@ class PqSpec extends SparkSpec {
     val base = e.filter(col("vec_id") % 2 === 0)
     val delta = e.filter(col("vec_id") % 2 === 1)
     val q = e.filter(col("vec_id") % 50 === 0)
-    val path = java.nio.file.Files.createTempDirectory("graft_annappend_")
+    val path = SparkSpec.tempDir("graft_annappend_")
       .resolve("pq").toString
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
@@ -287,7 +287,7 @@ class PqSpec extends SparkSpec {
     import graft.operators.AnnIndex
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.filter(col("vec_id") % 50 === 0)
-    val path = java.nio.file.Files.createTempDirectory("graft_anncompact_")
+    val path = SparkSpec.tempDir("graft_anncompact_")
       .resolve("pq").toString
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
@@ -303,14 +303,14 @@ class PqSpec extends SparkSpec {
     // identical books (no retrain), identical answers, stamp carried
     assert(rows(AnnIndex.pqBooks(spark, path)) == booksBefore)
     assert(rows(AnnIndex.pqTopK(spark, path, q, k = 5)) == before)
-    assert(AnnIndex.pqHeadBatch(spark, path).contains(2L))
+    assert(AnnIndex.headBatch(spark, path).contains(2L))
   }
 
   test("IVF posting store: pruned multi-probe == cellTopKMultiProbe; scan is partition-pruned") {
     import graft.operators.AnnIndex
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.filter(col("vec_id") % 50 === 0)
-    val path = java.nio.file.Files.createTempDirectory("graft_annpost_")
+    val path = SparkSpec.tempDir("graft_annpost_")
       .resolve("ivfp").toString
     AnnIndex.buildIvfPostings(e, path, refineIters = 1)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -348,7 +348,7 @@ class PqSpec extends SparkSpec {
     val base = e.filter(col("vec_id") % 2 === 0)
     val delta = e.filter(col("vec_id") % 2 === 1)
     val q = e.filter(col("vec_id") % 50 === 0)
-    val path = java.nio.file.Files.createTempDirectory("graft_annpapp_spec_")
+    val path = SparkSpec.tempDir("graft_annpapp_spec_")
       .resolve("ivfp").toString
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
@@ -395,7 +395,7 @@ class PqSpec extends SparkSpec {
       (0 until 10).map(i => (410L + i, 2, around(bases(2))))
     val corpus = rows.toDF("vec_id", "label", "embedding")
     val q = corpus.filter($"vec_id" % 40 === 0)
-    val work = java.nio.file.Files.createTempDirectory("graft_annskew_")
+    val work = SparkSpec.tempDir("graft_annskew_")
     val salted = work.resolve("salted").toString
     val plain = work.resolve("plain").toString
     // cap 50 → the hot cell must fan out across ~8 write tasks; the
@@ -434,7 +434,7 @@ class PqSpec extends SparkSpec {
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val base = e.filter(col("vec_id") % 2 === 0)
     val delta = e.filter(col("vec_id") % 2 === 1)
-    val work = java.nio.file.Files.createTempDirectory("graft_annbloom_")
+    val work = SparkSpec.tempDir("graft_annbloom_")
     val pq = work.resolve("pq").toString
     val ivfp = work.resolve("ivfp").toString
     AnnIndex.buildPq(base, pq)
@@ -462,7 +462,7 @@ class PqSpec extends SparkSpec {
     val odds = e.filter(col("vec_id") % 2 === 1)
     val dead = e.filter(col("vec_id") % 10 === 0) // ⊂ evens
     val q = e.filter(col("vec_id") % 50 === 1)
-    val work = java.nio.file.Files.createTempDirectory("graft_anndel_")
+    val work = SparkSpec.tempDir("graft_anndel_")
     val pq = work.resolve("pq").toString
     val ivfp = work.resolve("ivfp").toString
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -531,7 +531,7 @@ class PqSpec extends SparkSpec {
     import graft.operators.AnnIndex
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     def slice(d: Int) = e.filter(col("vec_id") % 5 === d)
-    val work = java.nio.file.Files.createTempDirectory("graft_anntombchain_")
+    val work = SparkSpec.tempDir("graft_anntombchain_")
     val pq = work.resolve("pq").toString
     // root on slice 0, then three appends EACH carrying a tombstone set
     // — layer 3 RE-ADDS the ids layer 1 tombstoned (legal LSM re-add:
@@ -602,7 +602,7 @@ class PqSpec extends SparkSpec {
     val evens = e.filter(col("vec_id") % 2 === 0)
     val odds = e.filter(col("vec_id") % 2 === 1)
     val q = e.filter(col("vec_id") % 50 === 1)
-    val work = java.nio.file.Files.createTempDirectory("graft_annempty_")
+    val work = SparkSpec.tempDir("graft_annempty_")
     val pq = work.resolve("pq").toString
     val ivfp = work.resolve("ivfp").toString
     // delete EVERYTHING, then compact: the compacted root carries zero
@@ -632,7 +632,7 @@ class PqSpec extends SparkSpec {
   test("a cyclic parent pointer in a tampered sidecar fails loudly, never loops") {
     import graft.operators.AnnIndex
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val work = java.nio.file.Files.createTempDirectory("graft_anncycle_")
+    val work = SparkSpec.tempDir("graft_anncycle_")
     val path = work.resolve("pq").toString
     AnnIndex.buildPq(e.filter(col("vec_id") % 2 === 0), path)
     val v2 = AnnIndex.appendPq(e.filter(col("vec_id") % 2 === 1), path)

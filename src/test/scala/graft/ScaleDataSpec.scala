@@ -14,7 +14,7 @@ class ScaleDataSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val out = {
-    val dir = java.nio.file.Files.createTempDirectory("scale2").toString
+    val dir = SparkSpec.tempDir("scale2").toString
     ScaleData.scaleAll(spark, "/root/testdata/sf0.001", dir, 2)
     dir
   }

@@ -22,7 +22,7 @@ class SnapshotIOSpec extends SparkSpec {
     spark.read.parquet(path).head().getString(0)
 
   test("swap replaces dst atomically-enough and leaves no backup behind") {
-    val work = java.nio.file.Files.createTempDirectory("swap").toString
+    val work = SparkSpec.tempDir("swap").toString
     writeDir(s"$work/snap", "old")
     writeDir(s"$work/tmp", "new")
     SnapshotIO.swap(conf, s"$work/tmp", s"$work/snap")
@@ -32,7 +32,7 @@ class SnapshotIOSpec extends SparkSpec {
   }
 
   test("recover restores the backup when a crash struck between renames") {
-    val work = java.nio.file.Files.createTempDirectory("rec").toString
+    val work = SparkSpec.tempDir("rec").toString
     writeDir(s"$work/snap", "old")
     // Simulate a crash after rename(dst, bak) but before rename(tmp, dst):
     // dst is gone, only the backup survives.
@@ -46,7 +46,7 @@ class SnapshotIOSpec extends SparkSpec {
   }
 
   test("a mid-swap bucket crash does not flip the next tick into an init rebuild") {
-    val work = java.nio.file.Files.createTempDirectory("rec2").toString
+    val work = SparkSpec.tempDir("rec2").toString
     val status = s"$work/status"
     val landing = Landing(
       nvd = Some(res("nvd_page.json")),
@@ -77,7 +77,7 @@ class SnapshotIOSpec extends SparkSpec {
   }
 
   test("update tick refreshes sources beyond epss/kev/nvd (ADVICE r1)") {
-    val work = java.nio.file.Files.createTempDirectory("allsrc").toString
+    val work = SparkSpec.tempDir("allsrc").toString
     val status = s"$work/status"
     CveJob.runTick(spark,
       Landing(nvd = Some(res("nvd_page.json"))),

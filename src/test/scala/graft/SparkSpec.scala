@@ -11,6 +11,15 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** A fresh, unique work dir under the suite JVM's PID-scoped scratch
+    * dir ([[Scratch.dir]]), so every spec's stores are removed at JVM
+    * exit instead of accumulating in java.io.tmpdir. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val root = java.nio.file.Paths.get(Scratch.dir("graft_specs"))
+    java.nio.file.Files.createDirectories(root)
+    java.nio.file.Files.createTempDirectory(root, prefix)
+  }
+
   lazy val session: SparkSession = {
     val s = GraftSession.build("4")
     s.sparkContext.setLogLevel("WARN")

@@ -30,7 +30,7 @@ class StreamingLatenessSpec extends SparkSpec {
     q.recentProgress.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
 
   test("q91 torture: shuffled file waves, late beyond-horizon rows dropped and accounted") {
-    val work = java.nio.file.Files.createTempDirectory("ooo_tumbling").toString
+    val work = SparkSpec.tempDir("ooo_tumbling").toString
     val src = s"$work/in"; val out = s"$work/out"; val ckpt = s"$work/ckpt"
 
     // Wave files are landed and drained ONE AT A TIME against the same
@@ -100,7 +100,7 @@ class StreamingLatenessSpec extends SparkSpec {
   }
 
   test("q109 torture: a late row merges into its still-open window copy, loses the closed one") {
-    val work = java.nio.file.Files.createTempDirectory("ooo_sliding").toString
+    val work = SparkSpec.tempDir("ooo_sliding").toString
     val src = s"$work/in"; val out = s"$work/out"; val ckpt = s"$work/ckpt"
 
     // Sliding 1h/30m: every event owns TWO window copies whose ends

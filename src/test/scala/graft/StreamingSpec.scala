@@ -117,7 +117,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("T3/T4: AvailableNow drains a file backlog through the idempotent merge sink") {
-    val work = java.nio.file.Files.createTempDirectory("stream").toString
+    val work = SparkSpec.tempDir("stream").toString
     val srcDir = s"$work/in"; val snap = s"$work/snapshot"; val ckpt = s"$work/ckpt"
     // batch 1 lands before the stream starts (backlog)
     Seq(("CVE-1", 0.1), ("CVE-2", 0.2)).toDF("id", "epss")
@@ -209,7 +209,7 @@ class StreamingSpec extends SparkSpec {
 
   test("curated sink: file backlog drains to a deduped snapshot; re-delivery converges") {
     import graft.streaming.DocsStream
-    val work = java.nio.file.Files.createTempDirectory("docstream").toString
+    val work = SparkSpec.tempDir("docstream").toString
     val src = s"$work/in"; val snap = s"$work/curated"; val ckpt = s"$work/ckpt"
     val good = "the quick brown fox jumps over the lazy dog again and again"
     val b1 = Seq(
@@ -298,7 +298,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.DocsStream
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "text")
-    val work = java.nio.file.Files.createTempDirectory("graft_store_idem_")
+    val work = SparkSpec.tempDir("graft_store_idem_")
     scala.sys.addShutdownHook(graft.sources.Landing.deleteNoFollow(work.toFile))
     val idx = "file:" + work.resolve("idx")
     val store = java.nio.file.Files.createDirectory(work.resolve("shingles")).toString
@@ -360,7 +360,7 @@ class StreamingSpec extends SparkSpec {
   test("shingle store: a re-arriving doc supersedes its stored shingles (LWW)") {
     import graft.operators.{BandIndex, Dedup}
     import graft.streaming.DocsStream
-    val work = java.nio.file.Files.createTempDirectory("graft_store_lww_")
+    val work = SparkSpec.tempDir("graft_store_lww_")
     scala.sys.addShutdownHook(graft.sources.Landing.deleteNoFollow(work.toFile))
     val idx = "file:" + work.resolve("idx")
     val store = java.nio.file.Files.createDirectory(work.resolve("shingles")).toString

@@ -11,7 +11,7 @@ class TrainingExportSpec extends SparkSpec {
   test("deterministic sharded JSONL export with verifiable manifest") {
     val docs = Tables.load(spark, dir, "documents")
     val n = docs.count()
-    val work = java.nio.file.Files.createTempDirectory("texport").toString
+    val work = SparkSpec.tempDir("texport").toString
 
     val m1 = TrainingExport.exportJsonl(docs, s"$work/a", numShards = 4)
     val m2 = TrainingExport.exportJsonl(docs, s"$work/b", numShards = 4)
@@ -68,7 +68,7 @@ class TrainingExportSpec extends SparkSpec {
     val assigned = TrainingExport.assignShards(docs, 4)
     val frame = TrainingExport.manifestOf(assigned, xxhash64(to_json(struct($"doc_id", $"text"))))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val work = java.nio.file.Files.createTempDirectory("texport93").toString
+    val work = SparkSpec.tempDir("texport93").toString
     val collected = TrainingExport.exportJsonl(docs, s"$work/c", numShards = 4)
     assert(frame == collected)
   }

@@ -10,7 +10,7 @@ class WatermarksSpec extends SparkSpec {
   private def ts(s: String) = Timestamp.from(Instant.parse(s))
 
   test("K3/T2: upsert + read-back round-trip, per-source isolation") {
-    val dir = java.nio.file.Files.createTempDirectory("wm").toString + "/status"
+    val dir = SparkSpec.tempDir("wm").toString + "/status"
     assert(Watermarks.lastUpdated(spark, dir, "nvd").isEmpty)
     Watermarks.upsert(spark, dir, "nvd", ts("2025-04-01T00:00:00Z"))
     Watermarks.upsert(spark, dir, "epss", ts("2025-04-02T00:00:00Z"),
@@ -25,7 +25,7 @@ class WatermarksSpec extends SparkSpec {
   }
 
   test("T3: window start falls back to 24h lookback on cold start") {
-    val dir = java.nio.file.Files.createTempDirectory("wm2").toString + "/status"
+    val dir = SparkSpec.tempDir("wm2").toString + "/status"
     val now = ts("2025-04-10T12:00:00Z")
     assert(Watermarks.windowStart(spark, dir, "nvd", now) == ts("2025-04-09T12:00:00Z"))
     Watermarks.upsert(spark, dir, "nvd", ts("2025-04-10T00:00:00Z"))
@@ -33,8 +33,8 @@ class WatermarksSpec extends SparkSpec {
   }
 
   test("upsertAll: one read-modify-swap equals sequential upserts; preserves omitted stamps") {
-    val a = java.nio.file.Files.createTempDirectory("wm3").toString + "/batched"
-    val b = java.nio.file.Files.createTempDirectory("wm3").toString + "/sequential"
+    val a = SparkSpec.tempDir("wm3").toString + "/batched"
+    val b = SparkSpec.tempDir("wm3").toString + "/sequential"
     // seed both with a stored upstream stamp the batch must NOT clobber
     Seq(a, b).foreach { d =>
       Watermarks.upsert(spark, d, "epss", ts("2025-04-01T00:00:00Z"),
@@ -55,7 +55,7 @@ class WatermarksSpec extends SparkSpec {
     assert(Watermarks.sourceLastUpdate(spark, a, "kev").get == ts("2025-03-31T06:00:00Z"))
     assert(Watermarks.sourceLastUpdate(spark, a, "job").isEmpty)
     // empty batch: no-op, creates nothing
-    val c = java.nio.file.Files.createTempDirectory("wm3").toString + "/empty"
+    val c = SparkSpec.tempDir("wm3").toString + "/empty"
     Watermarks.upsertAll(spark, c, Seq.empty)
     assert(!new java.io.File(c).exists())
   }
