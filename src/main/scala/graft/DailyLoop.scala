@@ -309,13 +309,12 @@ object DailyLoop {
     // the one-marker crash model comes from the batch stamp: a re-run
     // whose batch already sits at the committed head skips the step —
     // duplicate PQ codes would DOUBLE ADC sums, so this skip is load-
-    // bearing, not an optimization. checkDisjoint stays off — the
-    // loop's delta contract (new vec_ids only) is the stream's own
-    // invariant, and the O(corpus) id scan would break the tick's
-    // O(delta) claim — but the contract is still SELF-ENFORCING: the
-    // append probes the delta against the chain's per-layer id blooms
-    // (O(delta), map-only) and a violation aborts the tick loudly
-    // instead of silently doubling sums (AnnIndex.guardDisjoint).
+    // bearing, not an optimization. The loop's delta contract (new
+    // vec_ids only) is the stream's own invariant, and the append keeps
+    // it SELF-ENFORCING at O(delta): it probes the delta against the
+    // chain's per-layer id blooms (map-only) and pays the exact id scan
+    // only on a hit, so a violation aborts the tick loudly instead of
+    // silently doubling sums (AnnIndex.guardStats).
     // A zero-row delta skips the whole step (one limit-1 probe): a
     // day-zero build on it would train an EMPTY codebook and poison
     // every later append; an append of it would only grow the chain.
@@ -410,7 +409,7 @@ object DailyLoop {
             // refresh-only tick whose store emptied out (the degrade
             // case) must not publish a pointless empty layer
             if (annDelta.nonEmpty || annRem.nonEmpty)
-              operators.AnnIndex.appendPq(liveEmb, p.ann, checkDisjoint = false,
+              operators.AnnIndex.appendPq(liveEmb, p.ann,
                 batchId = Some(batchId), removals = annRem)
         }
       }
@@ -442,8 +441,7 @@ object DailyLoop {
               batchId = Some(batchId), trainOn = labeled)
           else if (annDelta.nonEmpty || annRem.nonEmpty)
             operators.AnnIndex.appendIvfPostings(liveEmb, p.annPost,
-              batchId = Some(batchId), checkDisjoint = false,
-              removals = annRem)
+              batchId = Some(batchId), removals = annRem)
         }
       } else if (liveEmb.columns.contains("label") &&
                  !liveEmb.limit(1).isEmpty) {
@@ -874,6 +872,24 @@ object DailyLoop {
     if (mine) { f.delete(lp, false); () }
   }
 
+  /** Run `body` as this store's single writer: a contending writer fails
+    * HERE, loudly, before touching any store; a daemon [[LeaseHeartbeat]]
+    * keeps the lease fresh THROUGH long ticks (an O(corpus) compaction
+    * tick must not look abandoned mid-run) and is handed to `body` to
+    * check; the lease is released (if still ours) on every exit. `tag`
+    * marks the holder id (`host:pid:<tag>uuid`), e.g. "once:" for a
+    * one-shot run. */
+  def withLease[A](spark: SparkSession, p: Paths, tag: String,
+                   staleMs: Long = LeaseStaleMs)(body: LeaseHeartbeat => A): A = {
+    val holder = java.net.InetAddress.getLocalHost.getHostName +
+      ":" + ProcessHandle.current().pid() + ":" + tag +
+      java.util.UUID.randomUUID()
+    acquireLease(spark, p, holder, staleMs)
+    val hb = new LeaseHeartbeat(spark, p, holder, staleMs)
+    try body(hb)
+    finally { hb.close(); releaseLease(spark, p, Some(holder)) }
+  }
+
   /** The scheduler loop (T1/T6 shape, marker clock): tick when due,
     * sleep otherwise, stop cooperatively. Returns ticks run. BOTH
     * inputs are per-tick functions of the tick seq — a long-running
@@ -895,17 +911,8 @@ object DailyLoop {
            leaseStaleMs: Long = LeaseStaleMs,
            annRefreshEvery: Int = 0,
            trainSampleMax: Long = 0L): Int = {
-    // single-writer lease: a second contending loop fails HERE, loudly,
-    // before touching any store; a daemon heartbeat keeps the lease
-    // fresh THROUGH long ticks (an O(corpus) compaction tick must not
-    // look abandoned mid-run), checked every pass; release on exit
-    val holder = java.net.InetAddress.getLocalHost.getHostName +
-      ":" + ProcessHandle.current().pid() +
-      ":" + java.util.UUID.randomUUID()
-    acquireLease(spark, p, holder, leaseStaleMs)
-    val hb = new LeaseHeartbeat(spark, p, holder, leaseStaleMs)
-    var ticks = 0
-    try {
+    withLease(spark, p, "", leaseStaleMs) { hb =>
+      var ticks = 0
       while (!shouldStop()) {
         // liveness is the background heartbeat's job (it refreshes and
         // ownership-verifies every staleMs/3); the loop only surfaces
@@ -927,7 +934,7 @@ object DailyLoop {
           ticks += 1
         } else Thread.sleep(sleepMs)
       }
-    } finally { hb.close(); releaseLease(spark, p, Some(holder)) }
-    ticks
+      ticks
+    }
   }
 }

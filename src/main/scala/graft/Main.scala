@@ -760,13 +760,7 @@ object Main {
       // as the loop (with a heartbeat through the tick), so a one-shot
       // run can neither interleave with a running loop nor with a
       // second concurrent --once against the same root
-      val holder = java.net.InetAddress.getLocalHost.getHostName +
-        ":" + ProcessHandle.current().pid() + ":once:" +
-        java.util.UUID.randomUUID()
-      DailyLoop.acquireLease(spark, p, holder)
-      val hb = new DailyLoop.LeaseHeartbeat(spark, p, holder,
-        DailyLoop.LeaseStaleMs)
-      try {
+      DailyLoop.withLease(spark, p, "once:") { hb =>
         val seq = DailyLoop.committedTick(spark, p)._1 + 1
         val tickNow = clock()
         DailyLoop.runTick(spark, landing(seq, tickNow), delta(seq), p, tickNow,
@@ -779,7 +773,7 @@ object Main {
         // surface a loss the heartbeat observed during the tick's last
         // step loudly, even though the tick itself is already done
         hb.check()
-      } finally { hb.close(); DailyLoop.releaseLease(spark, p, Some(holder)) }
+      }
       Log.success(f"[Job] Finished in ${(System.nanoTime() - t0) / 1e9}%.2f seconds.", "main")
       1
     } else {

@@ -15,6 +15,13 @@ import org.apache.spark.sql.functions._
   * A crashed build leaves an uncommitted directory that is invisible to
   * readers and swept by the next successful publish.
   *
+  * Both chains — PQ (root `books`, layer `codes`) and IVF postings
+  * (root `centroids`, layer `postings`) — share one lifecycle: every
+  * base version is one [[VersionedChain.publish]], [[appendLayer]] is
+  * the one guarded layer append and [[compactLayers]] the one chain
+  * compaction. Each public operation keeps only its chain-kind check,
+  * payload writer and sidecar text.
+  *
   * Why this exists: at 100 TB a quantizer is a BUILD artifact refreshed
   * on the corpus-publish cadence (nightly, with the band index), not
   * per-query work. q61/q86 retrain codebooks/centroids inside each query
@@ -69,22 +76,21 @@ object AnnIndex {
   /** Publish the layer's id-membership Bloom filter beside its data
     * (BEFORE the sidecar commit — a committed layer always has one).
     * This is what makes the append-disjointness contract SELF-ENFORCING
-    * at O(delta): a `checkDisjoint = false` append probes the delta's
-    * ids against the chain's blooms (a map-only filter over the delta)
-    * and only a hit — real or the filter's bounded false-positive —
-    * pays the exact id scan. Geometry scales with the layer (~12
-    * bits/key, clamped to [2^20, 2^28] bits = 16 KiB–32 MiB): a layer
-    * past the cap saturates and DEGRADES the guard to the exact scan,
-    * never to silence. Ids are read back from the just-written parquet
-    * (one columnar id scan), not recomputed from lineage. */
+    * at O(delta): every append probes the delta's ids against the
+    * chain's blooms (a map-only filter over the delta) and only a hit —
+    * real or the filter's bounded false-positive — pays the exact id
+    * scan. Geometry scales with the layer (~12 bits/key, clamped to
+    * [2^20, 2^28] bits = 16 KiB–32 MiB): a layer past the cap saturates
+    * and DEGRADES the guard to the exact scan, never to silence. Ids are
+    * read back from the just-written parquet (one columnar id scan), not
+    * recomputed from lineage. */
   private def writeIdBloom(spark: SparkSession, vd: Path,
-                           ids: DataFrame, n0: Option[Long] = None): Unit = {
+                           ids: DataFrame, keys: Long): Unit = {
     // `ids` may carry duplicates (setting the same bits twice is a
-    // no-op), so PQ call sites skip the read-back distinct() shuffle and
-    // size the filter from the parquet row count instead (rows = m ×
-    // distinct ids by the pqEncode contract) — one metadata-speed count
-    // replaces a full distinct per published layer (r21).
-    val n = math.max(n0.getOrElse(ids.count()), 1L)
+    // no-op), so call sites skip the read-back distinct() shuffle and
+    // size the filter from a count they already have, any count ≥ the
+    // distinct ids (r21)
+    val n = math.max(keys, 1L)
     val numBits = {
       val want = n * 12L
       val clamped = math.min(math.max(want, 1L << 20), 1L << 28)
@@ -123,10 +129,10 @@ object AnnIndex {
     }
   }
 
-  /** The O(delta) disjointness guard for `checkDisjoint = false`
-    * appends: bloom-prefilter the delta's ids against every chain
-    * layer; only a suspicious id (or a bloom-less legacy layer) runs
-    * `exact` — the chain id scan — and a REAL duplicate fails loudly.
+  /** The O(delta) disjointness guard of every append ([[appendLayer]]):
+    * bloom-prefilter the delta's ids against every chain layer; only a
+    * suspicious id (or a bloom-less legacy layer) runs the exact chain
+    * id scan, and a REAL duplicate fails loudly.
     * A violated monotone-stream contract can therefore no longer
     * silently double ADC sums or posting candidates; the clean common
     * case stays one map-only pass over the delta.
@@ -299,18 +305,11 @@ object AnnIndex {
           }
         } else units
       val books = Similarity.pqTrain(trainUnits, m, subLen, numCodes, trainIters)
-      val next = store.claimVersion(spark, path)
-      val vd = store.vdir(path, next)
-      books.write.mode("overwrite").parquet(new Path(vd, "books").toString)
-      Similarity.pqEncode(units, books, m, subLen)
-        .write.mode("overwrite").parquet(new Path(vd, "codes").toString)
-      val codesBack = spark.read.parquet(new Path(vd, "codes").toString)
-      writeIdBloom(spark, vd, codesBack.select("id"),
-        Some(codesBack.count() / m)) // rows = m × ids (pqEncode contract)
-      store.commit(spark, path, next,
-        s"pq $m $subLen $numCodes ti=$trainIters${batchSuffix(batchId)}")
-      store.prune(spark, path, next)
-      next
+      store.publish(spark, path) { vd =>
+        writeBase(spark, vd, "books", books, "codes",
+          Similarity.pqEncode(units, books, m, subLen), m)(writeParquet)
+        s"pq $m $subLen $numCodes ti=$trainIters${batchSuffix(batchId)}"
+      }
     } finally { units.unpersist(); () }
     }
   }
@@ -330,14 +329,13 @@ object AnnIndex {
     * ([[foldLayers]]); a changed vector is therefore `removals` +
     * `delta` carrying the same id in ONE call (the LSM delete+put),
     * and a deleted id may be re-appended by any later layer.
-    * `checkDisjoint` enforces liveness-disjointness with one id-column
-    * scan of the chain (columnar: the probe-side cost class, not a
-    * raw-vector scan); disabling it switches to the O(delta) bloom
-    * guard rather than to trust ([[guardDisjoint]]).
+    * [[appendLayer]] enforces the contract at O(delta): a clean append
+    * pays one bloom probe of the delta's ids ([[guardStats]]), and only
+    * a hit pays the exact id scan of the chain (columnar: the probe-side
+    * cost class, not a raw-vector scan).
     * Returns the committed version. */
   def appendPq(delta: DataFrame, path: String,
                idCol: String = "vec_id", vecCol: String = "embedding",
-               checkDisjoint: Boolean = true,
                batchId: Option[Long] = None,
                removals: Option[DataFrame] = None): Int = {
     val spark = delta.sparkSession
@@ -346,70 +344,60 @@ object AnnIndex {
     // (lazy) liveness scan — the r22 control-plane rule
     val info = loadChain(spark, path)
     val p = pqParamsOf(info) // also proves a committed pq chain exists
-    val parent = info.head
-    val books = pqBooksOf(spark, info)
+    val books = rootData(spark, info, "books")
     val units = Similarity
       .unitVectors(Spread.ensureParallel(delta), Seq(idCol -> "id"), vecCol, "unit")
-    // the guard and the emptiness probe need only the delta's ids — the
-    // raw id column, not the normalized unit vectors (r22: the bloom
-    // pass used to L2-normalize every vector just to read its id)
+    appendLayer(spark, "appendPq", info, "codes", delta, idCol, removals,
+      s"pq-delta ${info.head} ${p.m} ${p.subLen} ${p.numCodes} " +
+        s"ti=${p.trainIters}${batchSuffix(batchId)}") {
+      writeParquet(Similarity.pqEncode(units, books, p.m, p.subLen), _)
+    }
+    }
+  }
+
+  /** The one layer append behind [[appendPq]] and [[appendIvfPostings]]:
+    * guard, claim, payload, tombs, bloom, commit (`meta` names the
+    * parent). [[guardStats]]' one aggregate is the guard, the emptiness
+    * probe and the bloom sizing count; only a bloom hit runs the exact
+    * scan — the folded chain's ids minus this call's own tombstones (the
+    * LSM delete+put re-adds them legally), joined to the delta as an
+    * existence test. `write` lands the `name` payload (`codes` /
+    * `postings`) only for a non-empty delta: a zero-row dynamic write
+    * would leave a _SUCCESS-only directory that kills parquet schema
+    * inference in every later fold. A removal-only layer is tombs plus
+    * a bloom of the empty id set ([[layerData]] reads it as tombs-only).
+    * No prune: ancestors stay live until the next base collapses the
+    * chain. Returns the committed version. */
+  private def appendLayer(spark: SparkSession, op: String, info: ChainInfo,
+                          name: String, delta: DataFrame, idCol: String,
+                          removals: Option[DataFrame], meta: String)
+                         (write: Path => Unit): Int = {
+    val path = info.path
+    // raw ids, not the normalized unit vectors (r22)
     val deltaIds = delta.select(col(idCol).as("id"))
     val rem = removals.map(_.select(col(idCol).as("id")).distinct())
-    // ids tombstoned by THIS layer are legal to re-add in it — exclude
-    // them from the liveness scan (the delete+put flow)
-    def liveIds = {
-      val ids = foldLayers(spark, path, info.chain, "codes").select("id").distinct()
-      rem.map(r => ids.join(broadcast(r), Seq("id"), "left_anti")).getOrElse(ids)
-    }
-    def exactDup = liveIds
-      .join(org.apache.spark.sql.functions.broadcast(deltaIds), "id")
-      .limit(1).count()
-    // BOTH modes go through the O(delta) bloom prefilter (r21): blooms
-    // have no false negatives, so the exact chain id scan runs only on
-    // a hit (a real duplicate, or the filter's bounded false positive)
-    // — checkDisjoint keeps its exact, loud semantics while a clean
-    // append pays one map-only pass over the delta instead of an
-    // O(chain) scan per append (the q137 chain-depth cost was exactly
-    // this scan; guide §3.2's prefilter move). ONE aggregate serves the
-    // guard, the emptiness probe and the bloom sizing count (r22).
     val (deltaCount, suspicious) = guardStats(spark, path, info.chain, deltaIds)
-    if (suspicious) require(exactDup == 0L,
-      if (checkDisjoint)
-        s"appendPq under $path: delta contains ids already encoded in the " +
-          "chain — replace them via the removals tombstone set"
-      else
-        s"appendPq under $path: delta contains ids already in the chain — " +
-          "changed vectors need a rebuild, not an append")
+    if (suspicious) {
+      val live = foldLayers(spark, path, info.chain, name).select("id")
+      val dups = rem.map(r => live.join(broadcast(r), Seq("id"), "left_anti"))
+        .getOrElse(live).join(broadcast(deltaIds), "id").limit(1).count()
+      require(dups == 0L,
+        s"$op under $path: delta contains ids already in the chain (already " +
+          "encoded in a live layer) — replace them via the removals tombstone set")
+    }
     val next = store.claimVersion(spark, path)
     val vd = store.vdir(path, next)
-    // A REMOVAL-ONLY layer (empty delta + tombstones — the daily loop's
-    // vec_removals-without-embeddings tick) writes NO codes dataset at
-    // all: a zero-row dynamic write would leave a directory holding only
-    // _SUCCESS, and the bloom read-back (and every later chain fold)
-    // would die on parquet schema inference — permanently wedging the
-    // tick that hit it. layerData's existence probe already treats a
-    // codes-less layer as tombs-only; the bloom is built from the empty
-    // id set directly so later O(delta) guards stay bloom-backed.
-    val hasData = deltaCount > 0
-    if (hasData)
-      Similarity.pqEncode(units, books, p.m, p.subLen)
-        .write.mode("overwrite").parquet(new Path(vd, "codes").toString)
-    rem.foreach(_.write.mode("overwrite")
-      .parquet(new Path(vd, "tombs").toString))
-    if (hasData) {
-      // bloom from the read-back (one columnar id scan), sized from the
-      // guard's delta count (≥ distinct ids — oversizing only lowers the
-      // false-positive rate) instead of a second count job (r22)
-      val codesBack = spark.read.parquet(new Path(vd, "codes").toString)
-      writeIdBloom(spark, vd, codesBack.select("id"), Some(deltaCount))
-    } else writeIdBloom(spark, vd, deltaIds, Some(0L))
-    store.commit(spark, path, next,
-      s"pq-delta $parent ${p.m} ${p.subLen} ${p.numCodes} " +
-        s"ti=${p.trainIters}${batchSuffix(batchId)}")
-    // no prune: every ancestor layer stays live until the next full
-    // rebuild collapses the chain
+    val data = new Path(vd, name)
+    if (deltaCount > 0) write(data)
+    rem.foreach(writeParquet(_, new Path(vd, "tombs")))
+    // bloom from the read-back (one columnar id scan), sized from the
+    // guard's delta count (≥ distinct ids — oversizing only lowers the
+    // false-positive rate) instead of a second count job (r22)
+    writeIdBloom(spark, vd,
+      if (deltaCount > 0) spark.read.parquet(data.toString).select("id") else deltaIds,
+      deltaCount)
+    store.commit(spark, path, next, meta)
     next
-    }
   }
 
   /** Collapse the layer chain WITHOUT retraining: the root's books and
@@ -427,24 +415,46 @@ object AnnIndex {
     graft.JobLabel(spark, s"ann compactPq $path") {
     val info = loadChain(spark, path)
     val p = pqParamsOf(info)
-    val batch = splitBatch(info.headMeta.split(" "))._2
-    // plain reads, no pinning: the source versions stay on disk (prune
-    // keeps the old head's chain), and each relation is consumed by
-    // exactly one write — a checkpoint here would be an O(corpus) copy
-    val books = pqBooksOf(spark, info)
-    val codes = foldLayers(spark, path, info.chain, "codes")
-    val next = store.claimVersion(spark, path)
-    val vd = store.vdir(path, next)
-    books.write.mode("overwrite").parquet(new Path(vd, "books").toString)
-    codes.write.mode("overwrite").parquet(new Path(vd, "codes").toString)
-    val codesBack = spark.read.parquet(new Path(vd, "codes").toString)
-    writeIdBloom(spark, vd, codesBack.select("id"),
-      Some(codesBack.count() / p.m)) // rows = m × ids (pqEncode contract)
-    store.commit(spark, path, next,
-      s"pq ${p.m} ${p.subLen} ${p.numCodes} ti=${p.trainIters}${batchSuffix(batch)}")
-    store.prune(spark, path, next)
-    next
+    compactLayers(spark, info, "books", "codes", p.m,
+      s"pq ${p.m} ${p.subLen} ${p.numCodes} ti=${p.trainIters}")(writeParquet)
     }
+
+  /** The one chain compaction behind [[compactPq]] and
+    * [[compactIvfPostings]]: a new base holding the chain root's
+    * quantizer `root` (`books` / `centroids`) as-is and the folded
+    * `name` data (`codes` / `postings`) through the kind's `write`, its
+    * bloom sized from the read-back's count / `rowsPerId` ([[writeBase]]).
+    * The sidecar is `meta` plus the HEAD's batch stamp, so a tick that
+    * compacts stays idempotent under crash re-run. Plain reads, no
+    * pinning: the source versions stay on disk (prune keeps the old
+    * head's chain), and each relation is consumed by exactly one write —
+    * a checkpoint here would be an O(corpus) copy. */
+  private def compactLayers(spark: SparkSession, info: ChainInfo, root: String,
+                            name: String, rowsPerId: Int, meta: String)
+                           (write: (DataFrame, Path) => Unit): Int = {
+    val batch = splitBatch(info.headMeta.split(" "))._2
+    store.publish(spark, info.path) { vd =>
+      writeBase(spark, vd, root, rootData(spark, info, root), name,
+        foldLayers(spark, info.path, info.chain, name), rowsPerId)(write)
+      meta + batchSuffix(batch)
+    }
+  }
+
+  /** A base version's datasets in `vd`: the quantizer under `root`, the
+    * id-keyed `data` under `name` through `write`, and the data's id
+    * bloom from the read-back, sized row count / `rowsPerId` (m rows per
+    * id for PQ codes by the pqEncode contract, one for postings). */
+  private def writeBase(spark: SparkSession, vd: Path, root: String,
+                        quantizer: DataFrame, name: String, data: DataFrame,
+                        rowsPerId: Int)(write: (DataFrame, Path) => Unit): Unit = {
+    writeParquet(quantizer, new Path(vd, root))
+    write(data, new Path(vd, name))
+    val back = spark.read.parquet(new Path(vd, name).toString)
+    writeIdBloom(spark, vd, back.select("id"), back.count() / rowsPerId)
+  }
+
+  private def writeParquet(df: DataFrame, dir: Path): Unit =
+    df.write.mode("overwrite").parquet(dir.toString)
 
   /** Train + publish an IVF centroid table (cell, centroid) from the
     * label-seeded exact Lloyd refinement (the q87 construction). */
@@ -456,12 +466,10 @@ object AnnIndex {
       Spread.ensureParallel(corpus), Seq(idCol -> "id", cellCol -> "cell"), vecCol)
     val cents = Similarity.kmeansRefineExact(
       units, Similarity.exactCentroids(units), refineIters)
-    val next = store.claimVersion(spark, path)
-    cents.write.mode("overwrite")
-      .parquet(new Path(store.vdir(path, next), "centroids").toString)
-    store.commit(spark, path, next, s"ivf $refineIters")
-    store.prune(spark, path, next)
-    next
+    store.publish(spark, path) { vd =>
+      writeParquet(cents, new Path(vd, "centroids"))
+      s"ivf $refineIters"
+    }
   }
 
   /** A sidecar's trailing `key=value` tokens — `batch=<id>` (the
@@ -530,10 +538,12 @@ object AnnIndex {
     * were encoded against, so a probe mixing layers always ranks with
     * one consistent quantizer. */
   def pqBooks(spark: SparkSession, path: String): DataFrame =
-    pqBooksOf(spark, loadChain(spark, path))
+    rootData(spark, loadChain(spark, path), "books")
 
-  private def pqBooksOf(spark: SparkSession, info: ChainInfo): DataFrame =
-    spark.read.parquet(new Path(store.vdir(info.path, info.chain.last), "books").toString)
+  /** A dataset of the chain ROOT — the quantizer every layer was built
+    * against (`books` / `centroids`). */
+  private def rootData(spark: SparkSession, info: ChainInfo, name: String): DataFrame =
+    spark.read.parquet(new Path(store.vdir(info.path, info.chain.last), name).toString)
 
   /** A layer's optional dataset (codes/postings/tombs) — delta layers
     * may carry any subset; a chain root always carries its data. */
@@ -595,7 +605,7 @@ object AnnIndex {
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val info = loadChain(spark, path)
     val p = pqParamsOf(info)
-    Similarity.pqTopKFrom(pqBooksOf(spark, info),
+    Similarity.pqTopKFrom(rootData(spark, info, "books"),
       foldLayers(spark, path, info.chain, "codes"),
       queries, k, p.m, p.subLen, idCol, vecCol)
   }
@@ -704,18 +714,13 @@ object AnnIndex {
       val seed = seedPinned.getOrElse(units)
       val cents = Similarity.kmeansRefineExact(
         seed, Similarity.exactCentroids(seed), refineIters)
-      val next = store.claimVersion(spark, path)
-      val vd = store.vdir(path, next)
-      cents.write.mode("overwrite").parquet(new Path(vd, "centroids").toString)
-      writePostings(units.drop("cell")
-        .join(Similarity.assignCellsAgg(units, cents)
-          .select(col("id"), col("assigned_cell").as("cell")), "id"),
-        new Path(vd, "postings"), cellTaskCap)
-      writeIdBloom(spark, vd, spark.read
-        .parquet(new Path(vd, "postings").toString).select("id"))
-      store.commit(spark, path, next, s"ivfp $refineIters${batchSuffix(batchId)}")
-      store.prune(spark, path, next)
-      next
+      store.publish(spark, path) { vd =>
+        writeBase(spark, vd, "centroids", cents, "postings", units.drop("cell")
+          .join(Similarity.assignCellsAgg(units, cents)
+            .select(col("id"), col("assigned_cell").as("cell")), "id"),
+          1)(writePostings(_, _, cellTaskCap))
+        s"ivfp $refineIters${batchSuffix(batchId)}"
+      }
     } finally { units.unpersist(); seedPinned.foreach(_.unpersist()); () }
     }
   }
@@ -749,11 +754,7 @@ object AnnIndex {
     * layers were assigned against them, so probes must rank with the
     * same quantizer. */
   def ivfpCentroids(spark: SparkSession, path: String): DataFrame =
-    ivfpCentroidsOf(spark, ivfpInfo(spark, path))
-
-  private def ivfpCentroidsOf(spark: SparkSession, info: ChainInfo): DataFrame =
-    spark.read.parquet(
-      new Path(store.vdir(info.path, info.chain.last), "centroids").toString)
+    rootData(spark, ivfpInfo(spark, path), "centroids")
 
   /** The posting relation (id, unit, cell), cell-partitioned on disk —
     * every layer down the chain, minus ids tombstoned by a later layer
@@ -766,13 +767,15 @@ object AnnIndex {
   /** O(delta) posting-store ingest: assign the delta against the chain
     * ROOT's pinned centroids and publish its cell-partitioned postings
     * as a parent-linked layer — [[appendPq]]'s semantics for the
-    * inverted file. New ids only (the appendPq contract); a changed
-    * vector needs the rebuild path. Returns the committed version. */
+    * inverted file. The appendPq contract: a LIVE re-appended id would
+    * surface the same candidate at two ranks in every probe, so
+    * [[appendLayer]] rejects it loudly; a changed vector is `removals` +
+    * `delta` carrying the same id in one call. Returns the committed
+    * version. */
   def appendIvfPostings(delta: DataFrame, path: String,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding",
                         batchId: Option[Long] = None,
-                        checkDisjoint: Boolean = true,
                         cellTaskCap: Long = PostingCellTaskCap,
                         removals: Option[DataFrame] = None): Int = {
     val spark = delta.sparkSession
@@ -780,57 +783,14 @@ object AnnIndex {
     // ONE chain load serves parent, centroids, the guard and the (lazy)
     // liveness scan — the r22 control-plane rule
     val info = ivfpInfo(spark, path)
-    val parent = info.head
-    val cents = ivfpCentroidsOf(spark, info)
+    val cents = rootData(spark, info, "centroids")
     val units = Similarity.unitVectors(
       Spread.ensureParallel(delta), Seq(idCol -> "id"), vecCol)
-    // the guard and the emptiness probe need only the delta's raw ids,
-    // not the normalized unit vectors (r22)
-    val deltaIds = delta.select(col(idCol).as("id"))
-    val rem = removals.map(_.select(col(idCol).as("id")).distinct())
-    // the appendPq contract: a LIVE re-appended id would surface the
-    // same candidate at two ranks in every probe — loud reject; ids
-    // tombstoned by this very layer are the delete+put flow and legal.
-    // Exact scan when checkDisjoint; the O(delta) bloom guard otherwise.
-    def liveIds = {
-      val ids = foldLayers(spark, path, info.chain, "postings").select("id")
-      rem.map(r => ids.join(broadcast(r), Seq("id"), "left_anti")).getOrElse(ids)
-    }
-    def exactDup = liveIds
-      .join(broadcast(deltaIds), "id")
-      .limit(1).count()
-    // the appendPq rule (r21): bloom prefilter for both modes, exact
-    // scan only on a hit — O(delta) per clean append at any chain depth.
-    // ONE aggregate serves guard + emptiness + bloom sizing (r22).
-    val (deltaCount, suspicious) = guardStats(spark, path, info.chain, deltaIds)
-    if (suspicious) require(exactDup == 0L,
-      if (checkDisjoint)
-        s"appendIvfPostings under $path: delta contains ids already in " +
-          "the posting chain — replace them via the removals tombstone set"
-      else
-        s"appendIvfPostings under $path: delta contains ids already in " +
-          "the chain — changed vectors need a rebuild, not an append")
-    val next = store.claimVersion(spark, path)
-    val vd = store.vdir(path, next)
-    // removal-only layer: skip the postings dataset entirely (the
-    // appendPq rule — a zero-row dynamic-partitioned write would leave
-    // an inference-poison _SUCCESS-only directory) and bloom the empty
-    // id set so later O(delta) guards stay bloom-backed
-    val hasData = deltaCount > 0
-    if (hasData)
+    appendLayer(spark, "appendIvfPostings", info, "postings", delta, idCol,
+      removals, s"ivfp-delta ${info.head}${batchSuffix(batchId)}") {
       writePostings(units.join(Similarity.assignCellsAgg(units, cents)
-          .select(col("id"), col("assigned_cell").as("cell")), "id"),
-        new Path(vd, "postings"), cellTaskCap)
-    rem.foreach(_.write.mode("overwrite")
-      .parquet(new Path(vd, "tombs").toString))
-    writeIdBloom(spark, vd,
-      if (hasData) spark.read
-        .parquet(new Path(vd, "postings").toString).select("id")
-      else deltaIds,
-      Some(deltaCount)) // ≥ distinct ids — sizing-safe, no second count job
-    store.commit(spark, path, next, s"ivfp-delta $parent${batchSuffix(batchId)}")
-    // no prune: ancestors stay live until a rebuild/compaction collapses
-    next
+        .select(col("id"), col("assigned_cell").as("cell")), "id"), _, cellTaskCap)
+    }
     }
   }
 
@@ -843,22 +803,10 @@ object AnnIndex {
                          cellTaskCap: Long = PostingCellTaskCap): Int =
     graft.JobLabel(spark, s"ann compactIvfPostings $path") {
     val info = ivfpInfo(spark, path)
-    // params from the ROOT sidecar, batch stamp from the HEAD (the
-    // compactPq rule: a compacting tick must stay idempotent on re-run)
-    val (rootParts, _) = splitBatch(info.rootMeta.split(" "))
-    val batch = splitBatch(info.headMeta.split(" "))._2
-    val cents = ivfpCentroidsOf(spark, info)
-    val posts = foldLayers(spark, path, info.chain, "postings")
-    val next = store.claimVersion(spark, path)
-    val vd = store.vdir(path, next)
-    cents.write.mode("overwrite").parquet(new Path(vd, "centroids").toString)
-    writePostings(posts, new Path(vd, "postings"), cellTaskCap)
-    writeIdBloom(spark, vd, spark.read
-      .parquet(new Path(vd, "postings").toString).select("id"))
-    store.commit(spark, path, next,
-      s"${rootParts.mkString(" ")}${batchSuffix(batch)}")
-    store.prune(spark, path, next)
-    next
+    // params from the ROOT sidecar (compactLayers adds the HEAD's batch)
+    compactLayers(spark, info, "centroids", "postings", 1,
+      splitBatch(info.rootMeta.split(" "))._1.mkString(" "))(
+      writePostings(_, _, cellTaskCap))
     }
 
   /** Multi-probe IVF top-k against the persisted posting lists —
@@ -884,7 +832,7 @@ object AnnIndex {
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(nprobe > 0, "postingsTopK: nprobe must be positive")
     val info = ivfpInfo(spark, path)
-    val cents = ivfpCentroidsOf(spark, info)
+    val cents = rootData(spark, info, "centroids")
     val qu = Similarity.unitVectors(queries, Seq(idCol -> "query_id"), vecCol, "qu")
     val probeW = Window.partitionBy(col("query_id"))
       .orderBy(col("psim").desc, col("c_cell").asc)

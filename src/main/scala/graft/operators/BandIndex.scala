@@ -123,20 +123,19 @@ object BandIndex {
     require(buckets > 0, s"buckets ($buckets) must be positive")
     val spark = corpusSh.sparkSession
     val l = Layout(buckets, numHashes, bands)
-    val next = store.claimVersion(spark, path)
-    bandRows(corpusSh, l)
-      .withColumn(BucketCol, bucketOf(col("band"), col("bkey"), buckets))
-      // cluster each bucket into one task before the partitioned write:
-      // without this every shuffle partition writes a sliver into every
-      // bucket directory (buckets × partitions tiny files — 2k at sf0.1,
-      // and the same small-files explosion on a cluster); with it the
-      // file count is O(buckets) and the probe opens one file per
-      // touched directory
-      .repartition(buckets, col(BucketCol))
-      .write.partitionBy(BucketCol).mode("overwrite")
-      .parquet(store.vdir(path, next).toString)
-    store.commit(spark, path, next, metaText(l))
-    store.prune(spark, path, next)
+    store.publish(spark, path) { vd =>
+      bandRows(corpusSh, l)
+        .withColumn(BucketCol, bucketOf(col("band"), col("bkey"), buckets))
+        // cluster each bucket into one task before the partitioned write:
+        // without this every shuffle partition writes a sliver into every
+        // bucket directory (buckets × partitions tiny files — 2k at sf0.1,
+        // and the same small-files explosion on a cluster); with it the
+        // file count is O(buckets) and the probe opens one file per
+        // touched directory
+        .repartition(buckets, col(BucketCol))
+        .write.partitionBy(BucketCol).mode("overwrite").parquet(vd.toString)
+      metaText(l)
+    }
   }
 
   /** Band a shingle relation under a layout — the ONE banding used by

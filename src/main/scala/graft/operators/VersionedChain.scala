@@ -28,6 +28,12 @@ private[operators] final case class ChainInfo(path: String, chain: Seq[Int],
   * live chains. A crashed build leaves an uncommitted directory that is
   * invisible to readers and swept by the next prune.
   *
+  * A BASE version (a full build or a compaction) is one [[publish]]
+  * call: claim, write, commit, prune. A LAYER append calls
+  * [[claimVersion]] and [[commit]] itself: an AnnIndex layer prunes
+  * nothing (every ancestor stays live until the next base), and a
+  * BandIndex layer re-checks the head between its write and its commit.
+  *
   * Only two things differ between the stores, both fixed by the owning
   * module: the sidecar file name, and how a sidecar's tokens name its
   * parent version (`None` for a base). Sidecar TEXT, data formats and
@@ -95,6 +101,19 @@ private[operators] final class VersionedChain(metaFile: String,
     val out = f.create(tmp, true)
     try out.write(meta.getBytes(StandardCharsets.UTF_8)) finally out.close()
     require(f.rename(tmp, new Path(vd, metaFile)), s"sidecar commit rename failed under $vd")
+  }
+
+  /** Publish a base version: claim the next number, hand its directory
+    * to `write`, commit the sidecar text `write` returns, then [[prune]].
+    * Returns the committed version. A `write` that throws leaves the
+    * claimed version uncommitted — invisible to readers, the head
+    * unchanged — and the next publish's prune sweeps its directory and
+    * claim file. */
+  def publish(spark: SparkSession, path: String)(write: Path => String): Int = {
+    val next = claimVersion(spark, path)
+    commit(spark, path, next, write(vdir(path, next)))
+    prune(spark, path, next)
+    next
   }
 
   /** One sidecar read that doubles as the commit probe: a missing sidecar

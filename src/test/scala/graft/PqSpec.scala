@@ -440,19 +440,55 @@ class PqSpec extends SparkSpec {
     AnnIndex.buildPq(base, pq)
     AnnIndex.buildIvfPostings(base, ivfp, refineIters = 1)
     // a clean disjoint delta passes without the exact chain scan
-    AnnIndex.appendPq(delta, pq, checkDisjoint = false)
-    AnnIndex.appendIvfPostings(delta, ivfp, checkDisjoint = false)
+    AnnIndex.appendPq(delta, pq)
+    AnnIndex.appendIvfPostings(delta, ivfp)
     // a violated contract — re-appending ids the chain already holds —
     // fails LOUDLY even with the exact check opted out: this is the
     // silent-ADC-doubling class the guard exists for
     val e1 = intercept[IllegalArgumentException] {
-      AnnIndex.appendPq(base.limit(5), pq, checkDisjoint = false)
+      AnnIndex.appendPq(base.limit(5), pq)
     }
     assert(e1.getMessage.contains("already in the chain"))
     val e2 = intercept[IllegalArgumentException] {
-      AnnIndex.appendIvfPostings(delta.limit(5), ivfp, checkDisjoint = false)
+      AnnIndex.appendIvfPostings(delta.limit(5), ivfp)
     }
     assert(e2.getMessage.contains("already in the chain"))
+  }
+
+  test("delete+put in one call: live ids appended with their own tombstones replace in place on both stores") {
+    import graft.operators.AnnIndex
+    val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val changed = e.filter(col("vec_id") % 10 === 0) // all live in the base
+    val q = e.filter(col("vec_id") % 50 === 1)
+    val work = SparkSpec.tempDir("graft_annput_")
+    val pq = work.resolve("pq").toString
+    val ivfp = work.resolve("ivfp").toString
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val ids = Some(changed.select("vec_id"))
+
+    // every re-appended id is live, so the bloom guard hits and the
+    // exact chain scan runs: it must exclude the ids this very layer
+    // tombstones, or the legal delete+put would be rejected
+    AnnIndex.buildPq(e, pq)
+    val codes = AnnIndex.pqCodes(spark, pq).count()
+    AnnIndex.appendPq(changed, pq, removals = ids)
+    assert(AnnIndex.pqChain(spark, pq).length == 2)
+    assert(AnnIndex.pqCodes(spark, pq).count() == codes) // no duplicates
+    val books = AnnIndex.pqBooks(spark, pq)
+    val truth = Similarity.pqTopKFrom(books, Similarity.pqEncode(
+      Similarity.unitVectors(e, Seq("vec_id" -> "id")), books, 4, 16), q, k = 5)
+    assert(rows(AnnIndex.pqTopK(spark, pq, q, k = 5)) == rows(truth)
+      && truth.count() > 0)
+
+    AnnIndex.buildIvfPostings(e, ivfp, refineIters = 1)
+    val posts = AnnIndex.ivfpPostings(spark, ivfp).count()
+    val oneShot = rows(AnnIndex.postingsTopK(spark, ivfp, q, k = 3, nprobe = 2))
+    AnnIndex.appendIvfPostings(changed, ivfp, removals = ids)
+    assert(AnnIndex.ivfpChain(spark, ivfp).length == 2)
+    assert(AnnIndex.ivfpPostings(spark, ivfp).count() == posts)
+    assert(rows(AnnIndex.postingsTopK(spark, ivfp, q, k = 3, nprobe = 2)) == oneShot
+      && oneShot.nonEmpty)
   }
 
   test("tombstone layers: deletes hide ids at probe, replace in one call, drop physically at compaction, re-add revives") {

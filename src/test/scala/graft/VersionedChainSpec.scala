@@ -39,6 +39,22 @@ class VersionedChainSpec extends SparkSpec {
     val names = root.listFiles.map(_.getName).toSet
     assert(names.contains("v-00001") && names.contains("v-00003"), names)
     assert(!names.contains("v-00002") && !names.contains(".claim-v-00002"), names)
+    // a publish whose WRITER throws after its claim — here a posting
+    // build whose corpus fails inside the posting write, after the
+    // centroids landed — leaves the committed head untouched, and the
+    // next publish sweeps the dead version's directory and claim
+    val poisoned = e.withColumn("embedding",
+      raise_error(lit("injected writer failure")).cast("array<float>"))
+    intercept[Exception] {
+      AnnIndex.buildIvfPostings(poisoned, path, trainOn = Some(e))
+    }
+    val dead = root.listFiles.map(_.getName).toSet
+    assert(dead.contains("v-00004") && dead.contains(".claim-v-00004"), dead)
+    assert(AnnIndex.isBuilt(spark, path) && AnnIndex.pqChain(spark, path) == Seq(3))
+    assert(AnnIndex.buildPq(e, path) == 5)
+    val swept = root.listFiles.map(_.getName).toSet
+    assert(swept.contains("v-00003") && swept.contains("v-00005"), swept)
+    assert(!swept.contains("v-00004") && !swept.contains(".claim-v-00004"), swept)
   }
 
   test("band index: a cyclic parent pointer in a tampered sidecar fails loudly, never loops") {
