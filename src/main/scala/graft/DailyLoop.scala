@@ -17,22 +17,25 @@ import graft.streaming.DocsStream
   * compacts the index chain when it exceeds the cadence threshold — then
   * commits the tick atomically.
   *
-  * Crash model — ONE commit point per tick. A tick touches six stores
-  * (CVE snapshot, watermark table, pair snapshot, shingle store, band
-  * index, PQ ann index); giving each its own "done" flag would create
-  * crash windows
-  * where half a tick is visible and the other half re-runs under a new
-  * batch id (doubling shingle rows — exactly the corruption class the
-  * round-8 verdict flagged in the old store). Instead a tick COMMITS by
-  * atomically creating one marker file (`tick-<seq>-<millis>`, the
-  * VersionedChain claim-file pattern); every step before that is idempotent
-  * under a full re-run with the SAME batch id (= committed seq + 1):
-  * the K1 merge is a keyed upsert, the pair snapshot a keyed upsert,
-  * the shingle store a wholesale overwrite of the tick's own
-  * `batch=<id>` partition (partials from a crashed attempt are swept at
-  * tick start — any partition above the committed seq is by definition
-  * uncommitted), and a double layer append only duplicates postings,
-  * which probes distinct() away and the next compaction collapses.
+  * Crash model — ONE commit point per tick. A tick touches the eight
+  * stores of [[Paths]]: the CVE snapshot, the watermark table, the pair
+  * snapshot, the shingle store, the band index, the PQ and IVF-posting
+  * ANN chains and the raw-vector store. Two store protocols carry most
+  * of that state: [[operators.BatchStore]] (the shingle and raw-vector
+  * stores: batch partitions, LWW tombstones, sweep, consolidation) and
+  * [[operators.VersionedChain]] (the band index and both ANN chains:
+  * claimed versions, sidecar commit, prune). Giving each store its own
+  * "done" flag would create crash windows where half a tick is visible
+  * and the other half re-runs under a new batch id (doubling shingle
+  * rows). Instead a tick COMMITS by atomically creating one marker file
+  * (`tick-<seq>-<millis>` under `ticks/`, the VersionedChain claim-file
+  * pattern); every step before that is idempotent under a full re-run
+  * with the SAME batch id (= committed seq + 1): the K1 merge is a keyed
+  * upsert, the pair snapshot a keyed upsert, a batch store write a
+  * wholesale overwrite of the tick's own partition (partials from a
+  * crashed attempt are swept at tick start), and a double layer append
+  * only duplicates postings, which probes distinct() away and the next
+  * compaction collapses.
   * So: crash anywhere before the marker → the whole tick re-runs and
   * converges to the state a crash-free run would have produced
   * (DailyLoopSpec injects a crash after every step and asserts exactly
@@ -78,78 +81,19 @@ object DailyLoop {
     val ticks    = s"$root/ticks"      // tick marker files (commit points)
   }
 
-  /** On-disk schema of the raw-vector store — the landed embedding
-    * deltas, one `batch=<id>` directory per tick (the shingle-store
-    * pattern: idempotent wholesale overwrite of the tick's own
-    * partition, partials above the committed seq swept at tick start).
-    * This store is the ANN artifacts' REBUILD SOURCE: PQ codes are
-    * lossy and postings pin their quantizer, so posting-store seeding
-    * (which must cover vectors from label-less EARLIER ticks, not just
-    * the seeding delta) and any retraining refresh read raw vectors
-    * from here — the ANN analog of the shingle store feeding index
-    * compaction. `label` is nullable: a label-less delta stores null. */
-  val VecsSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)),
-      org.apache.spark.sql.types.StructField("label",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("batch",
-        org.apache.spark.sql.types.LongType)))
-
-  /** Full-corpus read of the raw-vector store: committed batches up to
-    * `upToBatch`, latest stored batch per vec_id (the LWW supersede rule
-    * of [[DocsStream.storeShingles]]). */
-  def storeVectors(spark: SparkSession, vecs: String,
-                   upToBatch: Long): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("vec_id")
-    spark.read.schema(VecsSchema).parquet(vecs)
-      .filter(col("batch") <= lit(upToBatch))
-      .withColumn("latest", max("batch").over(w))
-      .filter(col("batch") === col("latest"))
-      // a vec whose latest row is the null-embedding tombstone is
-      // deleted (the shingle store's LWW delete rule); re-landing the
-      // id later supersedes the tombstone
-      .filter(col("embedding").isNotNull)
-      .select("vec_id", "embedding", "label")
+  /** The raw-vector store: the landed embedding deltas (`label` is
+    * nullable — a label-less delta stores null), the embedding the
+    * tombstone column, no buckets. It is the ANN artifacts' REBUILD
+    * SOURCE: PQ codes are lossy and postings pin their quantizer, so
+    * posting-store seeding (which must cover vectors from label-less
+    * EARLIER ticks) and any retraining refresh read raw vectors from
+    * here. Format and rules: [[operators.BatchStore]]. */
+  def vecStore(path: String): operators.BatchStore = {
+    import org.apache.spark.sql.types._
+    operators.BatchStore(path, "vec_id", Seq(
+      StructField("embedding", ArrayType(FloatType)),
+      StructField("label", IntegerType)))
   }
-
-  /** Vector-store consolidation (the physical vec delete): the
-    * COMMITTED live rows — latest committed version per id, ids whose
-    * committed tombstone is newest gone — republished as ONE partition
-    * stamped with the committed batch, while the IN-FLIGHT tick's own
-    * partition is carried across the swap VERBATIM (tombstone rows
-    * included). Consolidating only committed data is what keeps the
-    * partial-sweep invariant honest: a tick that crashes before its
-    * marker and re-runs with a different delta finds every one of its
-    * rows still in a sweepable `batch=` partition, never baked into
-    * committed-looking data ([[DocsStream.consolidateStore]]'s rule).
-    * Same crash-safe whole-dir swap; rides the ANN compaction
-    * cadence. */
-  private def consolidateVecs(spark: SparkSession, p: Paths,
-                              committedBatch: Long, inflightBatch: Long): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = p.vecs + "_rebuild_tmp"
-    val f = fs(spark, tmp)
-    f.delete(new Path(tmp), true)
-    f.mkdirs(new Path(tmp))
-    // unconditional writes (the consolidateStore rule): an emptiness
-    // probe would run the O(corpus) LWW window twice, and empty
-    // partitions are harmless under the fixed-schema reads
-    storeVectors(spark, p.vecs, committedBatch)
-      .write.mode("overwrite").parquet(s"$tmp/batch=$committedBatch")
-    spark.read.schema(VecsSchema).parquet(p.vecs)
-      .filter(col("batch") === lit(inflightBatch))
-      .select("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$tmp/batch=$inflightBatch")
-    SnapshotIO.swap(conf, tmp, p.vecs)
-  }
-
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val Marker = """tick-(\d+)-(\d+)""".r
 
@@ -158,7 +102,7 @@ object DailyLoop {
     * truth (the watermark table is freshness metadata for P11 consumers,
     * not a commit flag). */
   def committedTick(spark: SparkSession, p: Paths): (Long, Option[Timestamp]) = {
-    val f = fs(spark, p.ticks)
+    val f = SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, p.ticks)
     val dir = new Path(p.ticks)
     if (!f.exists(dir)) (0L, None)
     else {
@@ -183,25 +127,6 @@ object DailyLoop {
       case None => true
       case Some(last) =>
         now.getTime - last.getTime >= (intervalHours * 3600 * 1000).toLong
-    }
-
-  /** Sweep shingle- and vector-store partitions above the committed
-    * seq: they can only be a crashed attempt's partial append (a
-    * committed tick's partition is by construction ≤ its marker's
-    * seq). */
-  private def sweepPartials(spark: SparkSession, p: Paths, committed: Long): Unit =
-    Seq(p.store, p.vecs).foreach { store =>
-      val f = fs(spark, store)
-      val dir = new Path(store)
-      if (f.exists(dir)) f.listStatus(dir).toSeq
-        .filter(_.isDirectory).map(_.getPath)
-        .filter { d =>
-          d.getName.split("=", 2) match {
-            case Array("batch", v) => scala.util.Try(v.toLong).toOption.exists(_ > committed)
-            case _ => false
-          }
-        }
-        .foreach(f.delete(_, true))
     }
 
   /** One daily tick. Steps, in order: (1) K1 merge of the landed CVE
@@ -235,14 +160,12 @@ object DailyLoop {
     leaseCheck()
     val (committed, _) = committedTick(spark, p)
     val batchId = committed + 1
-    // heal stores a crashed compaction consolidation left mid-swap —
-    // BEFORE the sweep lists them or any layout probe reads them
-    SnapshotIO.recover(spark.sparkContext.hadoopConfiguration, p.store)
-    SnapshotIO.recover(spark.sparkContext.hadoopConfiguration, p.vecs)
-    // day-zero store dir: the verify read's fixed schema needs a path to
-    // exist even before the first partition lands
-    fs(spark, p.store).mkdirs(new Path(p.store))
-    sweepPartials(spark, p, committed)
+    val shingles = DocsStream.shingleStore(p.store)
+    val vecs = vecStore(p.vecs)
+    // heal both batch stores (a consolidation left mid-swap, a crashed
+    // attempt's partitions) BEFORE any step reads them
+    shingles.heal(spark, committed)
+    vecs.heal(spark, committed)
     // heal a pair snapshot a crashed compaction rebuild left mid-swap —
     // BEFORE any layout probe (a missing dir would read as day zero)
     SnapshotIO.recover(spark.sparkContext.hadoopConfiguration, p.pairs)
@@ -334,29 +257,17 @@ object DailyLoop {
       JobLabel(spark, s"tick $batchId: ann") {
       val emb = annDelta.getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(VecsSchema.take(2))))
+        org.apache.spark.sql.types.StructType(vecs.schema.take(2))))
       // a vec id both landed and removed this tick: the removal WINS
       // (the doc-side rule); replace-in-place is expressed as remove in
       // tick N, re-land in tick N+1
       val liveEmb = annRem
         .map(r => emb.join(r, Seq("vec_id"), "left_anti")).getOrElse(emb)
       // (2a') the raw-vector store FIRST: the live delta plus one
-      // null-embedding tombstone row per removed vec lands wholesale in
-      // the tick's own batch partition (idempotent overwrite; partials
-      // swept at tick start), so the ANN steps below — and any later
-      // seed or retraining rebuild — read one consistent live corpus
-      // that includes this tick. O(delta) per tick; the store as a
-      // whole is the corpus's vector table, the rebuild source PQ
-      // codes (lossy) and postings (quantizer-pinned) cannot be.
-      val stamped = liveEmb.withColumn("label",
-          (if (liveEmb.columns.contains("label")) col("label")
-           else lit(null)).cast("int"))
-        .select("vec_id", "embedding", "label")
-      annRem.map(r => stamped.unionByName(r.select(col("vec_id"),
-          lit(null).cast("array<float>").as("embedding"),
-          lit(null).cast("int").as("label"))))
-        .getOrElse(stamped)
-        .write.mode("overwrite").parquet(s"${p.vecs}/batch=$batchId")
+      // tombstone row per removed vec, so the ANN steps below — and any
+      // later seed or retraining rebuild — read one consistent live
+      // corpus that includes this tick. O(delta) per tick.
+      vecs.write(batchId, liveEmb, annRem)
       // The PQ step (2b') and the posting-store step (2c) touch DISJOINT
       // artifact stores and only READ the shared vector store, so they
       // run CONCURRENTLY (guide §2.6; the indexedDedupTick append pair's
@@ -385,7 +296,7 @@ object DailyLoop {
         // empty (everything deleted): training on zero rows would
         // publish a poison empty codebook — the day-zero guard's rule
         val refreshCorpusPq =
-          if (refreshDue) Some(storeVectors(spark, p.vecs, batchId))
+          if (refreshDue) Some(vecs.live(spark, batchId))
             .filter(!_.limit(1).isEmpty)
           else None
         refreshCorpusPq match {
@@ -432,7 +343,7 @@ object DailyLoop {
           // the refresh event retrains the posting store's quantizer
           // too, when the live store still has labeled seed rows
           val refreshCorpus =
-            if (refreshDue) Some(storeVectors(spark, p.vecs, batchId))
+            if (refreshDue) Some(vecs.live(spark, batchId))
             else None
           val labeled = refreshCorpus.map(_.filter(col("label").isNotNull))
           if (refreshCorpus.nonEmpty && !labeled.get.limit(1).isEmpty)
@@ -445,7 +356,7 @@ object DailyLoop {
         }
       } else if (liveEmb.columns.contains("label") &&
                  !liveEmb.limit(1).isEmpty) {
-        val corpus = storeVectors(spark, p.vecs, batchId)
+        val corpus = vecs.live(spark, batchId)
         operators.AnnIndex.buildIvfPostings(corpus, p.annPost,
           batchId = Some(batchId),
           trainOn = Some(corpus.filter(col("label").isNotNull)))
@@ -458,11 +369,8 @@ object DailyLoop {
       if (operators.AnnIndex.isBuilt(spark, p.ann) &&
           operators.AnnIndex.pqChain(spark, p.ann).length > annMaxChain) {
         operators.AnnIndex.compactPq(spark, p.ann)
-        // the vector store consolidates on the same cadence: live rows
-        // republished as ONE committed-stamped partition, tombstones
-        // and removed vectors physically gone (crash-safe whole-dir
-        // swap, healed at tick start)
-        consolidateVecs(spark, p, committed, batchId)
+        // the vector store consolidates on the same cadence
+        vecs.consolidate(spark, committed, batchId)
       }
       if (operators.AnnIndex.isBuilt(spark, p.annPost) &&
           operators.AnnIndex.ivfpChain(spark, p.annPost).length > annMaxChain)
@@ -488,7 +396,7 @@ object DailyLoop {
     // pair-verification pass every time.
     if (BandIndex.chainLength(spark, p.index) > maxChain) JobLabel(spark, s"tick $batchId: compact") {
       val l = BandIndex.layout(spark, p.index)
-      val corpusSh = DocsStream.storeShingles(spark, p.store, batchId)
+      val corpusSh = shingles.live(spark, batchId)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         if (pairRebuildEvery <= 0)
@@ -501,9 +409,8 @@ object DailyLoop {
         // pinned corpus frame: the swap DELETES the old batch=*
         // files, and a lost-executor recompute of corpusSh mid-write
         // would otherwise chase them. Committed deletions become
-        // PHYSICAL here (the in-flight partition — its tombstones
-        // included — rides across the swap sweepable, see
-        // consolidateStore). Consolidation must NEVER outrun the pair
+        // PHYSICAL here (BatchStore.consolidate). Consolidation must
+        // NEVER outrun the pair
         // rebuild: it erases the committed tombstones livePairs
         // anti-joins, so dropping them while dead pairs still sit in
         // the snapshot would RESURRECT those pairs until the next
@@ -512,7 +419,7 @@ object DailyLoop {
         // index write and this swap merely defers it to that next
         // cadence, tombstones intact.
         if (pairRebuildEvery <= 0)
-          DocsStream.consolidateStore(spark, p.store, committed, batchId)
+          shingles.consolidate(spark, committed, batchId)
       } finally { corpusSh.unpersist(); () }
     }
     // (3b) decoupled pair retention: keyed on the BATCH id, not the
@@ -522,12 +429,12 @@ object DailyLoop {
     // when retention is decoupled (see the invariant above).
     if (pairRebuildEvery > 0 && batchId % pairRebuildEvery == 0) JobLabel(spark, s"tick $batchId: pair retention") {
       val l = BandIndex.layout(spark, p.index)
-      val corpusSh = DocsStream.storeShingles(spark, p.store, batchId)
+      val corpusSh = shingles.live(spark, batchId)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         DocsStream.rebuildPairs(corpusSh, p.pairs, threshold,
           l.numHashes, l.bands, lit(now.toString).cast("timestamp"))
-        DocsStream.consolidateStore(spark, p.store, committed, batchId)
+        shingles.consolidate(spark, committed, batchId)
       } finally { corpusSh.unpersist(); () }
     }
     if (failAt.contains(AfterCompact)) throw new InjectedCrash(AfterCompact)
@@ -551,7 +458,7 @@ object DailyLoop {
     // plane stays O(KeepMarkers) over years of daily ticks (the max
     // marker is what defines the committed seq, so pruning history
     // never moves it)
-    val f = fs(spark, p.ticks)
+    val f = SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, p.ticks)
     f.mkdirs(new Path(p.ticks))
     f.create(new Path(p.ticks, s"tick-$batchId-${now.getTime}"), false).close()
     f.listStatus(new Path(p.ticks)).toSeq.map(_.getPath).collect {
@@ -670,7 +577,7 @@ object DailyLoop {
     * step, not a whole tick. */
   def acquireLease(spark: SparkSession, p: Paths, holder: String,
                    staleMs: Long = LeaseStaleMs): Unit = {
-    val f = fs(spark, p.root)
+    val f = SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, p.root)
     f.mkdirs(new Path(p.root))
     val lp = leasePath(p)
     val bp = breakerPath(p)
@@ -805,7 +712,7 @@ object DailyLoop {
     * filesystem hiccup instead of killing a healthy writer. */
   def heartbeatLease(spark: SparkSession, p: Paths,
                      holder: Option[String] = None): Unit = {
-    val f = fs(spark, p.root)
+    val f = SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, p.root)
     val lp = leasePath(p)
     holder.foreach { h =>
       val cur =
@@ -866,7 +773,7 @@ object DailyLoop {
     * No holder given = unconditional (operator override / specs). */
   def releaseLease(spark: SparkSession, p: Paths,
                    holder: Option[String] = None): Unit = {
-    val f = fs(spark, p.root)
+    val f = SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, p.root)
     val lp = leasePath(p)
     val mine = holder.forall(h => f.exists(lp) && readLeaseHolder(f, lp) == h)
     if (mine) { f.delete(lp, false); () }

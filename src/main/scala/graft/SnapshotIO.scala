@@ -3,8 +3,10 @@ package graft
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Crash-safe directory swap shared by every snapshot-rewrite site
-  * (CveJob.runTick, Watermarks.upsert, EventsStream.mergeSink).
+/** Crash-safe directory swap shared by every snapshot-rewrite site: the
+  * whole-dir rewrites go through [[replace]] (Watermarks.upsertAll,
+  * EventsStream.mergeSink, DocsStream.rebuildPairs, BatchStore
+  * consolidation), PartitionedSnapshot.mergeDelta swaps per bucket.
   *
   * The naive delete(dst) + rename(tmp, dst) has a window where a crash
   * destroys the snapshot; because init-vs-update mode is inferred from the
@@ -20,12 +22,29 @@ object SnapshotIO {
 
   private def bakPath(dst: String) = new Path(dst + "_bak")
 
+  /** The filesystem OF `path`, not the default one: a store on a URI
+    * whose scheme is not `fs.defaultFS` (an explicit file:/ root under an
+    * HDFS default, an object store) must not fail with "Wrong FS" — or
+    * land its files on the wrong filesystem. */
+  def fs(conf: Configuration, path: String): FileSystem =
+    new Path(path).getFileSystem(conf)
+
+  /** Rebuild the directory at `dst`: clear the staging dir `dst_tmp` (a
+    * crashed earlier attempt may have left it), run `stage` on its path,
+    * then [[swap]] it in. Staging dirs are never read. */
+  def replace(conf: Configuration, dst: String)(stage: String => Unit): Unit = {
+    val tmp = dst + "_tmp"
+    fs(conf, tmp).delete(new Path(tmp), true)
+    stage(tmp)
+    swap(conf, tmp, dst)
+  }
+
   /** Replace the directory at `dst` with the one at `tmp`.
     * Sequence: delete stale backup → dst → backup → tmp → dst → delete
     * backup. A crash at any point leaves either the old snapshot (at dst
     * or at the backup) or the fully-written new one — never nothing. */
   def swap(conf: Configuration, tmp: String, dst: String): Unit = {
-    val fs = FileSystem.get(conf)
+    val fs = this.fs(conf, dst)
     val d = new Path(dst)
     val bak = bakPath(dst)
     // Self-enforcing: if a previous swap crashed between its renames, the
@@ -48,7 +67,7 @@ object SnapshotIO {
     * existence probe that gates init-vs-update behavior. Returns true if
     * a restore happened. */
   def recover(conf: Configuration, dst: String): Boolean = {
-    val fs = FileSystem.get(conf)
+    val fs = this.fs(conf, dst)
     val d = new Path(dst)
     val bak = bakPath(dst)
     if (!fs.exists(d) && fs.exists(bak)) fs.rename(bak, d) else false
@@ -58,7 +77,7 @@ object SnapshotIO {
     * `X_bak` whose `X` is gone) — the per-partition analog of [[recover]]
     * for layouts that swap many directories (PartitionedSnapshot). */
   def recoverAll(conf: Configuration, parent: String): Int = {
-    val fs = FileSystem.get(conf)
+    val fs = this.fs(conf, parent)
     val p = new Path(parent)
     if (!fs.exists(p)) return 0
     fs.listStatus(p).toSeq
@@ -68,11 +87,11 @@ object SnapshotIO {
   }
 
   /** Existence probe through the SAME FileSystem as swap/recover — a
-    * java.io.File check silently disagrees with a non-local
-    * fs.defaultFS and would flip callers into from-scratch rebuild
-    * paths. Non-empty = exists with at least one child. */
+    * java.io.File check silently disagrees with a non-local filesystem
+    * and would flip callers into from-scratch rebuild paths. Non-empty =
+    * exists with at least one child. */
   def nonEmpty(conf: Configuration, dir: String): Boolean = {
-    val fs = FileSystem.get(conf)
+    val fs = this.fs(conf, dir)
     val p = new Path(dir)
     fs.exists(p) && fs.listStatus(p).nonEmpty
   }

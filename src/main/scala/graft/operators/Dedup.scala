@@ -240,11 +240,14 @@ object Dedup {
     // whole upstream candidate generation (banding joins) runs twice.
     // A caller that already pinned its candidates (the dedup tick
     // checkpoints them for its own collect) skips the defensive copy:
-    // re-checkpointing a checkpoint is a pure block-copy job (r22).
-    val cand =
-      if (cand0.queryExecution.analyzed
-            .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) cand0
-      else cand0.localCheckpoint()
+    // re-checkpointing a checkpoint is a pure block-copy job (r22). Only
+    // a CHECKPOINTED RDD counts as pinned — an RDD-backed frame
+    // (createDataFrame over an RDD) is a LogicalRDD too, but recomputes
+    // its lineage per consumer.
+    val cand = cand0.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.isCheckpointed => cand0
+      case _ => cand0.localCheckpoint()
+    }
     val candIds = cand.select(col("a_id").as("doc_id"))
       .union(cand.select(col("b_id").as("doc_id"))).distinct()
     // ONE scan of the shingle relation (r22): the sized relation appears

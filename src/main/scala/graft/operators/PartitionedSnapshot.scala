@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,9 +36,6 @@ object PartitionedSnapshot {
   def bucketOf(key: Column, numBuckets: Int): Column =
     pmod(xxhash64(key), lit(numBuckets.toLong))
 
-  private def fs(spark: SparkSession) =
-    FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
   /** Bucket count AND merge key are layout state, so they live WITH the
     * layout: a sidecar file (`<buckets>\n<key>`), not parameters the
     * caller must keep consistent forever — [[mergeDelta]] validates the
@@ -46,13 +43,15 @@ object PartitionedSnapshot {
     * the wrong key fails loudly instead of scattering rows. */
   private def writeMeta(spark: SparkSession, path: String, n: Int,
                         key: String): Unit = {
-    val out = fs(spark).create(new Path(path, MetaFile), true)
+    val out = graft.SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, path)
+      .create(new Path(path, MetaFile), true)
     try out.write(s"$n\n$key".getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
   private def readMeta(spark: SparkSession, path: String): (Int, String) = {
-    val in = fs(spark).open(new Path(path, MetaFile))
+    val in = graft.SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, path)
+      .open(new Path(path, MetaFile))
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split("\n", 2)
       finally in.close()
@@ -97,7 +96,8 @@ object PartitionedSnapshot {
 
   /** Whether the layout sidecar exists — the day-zero probe. */
   def isInitialized(spark: SparkSession, path: String): Boolean =
-    fs(spark).exists(new Path(path, MetaFile))
+    graft.SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, path)
+      .exists(new Path(path, MetaFile))
 
   /** Day-zero commit of an EMPTY bucketed snapshot: a `partitionBy` write
     * of zero rows produces no partition directories, leaving nothing for
@@ -147,10 +147,11 @@ object PartitionedSnapshot {
       // for a brand-new one. Brand-new buckets (no directory yet) fall
       // back to the full read ONCE for its union schema — at most once
       // per bucket lifetime.
-      graft.SnapshotIO.recoverAll(spark.sparkContext.hadoopConfiguration, path)
-      val hfs0 = fs(spark)
+      val conf = spark.sparkContext.hadoopConfiguration
+      graft.SnapshotIO.recoverAll(conf, path)
+      val hfs = graft.SnapshotIO.fs(conf, path)
       val touchedDirs = touched.map(b => s"$path/$BucketCol=$b")
-        .filter(d => hfs0.exists(new Path(d)))
+        .filter(d => hfs.exists(new Path(d)))
       val snapTouched =
         (if (touchedDirs.nonEmpty)
           // a touched bucket with NO directory yet is brand-new and
@@ -173,9 +174,7 @@ object PartitionedSnapshot {
       // because the upsert is idempotent (T4), re-running the same tick
       // converges the mixed state. At 100 TB a table format's atomic
       // multi-file commit replaces this.
-      val conf = spark.sparkContext.hadoopConfiguration
       val staging = path + "_delta_tmp"
-      val hfs = fs(spark)
       hfs.delete(new Path(staging), true)
       // cluster each bucket into one task before the partitioned write
       // (the BandIndex.write small-files reasoning): without this every

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -100,13 +100,9 @@ object TrainingExport {
     val json = m.map { case (s, r, h) =>
       s"""{"shard":$s,"rows":$r,"content_hash":$h}"""
     }.mkString("[\n", ",\n", "\n]")
-    // Resolve the filesystem OF `path`, not the cluster default FS —
-    // FileSystem.get(conf) would try to write _manifest.json to hdfs://
-    // (or throw "Wrong FS") when exporting to s3a:// etc., while the
-    // shard data (per-path writer) lands correctly.
-    val manifestPath = new Path(path, ManifestFile)
-    val fs = manifestPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(manifestPath, true)
+    // the filesystem OF `path`, like the shard data's per-path writer
+    val out = graft.SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, path)
+      .create(new Path(path, ManifestFile), true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 

@@ -210,5 +210,5 @@ private[operators] object VersionedChain {
     * default-FS sidecar would be missing (or STALE from an older build)
     * exactly when another session reads the store. */
   def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, path)
 }

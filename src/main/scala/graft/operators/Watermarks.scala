@@ -70,10 +70,10 @@ object Watermarks {
     }
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), Schemas.updateStatus)
-    // Write to a temp dir then swap: the source of the read is the target.
-    val tmp = path + "_tmp"
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    graft.SnapshotIO.swap(spark.sparkContext.hadoopConfiguration, tmp, path)
+    // staged then swapped: the source of the read is the target
+    graft.SnapshotIO.replace(spark.sparkContext.hadoopConfiguration, path) { tmp =>
+      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+    }
   }
 
   /** T3: catch-up window start — last success, else now minus the

@@ -112,10 +112,7 @@ object DocsStream {
     spark.read.parquet(snap)
   }
 
-  /** doc_id hash buckets in the persisted shingle store: each batch's
-    * shingles are directory-partitioned on a stable bucket of doc_id
-    * (the PartitionedSnapshot layout move) so the verify read prunes
-    * FILES down to candidate docs' buckets, not just rows. */
+  /** doc_id hash buckets of the shingle store ([[shingleStore]]). */
   val StoreBuckets = 32
 
   /** Hash buckets of the verified-pair snapshot (the K1 bounded-MERGE
@@ -140,10 +137,9 @@ object DocsStream {
     * design, riding the same cadence (and the same persisted
     * corpus-shingle frame) as the index rebuild it accompanies.
     * Crash-safe: the replacement layout (sentinel, buckets, sidecar) is
-    * staged COMPLETELY beside the live snapshot, then moved in with the
-    * whole-dir backup-then-rename swap; [[readPairs]] and the daily tick
-    * heal a mid-swap crash, and a re-run recomputes from the unchanged
-    * store. */
+    * staged COMPLETELY beside the live snapshot, then moved in by
+    * `SnapshotIO.replace`; [[readPairs]] and the daily tick heal a
+    * mid-swap crash, and a re-run recomputes from the unchanged store. */
   def rebuildPairs(corpusSh: DataFrame, snap: String, threshold: Double,
                    numHashes: Int, bands: Int,
                    now: org.apache.spark.sql.Column): Unit = {
@@ -151,126 +147,24 @@ object DocsStream {
     val spark = corpusSh.sparkSession
     val pairs = Dedup.minhashPairsFrom(corpusSh, threshold, numHashes, bands)
       .withColumn("pk", concat_ws(":", col("a_id"), col("b_id")))
-    val tmp = snap + "_rebuild_tmp" // staging must start clean
-    new org.apache.hadoop.fs.Path(tmp)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(tmp), true)
-    // sentinel-first staging: a zero-pair corpus still publishes a
-    // readable (schema-carrying) snapshot
-    PartitionedSnapshot.initEmpty(Merge.init(pairs.limit(0)), tmp,
-      "pk", PairBuckets)
-    PartitionedSnapshot.mergeDelta(spark, tmp, pairs, "pk", now)
-    graft.SnapshotIO.swap(spark.sparkContext.hadoopConfiguration, tmp, snap)
+    graft.SnapshotIO.replace(spark.sparkContext.hadoopConfiguration, snap) { tmp =>
+      // sentinel-first staging: a zero-pair corpus still publishes a
+      // readable (schema-carrying) snapshot
+      PartitionedSnapshot.initEmpty(Merge.init(pairs.limit(0)), tmp,
+        "pk", PairBuckets)
+      PartitionedSnapshot.mergeDelta(spark, tmp, pairs, "pk", now)
+    }
   }
 
-  /** On-disk schema of the shingle store: the exploded (doc_id, shingle)
-    * rows plus the two directory-partition columns — `batch` (which
-    * micro-batch landed the row; the idempotence key) and `doc_bucket`
-    * (the pruning key). Fixed here, never inferred: a day-zero store has
-    * no files to infer from. */
-  val StoreSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("shingle",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("batch",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("doc_bucket",
-        org.apache.spark.sql.types.LongType)))
-
-  /** The verify-side read of the shingle store: STRICTLY-EARLIER batches
-    * (partition filter on `batch` — the in-flight batch is excluded
-    * structurally, so a crash-replayed batch that already appended its
-    * shingles cannot double its own rows in verification) restricted to
-    * the given doc buckets (partition filter on `doc_bucket` — only
-    * files holding candidate docs are opened). Both predicates prune at
-    * the FILE level; StreamingSpec asserts the scan metrics.
-    *
-    * A doc RE-ARRIVING in a later batch (an update, or a daily loop
-    * re-landing an overlapping delta) legitimately exists in several
-    * `batch=` partitions; verification counts raw rows per doc, so the
-    * read keeps each doc's LATEST stored batch only (supersede, the LWW
-    * rule) — the window runs over the already-pruned subset, so its
-    * shuffle is bounded by the candidate docs' buckets, not the store. */
-  def earlierShingles(spark: org.apache.spark.sql.SparkSession, store: String,
-                      batchId: Long, buckets: Seq[Long]): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-    spark.read.schema(StoreSchema).parquet(store)
-      .filter(col("batch") < lit(batchId) &&
-              col("doc_bucket").isin(buckets: _*))
-      .withColumn("latest", max("batch").over(w))
-      .filter(col("batch") === col("latest"))
-      // a doc whose latest row is the NULL-shingle tombstone is deleted:
-      // it contributes no shingles, so verification can never emit a
-      // pair for it (the LWW rule doubling as the delete rule)
-      .filter(col("shingle").isNotNull)
-      .select("doc_id", "shingle")
-  }
-
-  /** Full-corpus read of the shingle store (compaction input): all
-    * committed batches up to and including `upToBatch`, latest stored
-    * batch per doc (same supersede rule as [[earlierShingles]] — a
-    * re-arrived doc's OLD shingles must not union with its new ones). */
-  def storeShingles(spark: org.apache.spark.sql.SparkSession, store: String,
-                    upToBatch: Long): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-    spark.read.schema(StoreSchema).parquet(store)
-      .filter(col("batch") <= lit(upToBatch))
-      .withColumn("latest", max("batch").over(w))
-      .filter(col("batch") === col("latest"))
-      // tombstoned docs (latest row = null shingle) are not part of the
-      // corpus: compaction rebuilds from this read, so the index, the
-      // pair snapshot and the consolidated store all physically drop
-      // them on the compaction cadence
-      .filter(col("shingle").isNotNull)
-      .select("doc_id", "shingle")
-  }
-
-  /** Doc ids whose LATEST stored batch is a removal tombstone — the
-    * delete set live consumers anti-join between compactions. A
-    * tombstone batch writes exactly ONE null-shingle row per removed
-    * doc (and a removed doc's re-arrival supersedes its tombstone), so
-    * "latest batch is null" is exact. Cost is O(tombstoned buckets),
-    * not O(store): the tombstone rows alone are found by a columnar
-    * null scan (parquet null-count stats skip clean pages), their
-    * doc_buckets collected (control-plane, ≤ StoreBuckets values), and
-    * only those buckets' files are read for the latest-batch decision.
-    * After a store consolidation there are no COMMITTED tombstone rows
-    * left — those deletions became physical and the null scan skips
-    * clean pages from metadata.
-    *
-    * CONTRACT on the consolidation cadence: the null scan lists and
-    * footer-probes every `batch=` partition, so its control-plane cost
-    * is O(ticks since the last consolidation). [[consolidateStore]]
-    * (riding the compaction / retention cadence in DailyLoop) is what
-    * bounds that count; a deployment that disables consolidation
-    * entirely (maxChain = ∞ AND pairRebuildEvery = 0) keeps exact
-    * answers but pays a listing that grows one partition per tick —
-    * run a consolidation cadence in any long-lived deployment. */
-  def deletedDocs(spark: org.apache.spark.sql.SparkSession, store: String,
-                  upToBatch: Long): DataFrame =
-    deletedDocsOpt(spark, store, upToBatch)
-      .getOrElse(spark.range(0).select(col("id").as("doc_id")))
-
-  /** [[deletedDocs]] with the no-tombstones case surfaced to the DRIVER
-    * (r22): the null-scan probe already tells it exactly — a None lets
-    * callers skip building (and pinning) anti-join plans that the
-    * optimizer would only collapse after paying their planning cost. */
-  def deletedDocsOpt(spark: org.apache.spark.sql.SparkSession, store: String,
-                     upToBatch: Long): Option[DataFrame] = {
-    val raw = spark.read.schema(StoreSchema).parquet(store)
-      .filter(col("batch") <= lit(upToBatch))
-    val buckets = raw.filter(col("shingle").isNull)
-      .select("doc_bucket").distinct().collect().map(_.getLong(0)).toSeq
-    if (buckets.isEmpty) None
-    else Some(raw.filter(col("doc_bucket").isin(buckets: _*))
-      .groupBy("doc_id")
-      .agg(max("batch").as("latest"),
-           max(when(col("shingle").isNull, col("batch"))).as("tomb"))
-      .filter(col("tomb").isNotNull && col("tomb") === col("latest"))
-      .select("doc_id"))
-  }
+  /** The persisted shingle store: exploded (doc_id, shingle) rows, the
+    * shingle the tombstone column, bucketed on doc_id so the verify read
+    * prunes FILES down to candidate docs' buckets. Format, LWW, delete,
+    * sweep and consolidation rules: [[graft.operators.BatchStore]]. */
+  def shingleStore(path: String): graft.operators.BatchStore =
+    graft.operators.BatchStore(path, "doc_id",
+      Seq(org.apache.spark.sql.types.StructField("shingle",
+        org.apache.spark.sql.types.LongType)),
+      Some(("doc_bucket", StoreBuckets)))
 
   /** The LIVE pair view: verified pairs both of whose endpoints are
     * live (un-tombstoned) docs. This is what makes a delete VISIBLE the
@@ -279,60 +173,11 @@ object DocsStream {
     * compaction rebuild drops them physically. */
   def livePairs(spark: org.apache.spark.sql.SparkSession, snap: String,
                 store: String, upToBatch: Long): DataFrame = {
-    val dels = deletedDocs(spark, store, upToBatch)
+    val dels = shingleStore(store).deleted(spark, upToBatch)
     readPairs(spark, snap)
       .join(dels.select(col("doc_id").as("a_id")), Seq("a_id"), "left_anti")
       .join(dels.select(col("doc_id").as("b_id")), Seq("b_id"), "left_anti")
       .select("a_id", "b_id", "jaccard") // joins moved their keys first
-  }
-
-  /** Shingle-store CONSOLIDATION (the physical doc delete, and the
-    * partition-count bound): the COMMITTED live corpus — latest
-    * committed version of every doc, docs whose committed tombstone is
-    * newest GONE — republished as ONE batch partition stamped with the
-    * committed batch id, while the IN-FLIGHT tick's own `batch=`
-    * partition is carried over UNCHANGED (raw rows, tombstones
-    * included). The split is what keeps the partial-sweep invariant
-    * honest: everything above the committed seq stays in a sweepable
-    * partition. A re-run that VIOLATES the delta-as-function-of-seq
-    * contract (DailyLoop's crash model; `--fetch` enforces it with the
-    * landing marker) therefore cannot leave ghost rows — or ghost
-    * deletes — baked into committed-looking STORE data; derived
-    * artifacts rebuilt from the store (pair snapshot, band index, ANN
-    * chains) converge at their next rebuild cadence, which is the
-    * bounded blast radius of a contract violation, not a supported
-    * flow. A crash re-run simply re-lands
-    * its own partition on top and the LWW read dedups; the whole-dir
-    * swap is the [[rebuildPairs]] crash-safe pattern (healed by
-    * `SnapshotIO.recover` at tick start). Rides the index-compaction /
-    * retention cadence; after it, committed tombstones are physical
-    * and years of daily partitions collapse to two directories. */
-  def consolidateStore(spark: org.apache.spark.sql.SparkSession, store: String,
-                       committedBatch: Long, inflightBatch: Long): Unit = {
-    import graft.operators.PartitionedSnapshot
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = store + "_rebuild_tmp"
-    val f = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-    f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    f.mkdirs(new org.apache.hadoop.fs.Path(tmp))
-    // written UNCONDITIONALLY: an emptiness pre-probe would evaluate
-    // the O(corpus) LWW window twice (limit(1) cannot push below the
-    // window), and an empty partition dir is harmless — every store
-    // read uses the fixed StoreSchema, never inference
-    storeShingles(spark, store, committedBatch)
-      .withColumn("doc_bucket",
-        PartitionedSnapshot.bucketOf(col("doc_id"), StoreBuckets))
-      .repartition(StoreBuckets, col("doc_bucket"))
-      .write.partitionBy("doc_bucket").mode("overwrite")
-      .parquet(s"$tmp/batch=$committedBatch")
-    // O(delta): the in-flight partition rides across the swap verbatim
-    spark.read.schema(StoreSchema).parquet(store)
-      .filter(col("batch") === lit(inflightBatch))
-      .select("doc_id", "shingle", "doc_bucket")
-      .repartition(StoreBuckets, col("doc_bucket"))
-      .write.partitionBy("doc_bucket").mode("overwrite")
-      .parquet(s"$tmp/batch=$inflightBatch")
-    graft.SnapshotIO.swap(conf, tmp, store)
   }
 
   /** ONE probe→verify→upsert→append tick of the indexed streaming dedup
@@ -343,18 +188,14 @@ object DocsStream {
     * state: the pair snapshot is a keyed upsert (absorbs re-probed
     * pairs); the index layer append only duplicates postings (the
     * candidate distinct() ignores them); and the shingle store append is
-    * IDEMPOTENT — the batch's rows land in its own `batch=<id>`
-    * partition directory via a wholesale overwrite, so a re-delivered
-    * batch replaces its earlier (possibly partial) append instead of
-    * doubling it, and the verify read excludes the in-flight partition
-    * by filter rather than by anti-join. Verify counts raw rows per doc,
-    * so doubled store rows would corrupt jaccard — the old append+
-    * anti-join layout left exactly that window between the store append
-    * and the checkpoint commit.
+    * the [[graft.operators.BatchStore]] partition overwrite, so a
+    * re-delivered batch replaces its earlier (possibly partial) append
+    * instead of doubling it, and the verify read excludes the in-flight
+    * partition by filter rather than by anti-join. Verify counts raw rows
+    * per doc, so doubled store rows would corrupt jaccard.
     *
-    * Re-ARRIVING docs (updates) follow the LWW supersede rule on both
-    * store reads (see [[earlierShingles]]/[[storeShingles]]). The pair
-    * snapshot itself is MONOTONE between compactions: a pair whose docs
+    * Re-ARRIVING docs (updates) follow the store's LWW supersede rule on
+    * both store reads. The pair snapshot itself is MONOTONE between compactions: a pair whose docs
     * drift apart on update keeps its last-verified row (re-verified
     * candidates are upserted with fresh values; pairs that fall below
     * threshold are simply not re-emitted). Stale pairs EXPIRE at the
@@ -367,13 +208,11 @@ object DocsStream {
                        removals: Option[DataFrame] = None): Unit = {
     import graft.operators.{BandIndex, Dedup, Merge, PartitionedSnapshot}
     val s = batch.sparkSession
+    val sh = shingleStore(store)
     // the tick's removal set (doc ids to delete): within the tick a
-    // removal WINS over a same-id delta row; deletion materializes as a
-    // single NULL-shingle tombstone row in the tick's own batch
-    // partition — the LWW supersede rule then hides every earlier
-    // shingle of the doc, and a later re-arrival supersedes the
-    // tombstone (deletes are reversible by re-landing the doc).
-    // Multi-consumer and control-plane-small — pinned for the tick.
+    // removal WINS over a same-id delta row; each lands as a store
+    // tombstone. Multi-consumer and control-plane-small — pinned for
+    // the tick.
     val rem = removals.map(_.select("doc_id").distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val live = rem.map(r => batch.join(r, Seq("doc_id"), "left_anti"))
@@ -389,7 +228,7 @@ object DocsStream {
       // candidates referencing docs deleted in EARLIER ticks are dead
       // on arrival — their shingles are tombstoned, so verify would
       // drop them anyway — but left in they inflate the touched-bucket
-      // collect and the pruned store read below. deletedDocs is
+      // collect and the pruned store read below. The deleted-ids read is
       // O(tombstoned buckets) between compactions and empty-from-
       // metadata after one, so this pre-prune is near-free. (The
       // CURRENT tick's removals are handled by the `rem` anti-joins —
@@ -400,13 +239,13 @@ object DocsStream {
       // would leave the doc live in the store with its pairs silently
       // missing until the next full pair rebuild (which may never run).
       // Only docs deleted earlier AND absent from this batch are pruned.
-      val delsOpt = deletedDocsOpt(s, store, batchId)
+      val delsOpt = sh.deletedOpt(s, batchId)
         .map(_.join(bsh.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
       val cand0 = graft.JobLabel(s, "probe candidates") { tick.candidates }
       // When earlier tombstones EXIST, the pruned candidate set is
       // checkpointed here (r21): it feeds the touched-bucket collect
       // below AND the verify join — without the pin the dels anti-join
-      // subtree (including deletedDocs' store aggregate) executed once
+      // subtree (including the deleted-ids store aggregate) executed once
       // per consumer (no subplan CSE). With NO tombstones (the common
       // clean-stream tick) the anti-joins are the identity, so cand0 —
       // already checkpointed by DeltaTick — serves directly (r22: the
@@ -431,13 +270,13 @@ object DocsStream {
           .distinct().collect().map(_.getLong(0)).toSeq.sorted
       }
       // a doc in the CURRENT batch supersedes any stored copy of itself
-      // (earlierShingles already keeps only the latest STORED batch per
+      // (the store read already keeps only the latest STORED batch per
       // doc; this anti-join applies the same LWW rule to the in-flight
       // version) — without it a re-arriving doc counts double in verify.
       // Docs REMOVED this tick are excluded the same way: their
       // tombstone is not stored yet at verify time, and a dead doc must
       // not seed new pairs in the very tick that deletes it.
-      val earlier0 = earlierShingles(s, store, batchId, touched)
+      val earlier0 = sh.liveBefore(s, batchId, touched)
         .join(bsh.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
       val earlier = rem.map(r => earlier0.join(r, Seq("doc_id"), "left_anti"))
         .getOrElse(earlier0)
@@ -470,23 +309,12 @@ object DocsStream {
       // crash model on its own (a doubled layer is distinct()ed away, a
       // re-run store append overwrites its own partition), so overlap
       // changes wall-clock only, never an answer or convergence.
-      val tombRows = rem.map(_.select(col("doc_id"),
-          lit(null).cast("long").as("shingle")))
       graft.Par(
         // the O(batch) daily layer, same band rows
         () => graft.JobLabel(s, "layer append") { tick.append() },
         // idempotent O(batch) store append: the live shingles PLUS one
-        // null-shingle tombstone row per removed doc, clustered per
-        // bucket into one task (same small-files reasoning as
-        // BandIndex.write)
-        () => graft.JobLabel(s, "store append") {
-          tombRows.map(bsh.unionByName(_)).getOrElse(bsh)
-            .withColumn("doc_bucket",
-              PartitionedSnapshot.bucketOf(col("doc_id"), StoreBuckets))
-            .repartition(StoreBuckets, col("doc_bucket"))
-            .write.partitionBy("doc_bucket").mode("overwrite")
-            .parquet(s"$store/batch=$batchId")
-        })
+        // tombstone row per removed doc
+        () => graft.JobLabel(s, "store append") { sh.write(batchId, bsh, rem) })
     } finally { bsh.unpersist(); rem.foreach(_.unpersist()); () }
     ()
   }

@@ -277,10 +277,8 @@ object EventsStream {
             spark.read.parquet(snapshotPath)
           else Merge.init(collapsed.limit(0))
         val merged = Merge.upsert(snapshot, collapsed, key)
-        val tmp = snapshotPath + "_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        graft.SnapshotIO.swap(spark.sparkContext.hadoopConfiguration, tmp, snapshotPath)
-        ()
+        graft.SnapshotIO.replace(spark.sparkContext.hadoopConfiguration,
+          snapshotPath)(merged.write.mode("overwrite").parquet(_))
       }
 
   /** T3: drain everything currently available, then stop (the reference's

@@ -203,7 +203,7 @@ class DailyLoopSpec extends SparkSpec {
     tick(2, Seq.empty[(Long, String)].toDF("doc_id", "text"),
       rem = Some(Seq(2L).toDF("doc_id")))
     assert(live(2).isEmpty, "deleted pair resurrected after compaction")
-    assert(DocsStream.deletedDocs(spark, p.store, 2).count() == 1,
+    assert(DocsStream.shingleStore(p.store).deleted(spark, 2).count() == 1,
       "tombstone must survive a retention-less consolidation window")
     // ticks 3-4: tick 4 hits the retention cadence — pairs rebuilt
     // WITHOUT the dead doc, and only then does the store consolidate
@@ -212,7 +212,7 @@ class DailyLoopSpec extends SparkSpec {
     assert(live(4).isEmpty)
     assert(DocsStream.readPairs(spark, p.pairs).count() == 0,
       "retention must drop the dead pair physically")
-    assert(DocsStream.deletedDocs(spark, p.store, 4).count() == 0,
+    assert(DocsStream.shingleStore(p.store).deleted(spark, 4).count() == 0,
       "consolidation on the retention tick makes the delete physical")
   }
 
@@ -289,8 +289,7 @@ class DailyLoopSpec extends SparkSpec {
       runTick(spark, landing, delta(d), ref, ts(f"2025-04-0$d%d 00:00:00"),
         maxChain = 2))
     val refPairs = pairSet(ref)
-    val refStore = spark.read.schema(graft.streaming.DocsStream.StoreSchema)
-      .parquet(ref.store).select("doc_id", "shingle").collect()
+    val refStore = graft.streaming.DocsStream.shingleStore(ref.store).raw(spark).select("doc_id", "shingle").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
     for (fp <- Seq(AfterMerge, AfterDedup, AfterCompact)) {
@@ -306,13 +305,11 @@ class DailyLoopSpec extends SparkSpec {
       runTick(spark, landing, delta(3), p, ts("2025-04-03 00:00:00"), maxChain = 2)
       // identical end state: pairs, store contents, tick count, snapshot keys
       assert(pairSet(p) == refPairs, s"pairs diverged after crash $fp")
-      val store = spark.read.schema(graft.streaming.DocsStream.StoreSchema)
-        .parquet(p.store).select("doc_id", "shingle").collect()
+      val store = graft.streaming.DocsStream.shingleStore(p.store).raw(spark).select("doc_id", "shingle").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(store == refStore, s"store diverged after crash $fp")
       // no doubled (batch-spanning) shingle rows anywhere
-      val dbl = spark.read.schema(graft.streaming.DocsStream.StoreSchema)
-        .parquet(p.store).groupBy("doc_id", "shingle").count()
+      val dbl = graft.streaming.DocsStream.shingleStore(p.store).raw(spark).groupBy("doc_id", "shingle").count()
         .filter(col("count") > 1).count()
       assert(dbl == 0, s"$dbl doubled store rows after crash $fp")
       assert(DailyLoop.committedTick(spark, p)._1 == 3L)
@@ -435,10 +432,9 @@ class DailyLoopSpec extends SparkSpec {
     DailyLoop.runTick(spark, Landing(), docs.limit(0), p,
       ts("2025-04-05 00:00:00"), maxChain = 1)
     assert(pairSet(p) == truthAfter)
-    val rawStore = spark.read.schema(DocsStream.StoreSchema)
-      .parquet(p.store)
+    val rawStore = DocsStream.shingleStore(p.store).raw(spark)
     assert(rawStore.join(removed, Seq("doc_id")).count() == 0)
-    assert(DocsStream.deletedDocs(spark, p.store, 5).count() == 0)
+    assert(DocsStream.shingleStore(p.store).deleted(spark, 5).count() == 0)
     // and the store consolidated to ONE committed batch partition
     assert(rawStore.select("batch").distinct().count() == 1)
     // tick 6 re-lands the removed docs: deletion is reversible — the
@@ -457,8 +453,7 @@ class DailyLoopSpec extends SparkSpec {
     // committed) batch partition until the NEXT consolidation covers
     // them, so the raw store carries null-shingle rows here
     def rawStore(p: Paths) = {
-      val raw = spark.read
-        .schema(graft.streaming.DocsStream.StoreSchema).parquet(p.store)
+      val raw = graft.streaming.DocsStream.shingleStore(p.store).raw(spark)
       (raw.filter(col("shingle").isNotNull)
          .select("doc_id", "shingle").collect()
          .map(r => (r.getLong(0), r.getLong(1))).toSet,
@@ -532,8 +527,8 @@ class DailyLoopSpec extends SparkSpec {
     // sweepable — must NOT yet have baked it in: the tombstones ride
     // in tick 3's own batch partition and the committed prefix still
     // physically holds the dead rows it committed
-    assert(DailyLoop.storeVectors(spark, p.vecs, 3).count() == liveN)
-    val rawVecs = spark.read.schema(DailyLoop.VecsSchema).parquet(p.vecs)
+    assert(DailyLoop.vecStore(p.vecs).live(spark, 3).count() == liveN)
+    val rawVecs = DailyLoop.vecStore(p.vecs).raw(spark)
     assert(rawVecs.filter(col("batch") === 3 && col("embedding").isNull)
       .count() == dead.count())
     assert(rawVecs.filter(col("batch") < 3)
@@ -548,8 +543,8 @@ class DailyLoopSpec extends SparkSpec {
       annMaxChain = 1)
     assert(AnnIndex.pqCodes(spark, p.ann).count() == e.count() * m)
     assert(AnnIndex.ivfpPostings(spark, p.annPost).count() == e.count())
-    assert(DailyLoop.storeVectors(spark, p.vecs, 4).count() == e.count())
-    assert(spark.read.schema(DailyLoop.VecsSchema).parquet(p.vecs)
+    assert(DailyLoop.vecStore(p.vecs).live(spark, 4).count() == e.count())
+    assert(DailyLoop.vecStore(p.vecs).raw(spark)
       .filter(col("batch") <= 3).join(dead, Seq("vec_id"), "left_semi")
       .count() == 0, "committed tombstones must be physical after the next consolidation")
   }
@@ -615,7 +610,7 @@ class DailyLoopSpec extends SparkSpec {
     // and the codes are the custom-m encoding of the STORE's live
     // corpus (slices 1–3; the outside-built slice 0 never landed in the
     // vector store, so the refresh — whose rebuild source IS the store,
-    // by the storeVectors contract — legitimately drops it)
+    // by the vecStore live-read contract — legitimately drops it)
     assert(AnnIndex.pqCodes(spark, p.ann).count()
       == e.filter(col("vec_id") % 4 >= 1).count() * 2)
   }
@@ -648,7 +643,7 @@ class DailyLoopSpec extends SparkSpec {
     assert(live(3) == Set((1L, 2L)),
       "re-landed doc's pairs must be rediscovered the same tick")
     // the re-landing superseded the tombstone: nothing reads as deleted
-    assert(DocsStream.deletedDocs(spark, p.store, 3).count() == 0)
+    assert(DocsStream.shingleStore(p.store).deleted(spark, 3).count() == 0)
   }
 
   test("a removal-only embedding tick (vec_removals, NO delta) completes and the loop stays live") {
@@ -701,7 +696,7 @@ class DailyLoopSpec extends SparkSpec {
              rem: Option[org.apache.spark.sql.DataFrame] = None): Unit =
       DailyLoop.runTick(spark, CvePipeline.Landing(), delta, p,
         ts(f"2025-04-0$seq%d 00:00:00"), docRemovals = rem)
-    def deleted(upTo: Long) = DocsStream.deletedDocs(spark, p.store, upTo)
+    def deleted(upTo: Long) = DocsStream.shingleStore(p.store).deleted(spark, upTo)
       .collect().map(_.getLong(0)).toSet
     tick(1, Seq((1L, textA), (2L, textA), (3L, textB)).toDF("doc_id", "text"))
     tick(2, Seq.empty[(Long, String)].toDF("doc_id", "text"),
@@ -713,8 +708,7 @@ class DailyLoopSpec extends SparkSpec {
     assert(deleted(5) == Set(3L))
     // the store still holds one batch partition per tick (nothing
     // consolidated — the listing the cadence contract bounds)
-    val batches = spark.read.schema(DocsStream.StoreSchema)
-      .parquet(p.store).select("batch").distinct().count()
+    val batches = DocsStream.shingleStore(p.store).raw(spark).select("batch").distinct().count()
     assert(batches >= 4, s"expected per-tick partitions, got $batches")
     // and the live view agrees: docs 1+2 pair back up, doc 3 is gone
     assert(DocsStream.livePairs(spark, p.pairs, p.store, 5).collect()
@@ -921,27 +915,48 @@ class DailyLoopSpec extends SparkSpec {
     val deltaA = docs.filter(col("doc_id") % 3 === 1) // crashed attempt's delta
     val deltaB = docs.filter(col("doc_id") % 3 === 2) // re-run's delta
     val removedX = delta(1).select("doc_id").limit(1) // ghost-delete target
-    def docSet(p: Paths) = DocsStream.storeShingles(spark, p.store, 2)
+    // the vector store takes the same path: one embedding delta per
+    // tick, consolidated every tick (annMaxChain = 1), and one vec
+    // removal in the crashed attempt
+    val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    def emb(k: Int) = Some(e.filter(col("vec_id") % 3 === k))
+    val removedV = e.filter(col("vec_id") % 3 === 0).select("vec_id")
+      .orderBy("vec_id").limit(1) // a tick-1 vec
+    def docSet(p: Paths) = DocsStream.shingleStore(p.store).live(spark, 2)
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+    def vecSet(p: Paths) = vecStore(p.vecs).live(spark, 2)
+      .select("vec_id").collect().map(_.getLong(0)).toSet
     // reference: tick 2 runs deltaB with no removals, crash-free
     val ref = Paths(work())
-    runTick(spark, landing, delta(1), ref, ts("2025-04-01 00:00:00"), maxChain = 1)
-    runTick(spark, landing, deltaB, ref, ts("2025-04-02 00:00:00"), maxChain = 1)
+    runTick(spark, landing, delta(1), ref, ts("2025-04-01 00:00:00"), maxChain = 1,
+      embDelta = emb(0), annMaxChain = 1)
+    runTick(spark, landing, deltaB, ref, ts("2025-04-02 00:00:00"), maxChain = 1,
+      embDelta = emb(2), annMaxChain = 1)
     // crash run: tick 2 first attempts (deltaA + removal), dies after
     // compaction — consolidation has already swapped the store
     val p = Paths(work())
-    runTick(spark, landing, delta(1), p, ts("2025-04-01 00:00:00"), maxChain = 1)
+    runTick(spark, landing, delta(1), p, ts("2025-04-01 00:00:00"), maxChain = 1,
+      embDelta = emb(0), annMaxChain = 1)
     intercept[InjectedCrash] {
       runTick(spark, landing, deltaA, p, ts("2025-04-02 00:00:00"),
         maxChain = 1, docRemovals = Some(removedX),
+        embDelta = emb(1), annMaxChain = 1, vecRemovals = Some(removedV),
         failAt = Some(AfterCompact))
     }
-    runTick(spark, landing, deltaB, p, ts("2025-04-02 00:05:00"), maxChain = 1)
+    runTick(spark, landing, deltaB, p, ts("2025-04-02 00:05:00"), maxChain = 1,
+      embDelta = emb(2), annMaxChain = 1)
+    // the vector store converged the same way (the ANN chains keep the
+    // crashed batch through their batch-stamp skip: that is the
+    // documented radius of a contract violation, not asserted here)
+    assert(vecSet(p) == vecSet(ref))
+    assert(removedV.join(vecStore(p.vecs).live(spark, 2), Seq("vec_id"),
+      "left_semi").count() == 1,
+      "the crashed attempt's vec delete must not survive its failed tick")
     // stores converged: deltaA's rows swept, the uncommitted delete of
     // X never stuck, nothing reads as deleted
     assert(docSet(p) == docSet(ref))
-    assert(DocsStream.deletedDocs(spark, p.store, 2).count() == 0)
-    assert(removedX.join(DocsStream.storeShingles(spark, p.store, 2),
+    assert(DocsStream.shingleStore(p.store).deleted(spark, 2).count() == 0)
+    assert(removedX.join(DocsStream.shingleStore(p.store).live(spark, 2),
       Seq("doc_id"), "left_semi").count() == 1,
       "the crashed attempt's delete must not survive its failed tick")
     // and the re-run's own rebuild expired the ghost pairs

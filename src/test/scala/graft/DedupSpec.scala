@@ -214,6 +214,22 @@ class DedupSpec extends SparkSpec {
     assert(e2.getMessage.contains("buckets"))
   }
 
+  test("verifyPairs pins an RDD-backed candidate frame: its lineage runs once") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val sh = Dedup.explodedShingles(Dedup.shingleSets(corpus))
+    val seen = spark.sparkContext.longAccumulator("candidate rows")
+    val pairs = Seq((1L, 2L), (1L, 4L), (2L, 4L), (1L, 3L))
+    val rdd = spark.sparkContext.parallelize(pairs, 2).map { case (a, b) =>
+      seen.add(1L); Row(a, b)
+    }
+    val cand = spark.createDataFrame(rdd,
+      StructType(Seq(StructField("a_id", LongType), StructField("b_id", LongType))))
+    assert(Dedup.verifyPairs(cand, sh, 0.5).collect().nonEmpty)
+    assert(seen.value == pairs.size,
+      s"candidate lineage ran ${seen.value / pairs.size.toDouble} times")
+  }
+
   test("exact dedup groups identical texts") {
     val g = Dedup.exactGroups(corpus)
     assert(g.count() == 4)

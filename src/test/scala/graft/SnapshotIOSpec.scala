@@ -45,6 +45,23 @@ class SnapshotIOSpec extends SparkSpec {
     assert(!SnapshotIO.recover(conf, s"$work/snap"))
   }
 
+  test("swap, recover and nonEmpty resolve the filesystem from the path, not fs.defaultFS") {
+    val work = SparkSpec.tempDir("swapfs").toUri.toString.stripSuffix("/")
+    writeDir(s"$work/snap", "old")
+    writeDir(s"$work/tmp", "new")
+    // a default filesystem no store lives on (an unregistered scheme)
+    val other = new org.apache.hadoop.conf.Configuration(conf)
+    other.set("fs.defaultFS", "graftnofs:///")
+    SnapshotIO.swap(other, s"$work/tmp", s"$work/snap")
+    assert(readTag(s"$work/snap") == "new")
+    assert(SnapshotIO.nonEmpty(other, s"$work/snap"))
+    val fs = new org.apache.hadoop.fs.Path(work).getFileSystem(conf)
+    fs.rename(new org.apache.hadoop.fs.Path(s"$work/snap"),
+      new org.apache.hadoop.fs.Path(s"$work/snap_bak"))
+    assert(SnapshotIO.recover(other, s"$work/snap"))
+    assert(readTag(s"$work/snap") == "new")
+  }
+
   test("a mid-swap bucket crash does not flip the next tick into an init rebuild") {
     val work = SparkSpec.tempDir("rec2").toString
     val status = s"$work/status"

@@ -308,7 +308,7 @@ class StreamingSpec extends SparkSpec {
     val b1 = docs.filter($"doc_id" % 2 === 1)
     DocsStream.indexedDedupTick(b0, 0L, idx, store, snap, 0.8)
     DocsStream.indexedDedupTick(b1, 1L, idx, store, snap, 0.8)
-    def storeDf = spark.read.schema(DocsStream.StoreSchema).parquet(store)
+    def storeDf = DocsStream.shingleStore(store).raw(spark)
     val rowsBefore = storeDf.count()
     val pairsBefore = DocsStream.readPairs(spark, snap).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -348,12 +348,12 @@ class StreamingSpec extends SparkSpec {
       scan(df.queryExecution.executedPlan).get
     }
     val all = filesScanned(storeDf.select("doc_id", "shingle"))
-    val pruned = DocsStream.earlierShingles(spark, store, 1L, Seq(0L, 1L, 2L))
+    val pruned = DocsStream.shingleStore(store).liveBefore(spark, 1L, Seq(0L, 1L, 2L))
     assert(pruned.queryExecution.executedPlan.toString.contains("PartitionFilters"))
     val prunedFiles = filesScanned(pruned)
     assert(prunedFiles < all, s"pruned read opened $prunedFiles of $all files")
     // and the batch filter structurally excludes the in-flight batch
-    assert(DocsStream.earlierShingles(spark, store, 0L,
+    assert(DocsStream.shingleStore(store).liveBefore(spark, 0L,
       (0L until DocsStream.StoreBuckets).toSeq).count() == 0)
   }
 
