@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Versioned on-disk ANN build artifacts — PQ codebooks + the encoded
@@ -810,51 +809,38 @@ object AnnIndex {
     }
 
   /** Multi-probe IVF top-k against the persisted posting lists —
-    * [[Similarity.cellTopKMultiProbe]]'s exact semantics (probe ranking
-    * by centroid similarity with cell-id tie-break; candidates exclude
-    * self; sim desc / cand asc top-k) but with the candidate scan
-    * PRUNED to the probed cell partitions. The probed cell set is
-    * control-plane (≤ min(queries × nprobe, cells) ids, and cells is
-    * bounded by the quantizer — centroids are already a broadcast-sized
-    * table) collected once to drive static partition pruning; the big
-    * side never shuffles and never reads an unprobed directory.
+    * [[Similarity.cellTopKMultiProbe]]'s exact semantics (the same
+    * probe selector [[Similarity.nearestCells]] and cosine scorer
+    * [[Similarity.cosineTopK]]) but with the candidate scan PRUNED to
+    * the probed cell partitions. The probed cell set is control-plane
+    * (≤ min(queries × nprobe, cells) ids, and cells is bounded by the
+    * quantizer — centroids are already a broadcast-sized table)
+    * collected once to drive static partition pruning; the big side
+    * never shuffles and never reads an unprobed directory.
     *
-    * Non-null-cell contract (r19 verdict watch 2): cells reaching an
-    * AnnIndex store are Lloyd-ASSIGNED longs ([[buildIvfPostings]]
-    * derives them from `kmeansRefineExact`'s argmax over non-empty
-    * centroid sets; [[writePostings]] partitions on them), so they are
-    * never NULL by construction — the plain `===` probe/posting join
-    * below is therefore exact, where the LABEL-keyed in-session paths
-    * ([[Similarity.cellTopKMultiProbe]]) need `<=>` because a raw
-    * label column may carry NULL populations. */
+    * Non-null cells (r19 verdict watch 2): cells reaching an AnnIndex
+    * store are Lloyd-ASSIGNED longs ([[buildIvfPostings]] derives them
+    * from `kmeansRefineExact`'s argmax over non-empty centroid sets;
+    * [[writePostings]] partitions on them), so neither a centroid nor a
+    * posting cell is ever NULL. The selector's NULLS LAST tie-break and
+    * the scorer's null-safe cell match — there for the LABEL-keyed
+    * in-session paths, where a raw label column may carry NULL
+    * populations — therefore select and match exactly what a plain
+    * `asc` order and `===` join would here. */
   def postingsTopK(spark: SparkSession, path: String, queries: DataFrame,
                    k: Int, nprobe: Int,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(nprobe > 0, "postingsTopK: nprobe must be positive")
     val info = ivfpInfo(spark, path)
-    val cents = rootData(spark, info, "centroids")
-    val qu = Similarity.unitVectors(queries, Seq(idCol -> "query_id"), vecCol, "qu")
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("psim").desc, col("c_cell").asc)
-    val probes = qu.crossJoin(broadcast(
-        cents.select(col("cell").as("c_cell"), col("centroid"))))
-      .select(col("query_id"), col("qu"), col("c_cell"),
-              Similarity.dot(col("qu"), col("centroid")).as("psim"))
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qu"), col("c_cell"))
+    val probes = Similarity.nearestCells(
+        Similarity.unitVectors(queries, Seq(idCol -> "query_id"), vecCol, "qu"),
+        rootData(spark, info, "centroids"), nprobe)
       .localCheckpoint() // feeds the cell collect AND the candidate join
-    val probedCells: Seq[Any] = probes.select(col("c_cell")).distinct()
+    val probedCells: Seq[Any] = probes.select(col("p_cell")).distinct()
       .collect().map(_.get(0)).toSeq
     val post = foldLayers(spark, path, info.chain, "postings")
       .filter(col("cell").isin(probedCells: _*)) // static partition pruning
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    post.join(broadcast(probes),
-        col("cell") === col("c_cell") && col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id").as("cand_id"),
-              Similarity.dot(col("qu"), col("unit")).as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Similarity.cosineTopK(
+      post.select(col("id").as("cand_id"), col("unit").as("cu"), col("cell").as("c_cell")),
+      probes, k)
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Embedding similarity search.
   *
@@ -49,76 +50,103 @@ object Similarity {
               transform(col("_v"), x => x / col("_n")).as(unitCol): _*)
   }
 
-  /** Brute-force cosine top-k of `corpus` for each row of `queries`.
-    * Queries are broadcast; ranking is a per-query window (row_number with
-    * id tie-break, deterministic). */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(unitVectors(queries, Seq(idCol -> "query_id"), vecCol, "qu"))
-    val c = unitVectors(Spread.ensureParallel(corpus), Seq(idCol -> "cand_id"), vecCol, "cu")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    c.join(q, col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"), dot(col("qu"), col("cu")).as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
+  /** The one top-k tail of every vector probe: per query, the scored
+    * candidates ranked by `simCol` desc with a cand_id-asc tie-break,
+    * ranks ≤ k kept (row_number: total and deterministic). */
+  private[operators] def rankTopK(scored: DataFrame, simCol: String, k: Int): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col(simCol).desc, col("cand_id").asc)).cast("long"))
       .filter(col("rank") <= k)
+
+  /** The one probe-cell selector: each query's `nprobe` nearest cells by
+    * centroid dot, ties broken cell asc NULLS LAST — the DuckDB mirror's
+    * ASC default, so an exact tie at the nprobe boundary selects the
+    * same cells on both engines. A NULL-labeled cell is a probeable
+    * population like any other (its centroid is real, only its id is
+    * NULL). `qu` is (query_id, qu); the result (query_id, qu, p_cell)
+    * holds one probe row per query and probed cell — queries × nprobe
+    * rows, query-side tiny. */
+  private[operators] def nearestCells(qu: DataFrame, centroids: DataFrame,
+                                      nprobe: Int): DataFrame = {
+    require(nprobe > 0, s"nprobe must be positive: $nprobe")
+    qu.crossJoin(broadcast(
+        centroids.select(col("cell").as("p_cell"), col("centroid"))))
+      .select(col("query_id"), col("qu"), col("p_cell"),
+              dot(col("qu"), col("centroid")).as("psim"))
+      .withColumn("rn", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("psim").desc, col("p_cell").asc_nulls_last)))
+      .filter(col("rn") <= nprobe)
+      .select(col("query_id"), col("qu"), col("p_cell"))
   }
 
-  /** IVF-style top-k: candidates restricted to the query's cell (here the
-    * `label` column stands in for a coarse-quantizer cell id). At 100 TB
-    * the corpus is hash-partitioned by cell so the join is co-located. */
+  /** The own-cell probe set of unit queries carrying their cell as
+    * `p_cell`: a NULL cell is dropped, so — the cell match being
+    * null-safe ([[inProbedCells]]) — a NULL-labeled query gets no rows
+    * and a NULL-labeled candidate never matches: an equi-join's
+    * semantics on the cell. */
+  private def ownCell(qu: DataFrame): DataFrame = qu.filter(col("p_cell").isNotNull)
+
+  /** The probe set travels as data: a probe relation that carries
+    * `p_cell` (one row per query and probed cell — [[ownCell]],
+    * [[nearestCells]]) keeps only the candidates whose `candCell`
+    * matches it null-safe; one without it probes every candidate. */
+  private def inProbedCells(joined: DataFrame, probes: DataFrame,
+                            candCell: String): DataFrame =
+    if (probes.columns.contains("p_cell")) joined.filter(col(candCell) <=> col("p_cell"))
+    else joined
+
+  /** The one cosine scorer: unit candidates (cand_id, cu[, c_cell])
+    * against the broadcast probe rows (query_id, qu[, p_cell]) — self
+    * excluded, restricted to the probed cells — ranked by the
+    * [[rankTopK]] tail. The candidate side never shuffles; a candidate
+    * lives in exactly one cell, so no post-join dedup. */
+  private[operators] def cosineTopK(cands: DataFrame, probes: DataFrame,
+                                    k: Int): DataFrame =
+    rankTopK(inProbedCells(
+        cands.join(broadcast(probes), col("cand_id") =!= col("query_id")),
+        probes, "c_cell")
+      .select(col("query_id"), col("cand_id"), dot(col("qu"), col("cu")).as("sim")),
+      "sim", k)
+
+  /** Brute-force cosine top-k of `corpus` for each row of `queries`:
+    * every candidate probed. Queries are broadcast. */
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    cosineTopK(
+      unitVectors(Spread.ensureParallel(corpus), Seq(idCol -> "cand_id"), vecCol, "cu"),
+      unitVectors(queries, Seq(idCol -> "query_id"), vecCol, "qu"), k)
+
+  /** IVF-style top-k: candidates restricted to the query's own cell
+    * (here the `label` column stands in for a coarse-quantizer cell id;
+    * NULL matches nothing, see [[ownCell]]). At 100 TB the corpus is
+    * hash-partitioned by cell so the join is co-located. */
   def cellTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                idCol: String = "vec_id", vecCol: String = "embedding",
-               cellCol: String = "label"): DataFrame = {
-    val q = broadcast(unitVectors(queries, Seq(idCol -> "query_id", cellCol -> "cell"),
-                                  vecCol, "qu"))
-    val c = unitVectors(Spread.ensureParallel(corpus), Seq(idCol -> "cand_id", cellCol -> "c_cell"), vecCol, "cu")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    c.join(q, col("c_cell") === col("cell") && col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"), dot(col("qu"), col("cu")).as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
+               cellCol: String = "label"): DataFrame =
+    cosineTopK(
+      unitVectors(Spread.ensureParallel(corpus),
+        Seq(idCol -> "cand_id", cellCol -> "c_cell"), vecCol, "cu"),
+      ownCell(unitVectors(queries,
+        Seq(idCol -> "query_id", cellCol -> "p_cell"), vecCol, "qu")), k)
 
   /** Multi-probe IVF top-k: each query searches its `nprobe` nearest
-    * cells (by centroid similarity, cell-id tie-break) instead of one —
-    * the standard IVF recall/cost knob: recall rises with nprobe while
-    * cost stays nprobe/cells of a full scan. The probe list (queries ×
-    * nprobe rows, each carrying the unit query vector) is broadcast; the
-    * corpus stays stationary and is scanned only in the probed cells —
-    * same 100 TB shape as [[cellTopK]]. A candidate lives in exactly one
-    * cell, so no post-join dedup is needed. */
+    * cells ([[nearestCells]]) instead of one — the standard IVF
+    * recall/cost knob: recall rises with nprobe while cost stays
+    * nprobe/cells of a full scan. The probe list (queries × nprobe rows,
+    * each carrying the unit query vector) is broadcast; the corpus stays
+    * stationary and is scanned only in the probed cells — same 100 TB
+    * shape as [[cellTopK]]. A NULL-labeled cell is probed like any other
+    * (ADVICE r18: the candidate match is null-safe). */
   def cellTopKMultiProbe(corpus: DataFrame, queries: DataFrame,
                          centroids: DataFrame, k: Int, nprobe: Int,
                          idCol: String = "vec_id", vecCol: String = "embedding",
-                         cellCol: String = "label"): DataFrame = {
-    require(nprobe > 0, "cellTopKMultiProbe: nprobe must be positive")
-    val qu = unitVectors(queries, Seq(idCol -> "query_id"), vecCol, "qu")
-    // tie-break NULLS LAST and the candidate join NULL-SAFE (ADVICE
-    // r18): a NULL-labeled cell is a probeable population like any
-    // other — its centroid is real, only its id is NULL — and Spark's
-    // bare .asc sorts NULLs FIRST where the DuckDB mirror's ASC is
-    // NULLS LAST, so an exact psim tie at the nprobe boundary would
-    // otherwise select different probe sets on the two engines
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("psim").desc, col("c_cell").asc_nulls_last)
-    val probes = qu.crossJoin(broadcast(
-        centroids.select(col("cell").as("c_cell"), col("centroid"))))
-      .select(col("query_id"), col("qu"), col("c_cell"),
-              dot(col("qu"), col("centroid")).as("psim"))
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qu"), col("c_cell"))
-    val cu = unitVectors(Spread.ensureParallel(corpus), Seq(idCol -> "cand_id", cellCol -> "cc"), vecCol, "cu")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    cu.join(broadcast(probes),
-        col("cc") <=> col("c_cell") && col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"), dot(col("qu"), col("cu")).as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
+                         cellCol: String = "label"): DataFrame =
+    cosineTopK(
+      unitVectors(Spread.ensureParallel(corpus),
+        Seq(idCol -> "cand_id", cellCol -> "c_cell"), vecCol, "cu"),
+      nearestCells(unitVectors(queries, Seq(idCol -> "query_id"), vecCol, "qu"),
+        centroids, nprobe), k)
 
   /** Cell-population cap for [[cellDupPairs]]: Σ O(cell²) is only a
     * scale pattern while cells stay bounded, and a STATIC quantizer's
@@ -154,7 +182,6 @@ object Similarity {
     * VectorAggregates.centroids (double buffers, one pass). */
   def exactCentroids(units: DataFrame, cellCol: String = "cell",
                      unitCol: String = "unit"): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     units
       .select(col(cellCol).as("cell"), posexplode(col(unitCol)).as(Seq("pos", "v")))
       .groupBy(col("cell"), col("pos"))
@@ -941,7 +968,6 @@ object Similarity {
     * query are the corpus-scale paths. Output: (sub, code, code_vec). */
   def pqTrain(units: DataFrame, m: Int, subLen: Int,
               k: Int = 16, iters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val subs = subVectors(units, m, subLen, Seq("id"))
     val initIds = broadcast(units.select(col("id")).orderBy(col("id")).limit(k))
     var books = subs.join(initIds, "id")
@@ -1011,52 +1037,72 @@ object Similarity {
       .agg(max(col("sc")).as("m"))
       .select(col("id"), col("sub"), (-col("m.neg")).as("code"))
 
-  /** PQ-ADC approximate top-k: per query, a lookup table of
-    * dot(query subvector, codebook entry); a candidate's approximate
-    * similarity is the sum of its m LUT entries (exact-decimal sum so
-    * the ranking is aggregation-order-independent in every engine). The
-    * LUT is query-side tiny (m × codes) and broadcast; the corpus side
-    * touches only the stored codes — this is PQ's 100 TB story: the scan
-    * reads m small ints per vector, never the raw floats. */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-             m: Int = 4, subLen: Int = 16, numCodes: Int = 16, trainIters: Int = 2,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cu = unitVectors(Spread.ensureParallel(corpus), Seq(idCol -> "id"), vecCol, "unit")
+  /** The one in-session PQ build behind [[pqTopK]], [[ivfPqTopK]] and
+    * [[ivfPqTopKMultiProbe]]: the corpus' unit vectors (id, [cell,]
+    * unit), codebooks trained on them, and the encoded corpus (id, sub,
+    * code[, cell]) — carrying the cell when `cellCol` names one. */
+  private def pqIndex(corpus: DataFrame, idCol: String, vecCol: String,
+                      cellCol: Option[String], m: Int, subLen: Int,
+                      numCodes: Int, trainIters: Int): (DataFrame, DataFrame, DataFrame) = {
+    val cu = unitVectors(Spread.ensureParallel(corpus),
+      (idCol -> "id") +: cellCol.map(_ -> "cell").toSeq, vecCol, "unit")
     val books = pqTrain(cu, m, subLen, numCodes, trainIters)
     val codes = pqEncode(cu, books, m, subLen)
-    pqTopKFrom(books, codes, queries, k, m, subLen, idCol, vecCol)
+    (cu, books, cellCol.fold(codes)(_ => codes.join(cu.select(col("id"), col("cell")), "id")))
   }
 
-  /** The PQ-ADC probe alone, against PREBUILT artifacts — codebooks
-    * (sub, code, code_vec) and the encoded corpus (id, sub, code), e.g.
-    * read back from [[AnnIndex]]'s versioned tables. This is the
-    * production query path at 100 TB: zero training, the corpus side
-    * touches only the m-small-int codes, the query-side LUT is broadcast.
-    * Doubles round-trip parquet exactly, so probing persisted artifacts
-    * is bit-identical to the in-session [[pqTopK]] that built them. */
-  def pqTopKFrom(books: DataFrame, codes: DataFrame, queries: DataFrame,
-                 k: Int, m: Int = 4, subLen: Int = 16,
-                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val qu = unitVectors(queries, Seq(idCol -> "id"), vecCol, "unit")
-    val lut = subVectors(qu, m, subLen, Seq("id"))
+  /** The one ADC scorer: per probe row of the unit queries `qu` (id,
+    * unit[, p_cell]) a lookup table of dot(query subvector, codebook
+    * entry); a candidate's approximate similarity is the sum of its m
+    * LUT entries — an exact-decimal sum, so the ranking is
+    * aggregation-order-independent in every engine — ranked by the
+    * [[rankTopK]] tail. The LUT is query-side tiny (probe rows × m ×
+    * codes) and broadcast; the corpus side touches only the stored
+    * codes (id, sub, code[, cell]), restricted to the probed cells
+    * ([[inProbedCells]]) — PQ's 100 TB story: the scan reads m small
+    * ints per vector, never the raw floats. */
+  private def adcTopK(books: DataFrame, codes: DataFrame, qu: DataFrame,
+                      k: Int, m: Int, subLen: Int): DataFrame = {
+    val cells = qu.columns.filter(_ == "p_cell").toSeq
+    val lut = subVectors(qu, m, subLen, "id" +: cells)
       .join(broadcast(books), "sub")
-      .select(col("id").as("query_id"), col("sub"), col("code"),
-              dot(col("sv"), col("code_vec")).as("l"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_sim").desc, col("cand_id").asc)
+      .select((col("id").as("query_id") +: cells.map(col)) ++
+              Seq(col("sub"), col("code"), dot(col("sv"), col("code_vec")).as("l")): _*)
     // fan-out floor (r22): the codes relation is a few small ints per
     // vector — AQE coalesces its (post-encode or post-fold) shuffle
     // output to one partition by BYTES, but this join multiplies it by
-    // |queries|, so the whole ADC scan+sum ran in a single task.
-    // Identity at scale (see Spread.ensureParallelForFanout).
-    Spread.ensureParallelForFanout(codes).join(broadcast(lut), Seq("sub", "code"))
+    // the LUT's probe rows, so the whole ADC scan+sum ran in a single
+    // task. Identity at scale (see Spread.ensureParallelForFanout).
+    val scored = Spread.ensureParallelForFanout(codes).join(broadcast(lut), Seq("sub", "code"))
       .filter(col("id") =!= col("query_id"))
+    rankTopK(inProbedCells(scored, qu, "cell")
       .groupBy(col("query_id"), col("id").as("cand_id"))
-      .agg(sum(col("l").cast(DecimalType(28, 16))).cast("double").as("approx_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+      .agg(sum(col("l").cast(DecimalType(28, 16))).cast("double").as("approx_sim")),
+      "approx_sim", k)
   }
+
+  /** PQ-ADC approximate top-k, trained in session ([[pqIndex]]) and
+    * probed by [[pqTopKFrom]]. */
+  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+             m: Int = 4, subLen: Int = 16, numCodes: Int = 16, trainIters: Int = 2,
+             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val (_, books, codes) = pqIndex(corpus, idCol, vecCol, None, m, subLen, numCodes, trainIters)
+    pqTopKFrom(books, codes, queries, k, m, subLen, idCol, vecCol)
+  }
+
+  /** The PQ-ADC probe alone ([[adcTopK]], every candidate probed),
+    * against PREBUILT artifacts — codebooks (sub, code, code_vec) and
+    * the encoded corpus (id, sub, code), e.g. read back from
+    * [[AnnIndex]]'s versioned tables. This is the production query path
+    * at 100 TB: zero training, the corpus side touches only the
+    * m-small-int codes, the query-side LUT is broadcast. Doubles
+    * round-trip parquet exactly, so probing persisted artifacts is
+    * bit-identical to the in-session [[pqTopK]] that built them. */
+  def pqTopKFrom(books: DataFrame, codes: DataFrame, queries: DataFrame,
+                 k: Int, m: Int = 4, subLen: Int = 16,
+                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    adcTopK(books, codes, unitVectors(queries, Seq(idCol -> "id"), vecCol, "unit"),
+      k, m, subLen)
 
   /** IVF+PQ composition — the standard large-scale ANN layout (an
     * IVFADC index): the coarse partition (here the `cell` column; in a
@@ -1064,98 +1110,49 @@ object Similarity {
     * centroids) restricts candidates to the query's cell, and PQ-ADC
     * ranks within the cell from the m-byte codes. At 100 TB the scan
     * per query touches one cell's (cell key, m small ints) rows — never
-    * raw floats, never other cells; the LUT stays query-side tiny and
-    * broadcast. Determinism matches [[pqTopK]] (exact-decimal LUT sums,
-    * id tie-break). */
+    * raw floats, never other cells. Determinism matches [[pqTopK]]. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 m: Int = 4, subLen: Int = 16, numCodes: Int = 16,
                 trainIters: Int = 2, idCol: String = "vec_id",
                 vecCol: String = "embedding", cellCol: String = "label"): DataFrame = {
-    val cu = unitVectors(Spread.ensureParallel(corpus), Seq(idCol -> "id", cellCol -> "cell"), vecCol, "unit")
-    val books = pqTrain(cu, m, subLen, numCodes, trainIters)
-    val codes = pqEncode(cu, books, m, subLen)
-      .join(cu.select(col("id"), col("cell")), "id")
+    val (_, books, codes) =
+      pqIndex(corpus, idCol, vecCol, Some(cellCol), m, subLen, numCodes, trainIters)
     ivfPqTopKFrom(books, codes, queries, k, m, subLen, idCol, vecCol, cellCol)
   }
 
-  /** The IVFADC probe alone, against PREBUILT artifacts — the
-    * [[pqTopKFrom]] analog of [[ivfPqTopK]] (whose plan it IS, factored
-    * so training can be supplied externally — TrainBench's composed
-    * recall mode trains on full-vs-sampled corpora and probes the same
-    * codes). `codes` must carry (id, sub, code, cell): the encoded
-    * corpus joined with its coarse cell ids. */
+  /** The IVFADC probe alone against PREBUILT artifacts: [[adcTopK]]
+    * over each query's own cell ([[ownCell]] — NULL matches nothing),
+    * factored so training can be supplied externally (TrainBench's
+    * composed recall mode trains on full-vs-sampled corpora and probes
+    * the same codes). `codes` must carry (id, sub, code, cell): the
+    * encoded corpus joined with its coarse cell ids. */
   def ivfPqTopKFrom(books: DataFrame, codes: DataFrame, queries: DataFrame,
                     k: Int, m: Int = 4, subLen: Int = 16,
                     idCol: String = "vec_id", vecCol: String = "embedding",
-                    cellCol: String = "label"): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val qu = unitVectors(queries, Seq(idCol -> "id", cellCol -> "cell"), vecCol, "unit")
-    val lut = subVectors(qu, m, subLen, Seq("id", "cell"))
-      .join(broadcast(books), "sub")
-      .select(col("id").as("query_id"), col("cell").as("q_cell"),
-              col("sub"), col("code"), dot(col("sv"), col("code_vec")).as("l"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_sim").desc, col("cand_id").asc)
-    // fan-out floor (r22): see pqTopKFrom — identity at scale
-    val codesP = Spread.ensureParallelForFanout(codes)
-    codesP.join(broadcast(lut),
-        codesP("sub") === lut("sub") && codesP("code") === lut("code") &&
-        codesP("cell") === lut("q_cell") && codesP("id") =!= lut("query_id"))
-      .groupBy(col("query_id"), col("id").as("cand_id"))
-      .agg(sum(col("l").cast(DecimalType(28, 16))).cast("double").as("approx_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
+                    cellCol: String = "label"): DataFrame =
+    adcTopK(books, codes, ownCell(unitVectors(queries,
+      Seq(idCol -> "id", cellCol -> "p_cell"), vecCol, "unit")), k, m, subLen)
 
   /** Multi-probe IVFADC probe over prebuilt artifacts — the q89 recall
-    * dial applied to the COMPOSED path: each query's ADC lookup table
-    * joins the codes of its `nprobe` nearest cells (by centroid dot,
-    * cell-asc tie-break) instead of one, so recall recovers toward the
-    * flat-ADC ceiling at nprobe/cells of a full scan. The probe list ×
-    * LUT relation stays query-side tiny (queries × m × nprobe rows) and
-    * broadcast; the corpus side still reads only the m small-int codes
-    * of the probed cells — a candidate lives in exactly one cell, so no
-    * post-join dedup. With nprobe ≥ |cells| this IS flat PQ-ADC
-    * ([[pqTopKFrom]]), spec-pinned — including on NULL-labeled corpora:
-    * the probe tie-break is NULLS LAST (matching the oracle's ASC
-    * default) and the probe/code joins are null-safe (`<=>`, the
-    * oracle's IS NOT DISTINCT FROM), so a NULL cell is a probeable
-    * population like any other rather than a silently-dropped candidate
-    * set (ADVICE r18). `codes` as in [[ivfPqTopKFrom]]; `centroids` =
-    * (cell, centroid). */
+    * dial applied to the COMPOSED path: [[adcTopK]] over each query's
+    * `nprobe` nearest cells ([[nearestCells]]) instead of one, so recall
+    * recovers toward the flat-ADC ceiling at nprobe/cells of a full
+    * scan. The corpus side still reads only the m small-int codes of the
+    * probed cells. With nprobe ≥ |cells| this IS flat PQ-ADC
+    * ([[pqTopKFrom]]), spec-pinned — including on NULL-labeled corpora,
+    * where a NULL cell is a probeable population like any other rather
+    * than a silently-dropped candidate set (ADVICE r18). `codes` as in
+    * [[ivfPqTopKFrom]]; `centroids` = (cell, centroid). */
   def ivfPqTopKFromMultiProbe(books: DataFrame, codes: DataFrame,
                               centroids: DataFrame, queries: DataFrame,
                               k: Int, nprobe: Int, m: Int = 4, subLen: Int = 16,
                               idCol: String = "vec_id",
-                              vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    require(nprobe > 0, "ivfPqTopKFromMultiProbe: nprobe must be positive")
-    val qu = unitVectors(queries, Seq(idCol -> "id"), vecCol, "unit")
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("psim").desc, col("p_cell").asc_nulls_last)
-    val probes = qu.select(col("id").as("query_id"), col("unit"))
-      .crossJoin(broadcast(centroids.select(col("cell").as("p_cell"), col("centroid"))))
-      .select(col("query_id"), col("p_cell"), dot(col("unit"), col("centroid")).as("psim"))
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("p_cell"))
-    val lut = subVectors(qu, m, subLen, Seq("id"))
-      .join(broadcast(books), "sub")
-      .select(col("id").as("query_id"), col("sub"), col("code"),
-              dot(col("sv"), col("code_vec")).as("l"))
-      .join(probes, "query_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_sim").desc, col("cand_id").asc)
-    // fan-out floor (r22): see pqTopKFrom — identity at scale
-    val codesP = Spread.ensureParallelForFanout(codes)
-    codesP.join(broadcast(lut),
-        codesP("sub") === lut("sub") && codesP("code") === lut("code") &&
-        codesP("cell") <=> lut("p_cell") && codesP("id") =!= lut("query_id"))
-      .groupBy(col("query_id"), col("id").as("cand_id"))
-      .agg(sum(col("l").cast(DecimalType(28, 16))).cast("double").as("approx_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
+                              vecCol: String = "embedding"): DataFrame =
+    adcTopK(books, codes,
+      nearestCells(unitVectors(queries, Seq(idCol -> "query_id"), vecCol, "qu"),
+          centroids, nprobe)
+        .select(col("query_id").as("id"), col("qu").as("unit"), col("p_cell")),
+      k, m, subLen)
 
   /** In-session multi-probe IVFADC (q142): label cells with their
     * exact-decimal centroids (q87's init layer — deterministic,
@@ -1167,12 +1164,9 @@ object Similarity {
                           idCol: String = "vec_id",
                           vecCol: String = "embedding",
                           cellCol: String = "label"): DataFrame = {
-    val cu = unitVectors(Spread.ensureParallel(corpus), Seq(idCol -> "id", cellCol -> "cell"), vecCol, "unit")
-    val cents = exactCentroids(cu)
-    val books = pqTrain(cu, m, subLen, numCodes, trainIters)
-    val codes = pqEncode(cu, books, m, subLen)
-      .join(cu.select(col("id"), col("cell")), "id")
-    ivfPqTopKFromMultiProbe(books, codes, cents, queries, k, nprobe,
+    val (cu, books, codes) =
+      pqIndex(corpus, idCol, vecCol, Some(cellCol), m, subLen, numCodes, trainIters)
+    ivfPqTopKFromMultiProbe(books, codes, exactCentroids(cu), queries, k, nprobe,
       m, subLen, idCol, vecCol)
   }
 

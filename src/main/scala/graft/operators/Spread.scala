@@ -55,20 +55,21 @@ object Spread {
     }
   }
 
-  /** Parallelism floor for a relation feeding a FAN-OUT consumer (an
-    * ADC probe joining |queries| LUT rows per code row, an exploding
-    * generate): scan-shaped inputs floor exactly like
-    * [[ensureParallel]]; post-shuffle inputs (aggregate / window / sort
-    * / distinct / repartition outputs, where ensureParallel is
-    * deliberately the identity) are walked THROUGH to the scans below
-    * them, and the frame is repartitioned to `defaultParallelism` when
-    * that scan-split estimate is below it. The scan's split count is
-    * the smallness proxy: AQE coalesces a shuffle by its output BYTES
-    * and is blind to the fan-out above it, so a few hundred KB of PQ
-    * codes (m small ints per vector) collapsed to ONE partition and the
-    * whole probe ran on one core (q139: 7.8 s of a 12.7 s query in a
-    * single task). No AQE setting or size estimate is consulted; at
-    * scale the scans carry ≥ cores splits and this is the identity. */
+  /** Parallelism floor for the codes side of the ADC scorer
+    * (`Similarity.adcTopK`, its one caller), a FAN-OUT consumer: the
+    * join multiplies every code row by the query side's LUT rows.
+    * Scan-shaped inputs floor exactly like [[ensureParallel]];
+    * post-shuffle inputs (aggregate / window / sort / distinct /
+    * repartition outputs, where ensureParallel is deliberately the
+    * identity) are walked THROUGH to the scans below them, and the frame
+    * is repartitioned to `defaultParallelism` when that scan-split
+    * estimate is below it. The scan's split count is the smallness
+    * proxy: AQE coalesces a shuffle by its output BYTES and is blind to
+    * the fan-out above it, so a few hundred KB of PQ codes (m small ints
+    * per vector) collapsed to ONE partition and the whole probe ran on
+    * one core (q139: 7.8 s of a 12.7 s query in a single task). No AQE
+    * setting or size estimate is consulted; at scale the scans carry ≥
+    * cores splits and this is the identity. */
   def ensureParallelForFanout(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
     if (want <= 1 || df.isStreaming) df
@@ -87,6 +88,7 @@ object Spread {
                                 seeThroughShuffles: Boolean = false): Option[Int] = {
     val conf = df.sparkSession.sessionState.conf
     val want = df.sparkSession.sparkContext.defaultParallelism
+    val leaf = conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).getOrElse(want)
 
     def scanSplits(rel: HadoopFsRelation): Int = {
       // Spark's FilePartition.maxSplitBytes arithmetic: files pack into
@@ -106,10 +108,11 @@ object Spread {
         case _ => None
       }
       case r: LogicalRDD => Some(r.rdd.getNumPartitions.toLong)
-      case l: LocalRelation => Some(1L)
+      // what LocalTableScanExec parallelizes its rows into: one slice
+      // per row up to the leaf-node parallelism
+      case l: LocalRelation => Some(math.min(l.data.length, leaf).toLong)
       // the node's own slice count, else what RangeExec falls back to
-      case r: Range => Some(r.numSlices.getOrElse(
-        conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).getOrElse(want)).toLong)
+      case r: Range => Some(r.numSlices.getOrElse(leaf).toLong)
       case u: Union =>
         val parts = u.children.map(walk)
         if (parts.forall(_.isDefined)) Some(parts.flatten.sum) else None

@@ -46,12 +46,13 @@ import graft.operators.{AnnIndex, Similarity}
   * mode measures it at /tmp/sf10's 200k-vector geometry.)
   *
   * `--recall-ivf` (r17 verdict task 3) measures the same pair on the
-  * COMPOSED q86/q140-shaped probe — coarse cell restriction + ADC
-  * (Similarity.ivfPqTopKFrom) — against the same unrestricted exact
-  * top-10 truth, so the ABSOLUTE quality of the path the 100 TB plan
-  * actually serves is on record next to the flat-ADC point (whose
-  * m=4/k=16 recall floor is geometry, not sampling). `--nprobe N`
-  * switches the composed probe to the multi-probe dial
+  * COMPOSED q86/q140-shaped probe — own-cell restriction + ADC
+  * (Similarity.ivfPqTopKFrom; flat mode is Similarity.pqTopKFrom, both
+  * the one ADC scorer under a different probe set) — against the same
+  * unrestricted exact top-10 truth, so the ABSOLUTE quality of the path
+  * the 100 TB plan actually serves is on record next to the flat-ADC
+  * point (whose m=4/k=16 recall floor is geometry, not sampling).
+  * `--nprobe N` switches the probe set to each query's N nearest cells
   * (Similarity.ivfPqTopKFromMultiProbe over exact label centroids, the
   * q142 shape) — the knob that recovers recall toward the flat ceiling.
   *

@@ -772,6 +772,31 @@ class SimilaritySpec extends SparkSpec {
     assert(cands.subsetOf(Set(2L, 5L))) // label-0 cell only, self excluded
   }
 
+  test("own-cell probes: a NULL cell matches nothing, not even NULL") {
+    // cellTopK and ivfPqTopK keep an equi-join's semantics on the cell:
+    // a NULL-labeled query has no cell to search, and a NULL-labeled
+    // candidate is in no query's cell — even though 4 and 5 are the
+    // nearest vectors to query 1 and cell-mates of each other
+    val withNull = Seq(
+      (1L, Array(1.0f, 0.0f, 0.0f), Some(0)),
+      (2L, Array(0.9f, 0.1f, 0.0f), Some(0)),
+      (3L, Array(0.0f, 1.0f, 0.0f), Some(1)),
+      (4L, Array(0.95f, 0.05f, 0.0f), None),
+      (5L, Array(0.97f, 0.03f, 0.0f), None)
+    ).toDF("vec_id", "embedding", "label")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "cand_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def ivfPq(q: org.apache.spark.sql.DataFrame) = Similarity.ivfPqTopK(
+      withNull, q, k = 3, m = 1, subLen = 3, numCodes = 2, trainIters = 1)
+    val nullQ = withNull.filter($"vec_id" === 4L)
+    assert(Similarity.cellTopK(withNull, nullQ, k = 3).count() == 0L)
+    assert(ivfPq(nullQ).count() == 0L)
+    val labeledQ = withNull.filter($"vec_id" === 1L)
+    assert(pairs(Similarity.cellTopK(withNull, labeledQ, k = 3)) == Set((1L, 2L)))
+    assert(pairs(ivfPq(labeledQ)) == Set((1L, 2L)))
+  }
+
   test("srpDupPairs fails loudly on an embedding dim mismatch") {
     // vecs are dim 3; the default dim=64 must raise, not silently zero
     // sign bits via zip_with null-padding

@@ -38,6 +38,20 @@ class SpreadSpec extends SparkSpec {
     assert(floored.orderBy("id").collect().toSeq == narrow.collect().toSeq)
   }
 
+  test("Spread.ensureParallel: a local relation counts the slices its scan plans") {
+    val want = spark.sparkContext.defaultParallelism
+    assume(want > 1)
+    // a local relation with at least defaultParallelism rows scans as
+    // defaultParallelism slices already — an exchange on top could not
+    // spread its rows any further
+    import spark.implicits._
+    val local = (1 to 4 * want).map(i => (i, s"v$i")).toDF("i", "v")
+    val same = Spread.ensureParallel(local)
+    assert(same eq local)
+    assert(same.orderBy("i").collect().toSeq ==
+           (1 to 4 * want).map(i => org.apache.spark.sql.Row(i, s"v$i")))
+  }
+
   test("Spread.ensureParallel: streaming frames pass through unchanged") {
     // ADVICE r21: the r21 form called df.rdd, which THROWS on a streaming
     // DataFrame — the module contract says the entry points run in batch
