@@ -197,7 +197,7 @@ object DailyLoop {
     // jobs (the vector-only q125/q127 families pay it 3× per query; a
     // doc-less deployment day pays it nightly). Skip it once day-zero
     // state exists; the FIRST tick still runs in full, so layout
-    // creation (empty base version, pair-snapshot sentinel) is
+    // creation (empty base version, pair-snapshot sidecar) is
     // byte-identical to before. Deterministic in the tick's input, so
     // the crash model's delta-as-function-of-seq contract is untouched;
     // the compaction cadence now counts only layers that carry rows

@@ -7,7 +7,9 @@ import graft.expressions.{DotProduct, PolyHash}
 
 /** Engine extensions, injected via the public SparkSessionExtensions API:
   * custom expressions registered as SQL-callable functions so they work
-  * from both the DataFrame API (call_function) and spark.sql.
+  * from both the DataFrame API (call_function) and spark.sql, and the
+  * optimizer rule that prunes a snapshot key lookup to its bucket
+  * ([[graft.operators.BucketPruning]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -21,5 +23,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       PolyHash.info,
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         PolyHash(children(0), children(1), children(2))))
+    ext.injectOptimizerRule(_ => graft.operators.BucketPruning)
   }
 }

@@ -2,9 +2,15 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.ColumnConversions.expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 /** The bounded-MERGE shape for a 100 TB snapshot (SURVEY K1 scale note;
   * Merge.scala header): partition the snapshot on a stable hash-bucket of
@@ -25,58 +31,108 @@ import org.apache.spark.sql.functions._
   *    directory at a time via SnapshotIO (backup-then-rename), so no
   *    crash point loses a bucket.
   *
+  * The layout sidecar holds the bucket count, the key and the UNION
+  * schema of every bucket, the table metadata a table format keeps: a
+  * read takes its schema from there instead of merging every bucket's
+  * footers, a bucket written before a widening delta reads the new
+  * columns as null, and a key lookup is pruned to its one bucket by
+  * [[BucketPruning]].
+  *
   * Cost per tick: O(|delta| + |touched partitions|), not O(|snapshot|) —
   * with n sized so a partition is a few GB, a small delta rewrites a few
-  * GB instead of 100 TB.
+  * GB instead of 100 TB. A point read on the key costs one bucket.
   */
 object PartitionedSnapshot {
   val BucketCol = "id_bucket"
   private val MetaFile = "_graft_buckets"
 
+  /** Reader options that tag a snapshot scan with its layout, so
+    * [[BucketPruning]] can map a key predicate to its buckets. */
+  private[operators] val KeyOption = "graft.bucket_key"
+  private[operators] val BucketsOption = "graft.buckets"
+
   def bucketOf(key: Column, numBuckets: Int): Column =
     pmod(xxhash64(key), lit(numBuckets.toLong))
 
-  /** Bucket count AND merge key are layout state, so they live WITH the
-    * layout: a sidecar file (`<buckets>\n<key>`), not parameters the
-    * caller must keep consistent forever — [[mergeDelta]] validates the
-    * caller's key against the recorded one, so merging a snapshot under
-    * the wrong key fails loudly instead of scattering rows. */
-  private def writeMeta(spark: SparkSession, path: String, n: Int,
-                        key: String): Unit = {
-    val out = graft.SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, path)
-      .create(new Path(path, MetaFile), true)
-    try out.write(s"$n\n$key".getBytes(StandardCharsets.UTF_8))
+  /** [[bucketOf]] evaluated on a literal key — the write's own
+    * expression, its functions resolved from the builtin registry — for
+    * the read-side pruning ([[BucketPruning]]). */
+  private[operators] def bucketOfLiteral(key: Literal, numBuckets: Int): Long =
+    expression(bucketOf(col("key"), numBuckets)).transformUp {
+      case _: UnresolvedAttribute => key
+      case f: UnresolvedFunction =>
+        FunctionRegistry.builtin.lookupFunction(FunctionIdentifier(f.nameParts.last), f.arguments)
+    }.eval().asInstanceOf[Long]
+
+  /** Bucket count, merge key and union data schema are layout state, so
+    * they live WITH the layout: a sidecar file
+    * (`<buckets>\n<key>\n<schema json>`), not parameters the caller must
+    * keep consistent forever — [[mergeDelta]] validates the caller's key
+    * against the recorded one, so merging a snapshot under the wrong key
+    * fails loudly instead of scattering rows. */
+  private case class Meta(buckets: Int, key: String, schema: StructType)
+
+  /** The sidecar goes through the RAW filesystem: a checksummed one keeps
+    * a `.crc` beside it and renames the two in separate steps, so a crash
+    * between them would leave a sidecar that fails its checksum. */
+  private def metaFs(spark: SparkSession, path: String): FileSystem =
+    graft.SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, path) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+
+  /** Written under a temp name and renamed over the old sidecar (POSIX
+    * rename replaces it atomically), so a crash leaves the old sidecar or
+    * the new one, never a torn one that [[isInitialized]] would still
+    * report. A filesystem whose rename refuses an existing target fails
+    * the rewrite loudly instead. */
+  private def writeMeta(spark: SparkSession, path: String, m: Meta): Unit = {
+    val f = metaFs(spark, path)
+    val tmp = new Path(path, MetaFile + ".tmp")
+    val out = f.create(tmp, true)
+    try out.write(s"${m.buckets}\n${m.key}\n${m.schema.json}".getBytes(StandardCharsets.UTF_8))
     finally out.close()
+    require(f.rename(tmp, new Path(path, MetaFile)), s"layout sidecar rename failed under $path")
   }
 
-  private def readMeta(spark: SparkSession, path: String): (Int, String) = {
-    val in = graft.SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, path)
-      .open(new Path(path, MetaFile))
+  private def readMeta(spark: SparkSession, path: String): Meta = {
+    val in = metaFs(spark, path).open(new Path(path, MetaFile))
     val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split("\n", 2)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split("\n", 3)
       finally in.close()
-    (lines(0).trim.toInt, lines(1).trim)
+    require(lines.length == 3 && lines(2).trim.nonEmpty,
+      s"layout sidecar $path/$MetaFile has no schema line (line 3, the union " +
+        "schema as StructType JSON): the snapshot predates stored schemas; rebuild it")
+    Meta(lines(0).trim.toInt, lines(1).trim,
+      DataType.fromJson(lines(2).trim).asInstanceOf[StructType])
   }
 
   def numBuckets(spark: SparkSession, path: String): Int =
-    readMeta(spark, path)._1
+    readMeta(spark, path).buckets
 
   /** The merge key the layout was created with. */
   def keyOf(spark: SparkSession, path: String): String =
-    readMeta(spark, path)._2
+    readMeta(spark, path).key
 
-  /** Read the whole snapshot. Partitions can disagree on schema after a
-    * widening delta (only touched partitions gain the new columns), so
-    * every read goes through mergeSchema — absent columns surface as
-    * null, exactly the full-merge semantics. At 100 TB the union schema
-    * would live in a metastore/table format instead of being inferred
-    * from footers. */
+  /** A reader with the stored union schema (data columns, then the int
+    * bucket column, as partition inference would type it) and the layout
+    * tags [[BucketPruning]] reads. */
+  private def reader(spark: SparkSession, m: Meta): DataFrameReader =
+    spark.read.schema(m.schema.add(BucketCol, IntegerType))
+      .option(KeyOption, m.key).option(BucketsOption, m.buckets.toString)
+
+  /** Read the whole snapshot with the sidecar's union schema: a column
+    * that only some buckets' files carry (a widening delta rewrites only
+    * touched buckets) reads as null elsewhere, exactly the full-merge
+    * semantics, and no footer is opened to find the schema. A filter
+    * `key = lit` or `key IN (lits)` on the result scans only the
+    * literals' buckets. */
   def read(spark: SparkSession, path: String): DataFrame = {
     // Heal any bucket left mid-swap by a crashed mergeDelta first — a
     // bucket sitting at its backup name would otherwise silently vanish
     // from the scan.
     graft.SnapshotIO.recoverAll(spark.sparkContext.hadoopConfiguration, path)
-    spark.read.option("mergeSchema", "true").parquet(path)
+    reader(spark, readMeta(spark, path)).parquet(path)
   }
 
   /** Write the initial bucketed snapshot (df must be Merge.init'ed).
@@ -90,8 +146,8 @@ object PartitionedSnapshot {
     df.withColumn(BucketCol, bucketOf(col(key), buckets))
       .repartition(col(BucketCol))
       .write.partitionBy(BucketCol).mode("overwrite").parquet(path)
-    writeMeta(spark, path, buckets, key)
-    spark.read.parquet(path)
+    writeMeta(spark, path, Meta(buckets, key, df.schema))
+    read(spark, path)
   }
 
   /** Whether the layout sidecar exists — the day-zero probe. */
@@ -99,20 +155,26 @@ object PartitionedSnapshot {
     graft.SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, path)
       .exists(new Path(path, MetaFile))
 
-  /** Day-zero commit of an EMPTY bucketed snapshot: a `partitionBy` write
-    * of zero rows produces no partition directories, leaving nothing for
-    * schema inference — so the schema is carried by a SENTINEL partition
-    * outside the hash range (`id_bucket=-1`, one zero-row parquet file).
-    * [[read]] surfaces its zero rows harmlessly; [[mergeDelta]] never
-    * touches it (pmod is 0..n-1). Crash-safe: the sidecar commits last,
-    * so a half-written init is simply re-run. `empty` must be
-    * Merge.init'ed and carry zero rows. */
+  /** Day-zero commit of an EMPTY bucketed snapshot: only the sidecar,
+    * whose stored schema is `empty`'s, so [[read]] returns zero rows of
+    * that schema before any bucket exists. `empty` must be Merge.init'ed;
+    * only its schema is used. */
   def initEmpty(empty: DataFrame, path: String, key: String = "id",
-                buckets: Int = 64): Unit = {
-    val spark = empty.sparkSession
-    empty.limit(0).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/$BucketCol=-1")
-    writeMeta(spark, path, buckets, key)
+                buckets: Int = 64): Unit =
+    writeMeta(empty.sparkSession, path, Meta(buckets, key, empty.schema))
+
+  /** The stored schema widened by `merged`'s new columns, appended in
+    * `merged`'s order. A stored column whose type changed fails loudly:
+    * the untouched buckets' files still carry the stored type. */
+  private def widen(path: String, stored: StructType, merged: StructType): StructType = {
+    merged.fields.foreach { f =>
+      stored.find(_.name == f.name).foreach { s =>
+        require(DataTypeUtils.equalsIgnoreNullability(s.dataType, f.dataType),
+          s"snapshot at $path stores '${f.name}' as ${s.dataType.simpleString}, " +
+            s"the merge produced ${f.dataType.simpleString}")
+      }
+    }
+    StructType(stored.fields ++ merged.fields.filterNot(f => stored.fieldNames.contains(f.name)))
   }
 
   /** Merge `delta` into the snapshot at `path`, rewriting only the
@@ -125,47 +187,35 @@ object PartitionedSnapshot {
                  key: String = "id",
                  now: Column = current_timestamp(),
                  postMerge: DataFrame => DataFrame = identity): Seq[Long] = {
-    val (n, storedKey) = readMeta(spark, path)
-    require(storedKey == key,
-      s"snapshot at $path is keyed on '$storedKey', merge asked for '$key'")
-    val deltaB = delta.withColumn(BucketCol, bucketOf(col(key), n))
+    val m = readMeta(spark, path)
+    require(m.key == key,
+      s"snapshot at $path is keyed on '${m.key}', merge asked for '$key'")
+    val deltaB = delta.withColumn(BucketCol, bucketOf(col(key), m.buckets))
     // Control-plane: which partitions does this delta touch? ≤ n values.
     val touched = deltaB.select(BucketCol).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
     if (touched.nonEmpty) {
-      // Partition-pruned read, pruned at the LISTING level (r21): the
-      // old form read the snapshot ROOT with mergeSchema, which lists
-      // and footer-probes EVERY bucket's files before the filter prunes
-      // — an O(all buckets) control-plane job per tick. Listing only
-      // the touched directories makes the merge's read O(touched) in
-      // listing and schema work too. Semantics are unchanged: the rows
-      // are exactly the touched buckets' rows either way, and a column
-      // that exists only in UNTOUCHED buckets merely stays absent from
-      // the rewritten buckets instead of riding along as all-nulls —
-      // the mergeSchema read surfaces both identically as null. Heal
-      // first (read() did it): a bucket mid-swap must not be mistaken
-      // for a brand-new one. Brand-new buckets (no directory yet) fall
-      // back to the full read ONCE for its union schema — at most once
-      // per bucket lifetime.
+      // The snapshot side reads only the touched directories, with the
+      // stored schema: no file listing, footer or row of an untouched
+      // bucket is opened. Heal first (read() does it): a bucket mid-swap
+      // must not be mistaken for a brand-new one. A touched bucket with
+      // no directory yet is brand-new and contributes no rows.
       val conf = spark.sparkContext.hadoopConfiguration
       graft.SnapshotIO.recoverAll(conf, path)
       val hfs = graft.SnapshotIO.fs(conf, path)
-      val touchedDirs = touched.map(b => s"$path/$BucketCol=$b")
-        .filter(d => hfs.exists(new Path(d)))
+      val present = hfs.listStatus(new Path(path)).map(_.getPath.getName).toSet
+      val touchedDirs = touched.map(b => s"$BucketCol=$b").filter(present)
+        .map(d => s"$path/$d")
       val snapTouched =
-        (if (touchedDirs.nonEmpty)
-          // a touched bucket with NO directory yet is brand-new and
-          // contributes no rows — exactly what the filtered full read
-          // returned for it
-          spark.read.option("mergeSchema", "true").option("basePath", path)
-            .parquet(touchedDirs: _*)
-        else // every touched bucket is new: only the sentinel carries
-             // the snapshot schema — the one case that needs a root read
-          read(spark, path).filter(col(BucketCol).isin(touched: _*)))
-        .drop(BucketCol)
+        if (touchedDirs.nonEmpty)
+          reader(spark, m).option("basePath", path).parquet(touchedDirs: _*)
+            .drop(BucketCol)
+        else spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema)
       val merged = postMerge(
         Merge.upsert(snapTouched, deltaB.drop(BucketCol), key, now))
-        .withColumn(BucketCol, bucketOf(col(key), n))
+      // stored column order, new columns last: every bucket's files then
+      // carry a prefix of the stored schema
+      val schema = widen(path, m.schema, merged.schema)
       // Write the touched buckets to a staging dir, then move each into
       // place with the crash-safe backup-then-rename swap — dynamic
       // partition overwrite would delete-then-replace and a crash at
@@ -181,8 +231,13 @@ object PartitionedSnapshot {
       // upsert shuffle partition writes a sliver into every touched
       // directory — touched × partitions files per tick, and the next
       // tick's pruned read opens all of them
-      merged.repartition(col(BucketCol))
+      merged.select(schema.fieldNames.map(col): _*)
+        .withColumn(BucketCol, bucketOf(col(key), m.buckets))
+        .repartition(col(BucketCol))
         .write.partitionBy(BucketCol).mode("overwrite").parquet(staging)
+      // A widened schema commits BEFORE the first swap: a crash between
+      // the two can expose a new all-null column, never hide a written one.
+      if (schema.length > m.schema.length) writeMeta(spark, path, m.copy(schema = schema))
       touched.foreach { b =>
         graft.SnapshotIO.swap(conf,
           s"$staging/$BucketCol=$b", s"$path/$BucketCol=$b")

@@ -136,7 +136,7 @@ object DocsStream {
     * documented monotonicity (see [[indexedDedupTick]]). O(corpus) by
     * design, riding the same cadence (and the same persisted
     * corpus-shingle frame) as the index rebuild it accompanies.
-    * Crash-safe: the replacement layout (sentinel, buckets, sidecar) is
+    * Crash-safe: the replacement layout (sidecar, buckets) is
     * staged COMPLETELY beside the live snapshot, then moved in by
     * `SnapshotIO.replace`; [[readPairs]] and the daily tick heal a
     * mid-swap crash, and a re-run recomputes from the unchanged store. */
@@ -148,8 +148,8 @@ object DocsStream {
     val pairs = Dedup.minhashPairsFrom(corpusSh, threshold, numHashes, bands)
       .withColumn("pk", concat_ws(":", col("a_id"), col("b_id")))
     graft.SnapshotIO.replace(spark.sparkContext.hadoopConfiguration, snap) { tmp =>
-      // sentinel-first staging: a zero-pair corpus still publishes a
-      // readable (schema-carrying) snapshot
+      // sidecar-first staging: a zero-pair corpus still publishes a
+      // readable snapshot (the sidecar carries the schema)
       PartitionedSnapshot.initEmpty(Merge.init(pairs.limit(0)), tmp,
         "pk", PairBuckets)
       PartitionedSnapshot.mergeDelta(spark, tmp, pairs, "pk", now)

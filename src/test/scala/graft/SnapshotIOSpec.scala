@@ -106,7 +106,7 @@ class SnapshotIOSpec extends SparkSpec {
         debian = Some(res("debian.json"))),
       s"$work/snap", status, Timestamp.valueOf("2025-04-02 00:00:00"))
     // a widening delta adds columns only to TOUCHED buckets — the
-    // mergeSchema read is the layout's contract
+    // union schema in the layout sidecar is the layout's contract
     val snap = operators.PartitionedSnapshot.read(spark, s"$work/snap")
     val r = snap.filter(col("id") === "CVE-2024-0001").head()
     assert(!r.isNullAt(r.fieldIndex("exploitdb")))
