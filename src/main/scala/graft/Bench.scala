@@ -126,34 +126,9 @@ object Bench {
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fl,"skipped":$sk,"repeat":$repeat,"extraRepeat":$er,"pins":$pins,"steadyTotal":$steadyTotal,"sf":"$sfDir"}"""
     println(json)
-    // COMPACT final line (r22, r21 verdict tasks 1–2): at 144 queries the
-    // full line above is ~9 KB, but the driver keeps only the last few KB
-    // of stdout — BENCH_r20/r21 both landed `parsed: null` and the PERF
-    // comparison was empty two rounds running. Print a second, LAST line
-    // sized to survive any plausible tail window (~2 KB): the same
-    // schema, with `queries` holding every pin plus as many of the
-    // HEAVIEST remaining entries as fit a fixed byte budget (the cheap
-    // tail of sub-second queries is where the budget runs out; the full
-    // per-query map is unchanged above and in BENCH_LAST.json).
-    val budget = 1500 // bytes for the queries map — total line < ~1.9 KB
-    def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    val byWeight = results.collect { case (n, Some(v)) => n -> v }
-      .sortBy { case (n, v) => (!pinNames.contains(n), -v) }
-    val compactEntries = scala.collection.mutable.ListBuffer[String]()
-    var used = 0
-    byWeight.foreach { case (n, v) =>
-      val e = "\"" + n + "\":" + fmt(v)
-      if (used + e.length + 1 <= budget) { compactEntries += e; used += e.length + 1 }
-    }
-    val cpins = pinVals.map { case (n, v) => "\"" + n + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${compactEntries.mkString("{", ",", "}")},"failed":$fl,"skipped":$sk,"repeat":$repeat,"pins":$cpins,"steadyTotal":${fmt(steadyTotal)},"n":${results.count(_._2.nonEmpty)},"compact":true,"full":"BENCH_LAST.json","sf":"$sfDir"}""")
-    // Also land the full JSON at a stable path: the driver's stdout tail
-    // keeps only the last 2 KB, so the committed BENCH_r*.json artifacts
-    // had parsed:null and cross-round diffs leaned on the ~56-query tail
-    // overlap (round-15 verdict, missing #3). The file carries the whole
-    // per-query map; a write failure must not fail the bench itself.
+    // Also land the line at a stable path, so a reader need not pick it
+    // out of sbt's own output; a write failure must not fail the bench
+    // itself.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

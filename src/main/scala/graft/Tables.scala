@@ -12,10 +12,6 @@ import org.apache.spark.sql.types.LongType
   * column-pruned + filter-pushed by Catalyst) is identical.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Sessions must set spark.sql.legacy.parquet.nanosAsLong=true — Spark 4
     * rejects parquet TIMESTAMP(NANOS) (events.ts) otherwise. */
   val nanosAsLongKey = "spark.sql.legacy.parquet.nanosAsLong"
@@ -42,8 +38,4 @@ object Tables {
     }
     else df
   }
-
-  /** Register every table as a temp view (for spark.sql use). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

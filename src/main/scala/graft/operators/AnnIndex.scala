@@ -749,12 +749,6 @@ object AnnIndex {
     parts(1).toInt
   }
 
-  /** Centroids live at the CHAIN ROOT (the [[pqBooks]] rule): delta
-    * layers were assigned against them, so probes must rank with the
-    * same quantizer. */
-  def ivfpCentroids(spark: SparkSession, path: String): DataFrame =
-    rootData(spark, ivfpInfo(spark, path), "centroids")
-
   /** The posting relation (id, unit, cell), cell-partitioned on disk —
     * every layer down the chain, minus ids tombstoned by a later layer
     * ([[foldLayers]]). Cell filters push through the unions and the

@@ -110,10 +110,6 @@ object PartitionedSnapshot {
   def numBuckets(spark: SparkSession, path: String): Int =
     readMeta(spark, path).buckets
 
-  /** The merge key the layout was created with. */
-  def keyOf(spark: SparkSession, path: String): String =
-    readMeta(spark, path).key
-
   /** A reader with the stored union schema (data columns, then the int
     * bucket column, as partition inference would type it) and the layout
     * tags [[BucketPruning]] reads. */

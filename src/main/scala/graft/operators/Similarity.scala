@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.JobLabel
+
 /** Embedding similarity search.
   *
   * All vector math is an ordered left fold in double precision
@@ -756,12 +758,8 @@ object Similarity {
     * aggregate; specs force engagement on tiny fixtures with floor 0. */
   val LadderRowsFloor: Long = 64L * 1000 * 1000
 
-  /** The auto-C ladder DECISION, factored so the production chain
-    * ([[autoCLadder]]) and the stage-cost probe (AutoKProbe) share one
-    * implementation — a future change to the balance rule, the work
-    * floor, the level cap, or the overflow guard cannot drift between
-    * the two on geometries the drift-pin fixture doesn't probe (r18
-    * verdict watch 1). Returns the level TARGETS, coarsest first:
+  /** The auto-C ladder DECISION of [[autoCLadder]]. Returns the level
+    * TARGETS, coarsest first:
     * another level engages while the current top level's population
     * still re-dominates (maxPop > top × coarseTarget) AND its estimated
     * scored relation N × ceil(maxPop/top) clears `ladderRowsFloor`
@@ -784,29 +782,27 @@ object Similarity {
   }
 
   /** Stage 1b of [[semDedupAutoKRemovals]] — the recursive auto-C
-    * ladder, factored out of the chain so AutoKProbe times the SAME
-    * fold it runs in production (one implementation, r18 verdict
-    * watch 1). One control-plane aggregate over `coarse0` reads
+    * ladder. One control-plane aggregate over `coarse0` reads
     * (maxPop, N, live cells); [[ladderTargets]] picks the level
     * targets; each level subdivides ([[withAutoCells]]), re-centers
     * (exact-decimal means), re-assigns restricted
     * ([[assignCellsWithinCoarse]]) and — between levels only —
-    * densifies. `wrap(label)` wraps every level intermediate:
-    * production passes a plain localCheckpoint (each relation feeds
-    * ≥ 2 plan sides), the probe adds stage timing around the same
-    * checkpoint. Returns the refined coarse assignment plus an UPPER
-    * BOUND on its live-cell count (cells_in + N/t per level, clamped
-    * to N) — the `cellsHint` the next [[withAutoCells]]/
-    * [[densifyCells]] control gates need, threaded instead of
-    * re-measured so the gate costs zero extra jobs. */
+    * densifies. Every level intermediate is localCheckpointed (each
+    * relation feeds ≥ 2 plan sides), under a [[JobLabel]] naming the
+    * stage and its level target, so `Profile --jobs` attributes the
+    * recursion's cost level by level. Returns the refined coarse
+    * assignment plus an UPPER BOUND on its live-cell count (cells_in +
+    * N/t per level, clamped to N) — the `cellsHint` the next
+    * [[withAutoCells]]/[[densifyCells]] control gates need, threaded
+    * instead of re-measured so the gate costs zero extra jobs. */
   def autoCLadder(units: DataFrame, coarse0: DataFrame, coarseTarget: Long,
-                  ladderRowsFloor: Long = LadderRowsFloor)
-                 (wrap: String => DataFrame => DataFrame =
-                    _ => df => df.localCheckpoint())
-      : (DataFrame, Long) = {
-    val pr = coarse0.groupBy(col("coarse")).agg(count(lit(1)).as("n"))
-      .agg(max(col("n")).as("mx"), sum(col("n")).as("tot"),
-           count(lit(1)).as("cells")).head()
+                  ladderRowsFloor: Long = LadderRowsFloor): (DataFrame, Long) = {
+    val spark = units.sparkSession
+    val pr = JobLabel(spark, "auto-C ladder read (maxPop, N)") {
+      coarse0.groupBy(col("coarse")).agg(count(lit(1)).as("n"))
+        .agg(max(col("n")).as("mx"), sum(col("n")).as("tot"),
+             count(lit(1)).as("cells")).head()
+    }
     val maxPop = if (pr.isNullAt(0)) 0L else pr.getLong(0)
     val n = if (pr.isNullAt(1)) 0L else pr.getLong(1)
     var cells = pr.getLong(2)
@@ -816,26 +812,33 @@ object Similarity {
       // live cells after this level ≤ its sub-seed count =
       // Σ ceil(pop/t) ≤ cells_in + N/t (and trivially ≤ N)
       cells = math.min(n, curCells + n / t + 1L)
-      val seed = wrap(s"auto-C subdivide (t=$t) + ckpt")(withAutoCells(
-          units.select(col("id"), col("unit")).join(cur, "id"),
-          t, idCol = "id", cellCol = "coarse", outCol = "c2cell",
-          cellsHint = Some(curCells)))
-      // pinned (via wrap): the conditional-broadcast probe and the
-      // refined assign would otherwise each re-run the centroid
-      // aggregate
-      val cents = wrap(s"auto-C sub-seed centroids (t=$t)")(exactCentroids(
-          seed.select(col("c2cell").as("cell"), col("unit")), "cell", "unit"))
-      val assigned = assignCellsWithinCoarse(seed, cents)
-        .select(col("id"), col("assigned_cell").as("coarse"))
-      // densified BETWEEN levels only (see densifyCells): the next
-      // level re-composites, so its input must stay live-cell-bounded;
-      // the LAST level's raw composites feed auto-k directly at the
-      // single-level range the oracle mirrors. Checkpointed either
-      // way: the next stage reads it twice (probe + pops sides).
-      wrap(s"auto-C restricted re-assign (t=$t)")(
-        if (i < tops.size - 1)
-          densifyCells(assigned, "coarse", cellsHint = Some(cells))
-        else assigned)
+      val seed = JobLabel(spark, s"auto-C subdivide (t=$t)") {
+        withAutoCells(
+            units.select(col("id"), col("unit")).join(cur, "id"),
+            t, idCol = "id", cellCol = "coarse", outCol = "c2cell",
+            cellsHint = Some(curCells))
+          .localCheckpoint()
+      }
+      // pinned: the conditional-broadcast probe and the refined assign
+      // would otherwise each re-run the centroid aggregate
+      val cents = JobLabel(spark, s"auto-C sub-seed centroids (t=$t)") {
+        exactCentroids(
+            seed.select(col("c2cell").as("cell"), col("unit")), "cell", "unit")
+          .localCheckpoint()
+      }
+      JobLabel(spark, s"auto-C restricted re-assign (t=$t)") {
+        val assigned = assignCellsWithinCoarse(seed, cents)
+          .select(col("id"), col("assigned_cell").as("coarse"))
+        // densified BETWEEN levels only (see densifyCells): the next
+        // level re-composites, so its input must stay live-cell-bounded;
+        // the LAST level's raw composites feed auto-k directly at the
+        // single-level range the oracle mirrors. Checkpointed either
+        // way: the next stage reads it twice (probe + pops sides).
+        (if (i < tops.size - 1)
+           densifyCells(assigned, "coarse", cellsHint = Some(cells))
+         else assigned)
+          .localCheckpoint()
+      }
     }
     (out, cells)
   }
@@ -853,6 +856,9 @@ object Similarity {
                          labelCol: String, coarseTarget: Long,
                          ladderRowsFloor: Long)
       : (DataFrame, DataFrame) = {
+    // each eager stage below runs under a JobLabel naming it, so
+    // `Profile --jobs` attributes the chain's cost stage by stage
+    val spark = corpus.sparkSession
     val units = unitVectors(Spread.ensureParallel(corpus), Seq(idCol -> "id", labelCol -> "cell"), vecCol)
     val ccents = exactCentroids(units)
     // checkpointed LAZILY: it feeds the ladder's control read plus two
@@ -861,13 +867,16 @@ object Similarity {
     // consumer, and with an EAGER checkpoint the materialization and
     // the ladder's (maxPop, N) aggregate would be two separate jobs
     // over the same relation (r18 verdict task 5: the control read now
-    // rides the checkpoint-materializing action itself)
-    val coarse0 = assignCellsAgg(units, ccents)
-      .select(col("id"), col("assigned_cell").as("coarse"))
-      .localCheckpoint(false)
+    // rides the checkpoint-materializing action itself). Lazy for its
+    // result stage only: under AQE the centroid and assign shuffle
+    // stages run here, so they carry this label.
+    val coarse0 = JobLabel(spark, "coarse assign") {
+      assignCellsAgg(units, ccents)
+        .select(col("id"), col("assigned_cell").as("coarse"))
+        .localCheckpoint(false)
+    }
     // AUTO-C ladder (stage 1b) — decision + fold live in
-    // [[ladderTargets]]/[[autoCLadder]], shared verbatim with
-    // AutoKProbe's stage-timing wrapper. With coarseTarget <= 0 (the
+    // [[ladderTargets]]/[[autoCLadder]]. With coarseTarget <= 0 (the
     // flat legacy form, small-corpus call sites) no control read
     // exists, so the auto-k pops below keeps the ungated broadcast
     // plan — at 10^10+ vectors the LADDER is the supported path (it
@@ -884,29 +893,36 @@ object Similarity {
     val (coarse, cellsHint) =
       if (coarseTarget <= 0L) (coarse0, None)
       else {
-        val (c, h) = autoCLadder(units, coarse0, coarseTarget,
-          ladderRowsFloor)()
+        val (c, h) = autoCLadder(units, coarse0, coarseTarget, ladderRowsFloor)
         (c, Some(h))
       }
-    val seeded = withAutoCells(
-        units.select(col("id"), col("unit")).join(coarse, "id"),
-        targetCell, idCol = "id", cellCol = "coarse", outCol = "scell",
-        cellsHint = cellsHint)
-      .localCheckpoint()
-    var cents = exactCentroids(
-        seeded.select(col("scell").as("cell"), col("unit")), "cell", "unit")
-      .localCheckpoint()
+    val seeded = JobLabel(spark, "auto-k subdivide") {
+      withAutoCells(
+          units.select(col("id"), col("unit")).join(coarse, "id"),
+          targetCell, idCol = "id", cellCol = "coarse", outCol = "scell",
+          cellsHint = cellsHint)
+        .localCheckpoint()
+    }
+    var cents = JobLabel(spark, "auto-k sub-seed centroids") {
+      exactCentroids(
+          seeded.select(col("scell").as("cell"), col("unit")), "cell", "unit")
+        .localCheckpoint()
+    }
     // broadcast decision hoisted out of the Lloyd loop (r17 verdict
     // task 4): one probe job on the round-0 centroids covers every
     // round + the final assign — the count only shrinks across rounds
-    val pin = Some(broadcastDecision(cents))
-    (1 to refineIters).foreach { _ =>
-      val a = assignCellsWithinCoarse(seeded, cents, pinBroadcast = pin)
-      cents = exactCentroids(
-          seeded.join(a.select(col("id"), col("assigned_cell")), "id")
-            .select(col("assigned_cell").as("cell"), col("unit")),
-          "cell", "unit")
-        .localCheckpoint()
+    val pin = Some(JobLabel(spark, "auto-k broadcast decision") {
+      broadcastDecision(cents)
+    })
+    (1 to refineIters).foreach { r =>
+      cents = JobLabel(spark, s"Lloyd round $r (restricted assign + means)") {
+        val a = assignCellsWithinCoarse(seeded, cents, pinBroadcast = pin)
+        exactCentroids(
+            seeded.join(a.select(col("id"), col("assigned_cell")), "id")
+              .select(col("assigned_cell").as("cell"), col("unit")),
+            "cell", "unit")
+          .localCheckpoint()
+      }
     }
     (seeded, assignCellsWithinCoarse(seeded, cents, pinBroadcast = pin))
   }
@@ -941,10 +957,12 @@ object Similarity {
     val (seeded, assignedFull) = autoKChain(corpus, targetCell, refineIters,
       idCol, vecCol, labelCol, coarseTarget, ladderRowsFloor)
     val assigned = assignedFull.select(col("id"), col("assigned_cell"))
-    val au = Dedup.capPopulation(
-        seeded.select(col("id"), col("unit")).join(assigned, "id"),
-        Seq(col("assigned_cell")), maxCell)
-      .localCheckpoint()
+    val au = JobLabel(corpus.sparkSession, "final assign + population cap") {
+      Dedup.capPopulation(
+          seeded.select(col("id"), col("unit")).join(assigned, "id"),
+          Seq(col("assigned_cell")), maxCell)
+        .localCheckpoint()
+    }
     au.as("a").join(au.as("b"),
         col("a.assigned_cell") <=> col("b.assigned_cell") &&
         col("a.id") < col("b.id"))
@@ -1117,47 +1135,24 @@ object Similarity {
                 vecCol: String = "embedding", cellCol: String = "label"): DataFrame = {
     val (_, books, codes) =
       pqIndex(corpus, idCol, vecCol, Some(cellCol), m, subLen, numCodes, trainIters)
-    ivfPqTopKFrom(books, codes, queries, k, m, subLen, idCol, vecCol, cellCol)
-  }
-
-  /** The IVFADC probe alone against PREBUILT artifacts: [[adcTopK]]
-    * over each query's own cell ([[ownCell]] — NULL matches nothing),
-    * factored so training can be supplied externally (TrainBench's
-    * composed recall mode trains on full-vs-sampled corpora and probes
-    * the same codes). `codes` must carry (id, sub, code, cell): the
-    * encoded corpus joined with its coarse cell ids. */
-  def ivfPqTopKFrom(books: DataFrame, codes: DataFrame, queries: DataFrame,
-                    k: Int, m: Int = 4, subLen: Int = 16,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    cellCol: String = "label"): DataFrame =
+    // the probe: [[adcTopK]] over each query's own cell ([[ownCell]] —
+    // NULL matches nothing)
     adcTopK(books, codes, ownCell(unitVectors(queries,
       Seq(idCol -> "id", cellCol -> "p_cell"), vecCol, "unit")), k, m, subLen)
+  }
 
-  /** Multi-probe IVFADC probe over prebuilt artifacts — the q89 recall
-    * dial applied to the COMPOSED path: [[adcTopK]] over each query's
-    * `nprobe` nearest cells ([[nearestCells]]) instead of one, so recall
-    * recovers toward the flat-ADC ceiling at nprobe/cells of a full
-    * scan. The corpus side still reads only the m small-int codes of the
-    * probed cells. With nprobe ≥ |cells| this IS flat PQ-ADC
-    * ([[pqTopKFrom]]), spec-pinned — including on NULL-labeled corpora,
-    * where a NULL cell is a probeable population like any other rather
-    * than a silently-dropped candidate set (ADVICE r18). `codes` as in
-    * [[ivfPqTopKFrom]]; `centroids` = (cell, centroid). */
-  def ivfPqTopKFromMultiProbe(books: DataFrame, codes: DataFrame,
-                              centroids: DataFrame, queries: DataFrame,
-                              k: Int, nprobe: Int, m: Int = 4, subLen: Int = 16,
-                              idCol: String = "vec_id",
-                              vecCol: String = "embedding"): DataFrame =
-    adcTopK(books, codes,
-      nearestCells(unitVectors(queries, Seq(idCol -> "query_id"), vecCol, "qu"),
-          centroids, nprobe)
-        .select(col("query_id").as("id"), col("qu").as("unit"), col("p_cell")),
-      k, m, subLen)
-
-  /** In-session multi-probe IVFADC (q142): label cells with their
-    * exact-decimal centroids (q87's init layer — deterministic,
-    * oracle-mirrorable) as the coarse layer, PQ codebooks trained as in
-    * [[ivfPqTopK]], probe via [[ivfPqTopKFromMultiProbe]]. */
+  /** In-session multi-probe IVFADC (q142) — the q89 recall dial applied
+    * to the COMPOSED path. Label cells with their exact-decimal
+    * centroids (q87's init layer — deterministic, oracle-mirrorable) as
+    * the coarse layer, PQ codebooks trained as in [[ivfPqTopK]], then
+    * [[adcTopK]] over each query's `nprobe` nearest cells
+    * ([[nearestCells]]) instead of one, so recall recovers toward the
+    * flat-ADC ceiling at nprobe/cells of a full scan. The corpus side
+    * still reads only the m small-int codes of the probed cells. With
+    * nprobe ≥ |cells| this IS flat PQ-ADC ([[pqTopK]]), spec-pinned —
+    * including on NULL-labeled corpora, where a NULL cell is a probeable
+    * population like any other rather than a silently-dropped candidate
+    * set (ADVICE r18). */
   def ivfPqTopKMultiProbe(corpus: DataFrame, queries: DataFrame, k: Int,
                           nprobe: Int, m: Int = 4, subLen: Int = 16,
                           numCodes: Int = 16, trainIters: Int = 2,
@@ -1166,8 +1161,11 @@ object Similarity {
                           cellCol: String = "label"): DataFrame = {
     val (cu, books, codes) =
       pqIndex(corpus, idCol, vecCol, Some(cellCol), m, subLen, numCodes, trainIters)
-    ivfPqTopKFromMultiProbe(books, codes, exactCentroids(cu), queries, k, nprobe,
-      m, subLen, idCol, vecCol)
+    adcTopK(books, codes,
+      nearestCells(unitVectors(queries, Seq(idCol -> "query_id"), vecCol, "qu"),
+          exactCentroids(cu), nprobe)
+        .select(col("query_id").as("id"), col("qu").as("unit"), col("p_cell")),
+      k, m, subLen)
   }
 
   /** All-pairs variant (no blocking) — exact but O(n²); test scale only. */

@@ -723,10 +723,10 @@ object Ext {
     // decide [25, 5] on the sf0.01 fixture's maxPop = 66 (the floor is
     // a PERF gate for tiny corpora, deliberately bypassed so the
     // recursion machinery itself sits under the hash gate — the same
-    // knob the engaged-ladder specs and the AutoKProbe --floor0 drift
-    // pin use). The hashed ids are depth-3 composites, so the
-    // two-level subdivide→re-assign→densify recursion is hash-proven
-    // against DuckDB's L=2 CTE chain, not just spec-pinned.
+    // knob the engaged-ladder specs use). The hashed ids are depth-3
+    // composites, so the two-level subdivide→re-assign→densify
+    // recursion is hash-proven against DuckDB's L=2 CTE chain, not just
+    // spec-pinned.
     "q143_autok_ladder2" -> ((s, dir) => {
       Similarity.semDedupAutoKAssign(
           t(s, dir, "embeddings"), AutoKTargetCell,

@@ -10,7 +10,7 @@ import graft.operators.Similarity
 class PqSpec extends SparkSpec {
 
   /** AnnIndex.sampleHash restated (it is private by design; the specs
-    * and TrainBench pin that this restatement IS the training sample):
+    * below pin that this restatement IS the training sample):
     * p = (id mod 2^31) · 2654435761, hash = xor(p, p >> 31) mod 2^20. */
   private def sampleHashCol(id: org.apache.spark.sql.Column) = {
     val p = pmod(id, lit(2147483648L)) * lit(2654435761L)

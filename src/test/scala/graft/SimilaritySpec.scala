@@ -136,28 +136,34 @@ class SimilaritySpec extends SparkSpec {
     assert(cell == Similarity.MaxSeedCell * Similarity.SplitCap)
   }
 
-  test("AutoKProbe's staged composition equals semDedupAutoKRemovals (drift pin)") {
-    // the probe exists to attribute cost to the PRODUCTION stages; this
-    // pin makes a drift between the two a failing test instead of a
-    // silently-mistimed pipeline. Constants chosen so both auto layers
-    // actually subdivide on the 50-vector fixture.
+  test("auto-k chain removals, flat and engaged ladder, each stage under a job label") {
+    // Constants chosen so both auto layers actually subdivide on the
+    // 50-vector fixture; with the work floor zeroed the LADDER engages
+    // with stacked levels (t = 9 above t = 3). Every eager stage runs
+    // under a JobLabel, so a listener (Profile --jobs) can attribute
+    // the chain's cost to the ladder levels and the Lloyd rounds.
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    def m(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val probe = graft.tools.AutoKProbe.removals(e, 2L, 3L, 0.4)(
-      _ => df => df.localCheckpoint())
-    val prod = Similarity.semDedupAutoKRemovals(e, 2L, 0.4, coarseTarget = 3L)
-    assert(m(probe) == m(prod))
-    assert(m(probe).nonEmpty, "the fixture must produce removals")
-    // and with the work floor zeroed the LADDER engages on this fixture
-    // (maxPop 50 > 3² with two stacked levels) — probe and production
-    // must stay equal through the engaged recursion too
-    val probeL = graft.tools.AutoKProbe.removals(e, 2L, 3L, 0.4,
-      ladderRowsFloor = 0L)(_ => df => df.localCheckpoint())
-    val prodL = Similarity.semDedupAutoKRemovals(e, 2L, 0.4,
-      coarseTarget = 3L, ladderRowsFloor = 0L)
-    assert(m(probeL) == m(prodL))
-    assert(m(probeL).nonEmpty, "the engaged ladder must produce removals")
+    val descs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descs.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val flat = Similarity.semDedupAutoKRemovals(e, 2L, 0.4, coarseTarget = 3L).collect()
+      assert(flat.nonEmpty, "the fixture must produce removals")
+      val ladder = Similarity.semDedupAutoKRemovals(e, 2L, 0.4,
+        coarseTarget = 3L, ladderRowsFloor = 0L).collect()
+      assert(ladder.nonEmpty, "the engaged ladder must produce removals")
+      // the listener bus delivers asynchronously: wait for the labels
+      val want = Seq("auto-C subdivide (t=9)", "auto-C subdivide (t=3)",
+        "auto-C restricted re-assign (t=3)", "Lloyd round 1 (restricted assign + means)")
+      val deadline = System.currentTimeMillis() + 10000
+      while (!want.forall(descs.contains) && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      want.foreach(w => assert(descs.contains(w), s"no job labelled '$w' in $descs"))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("assignCellsAgg: the aggregated top-1 equals the window-based assignCells") {
@@ -552,7 +558,7 @@ class SimilaritySpec extends SparkSpec {
       .localCheckpoint()
     for (ct <- Seq(3L, 100L)) {
       val (refined, bound) = Similarity.autoCLadder(units, coarse0, ct,
-        ladderRowsFloor = 0L)()
+        ladderRowsFloor = 0L)
       val live = refined.select("coarse").distinct().count()
       assert(live <= bound,
         s"coarseTarget $ct: live cells $live exceed the returned bound $bound")
