@@ -5,34 +5,14 @@ import java.sql.Timestamp
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.Watermarks
-
-/** Job orchestration (main.py:64-147, 202-238): init-vs-update inference,
-  * the periodic tick, catch-up on missed windows, graceful stop.
-  *
-  * The reference's scheduler thread + signal handlers become a plain
-  * driver loop here: each tick is a batch job whose incremental window is
-  * computed from the persisted watermark (T2/T3), and every write is the
-  * idempotent K1 merge so overlapping windows are safe (T4).
+/** The CVE side of a tick (main.py:64-98): the K1 merge of the landed
+  * sources into the bucketed snapshot. Scheduling, the job watermark
+  * stamp and the commit belong to [[DailyLoop]], the one scheduler
+  * (main.py:123-147 — its marker clock replaces the reference's
+  * scheduler thread).
   */
 object CveJob {
   val JobSource = "cvemate" // main.py:62, 98
-
-  /** Quirk #1 (SURVEY §2.11): the documented --init/--update flags don't
-    * exist; mode is inferred from a missing job watermark
-    * (main.py:232-238). */
-  def isInitRun(spark: SparkSession, statusPath: String): Boolean =
-    Watermarks.lastUpdated(spark, statusPath, JobSource).isEmpty
-
-  /** T3: a tick is due when elapsed ≥ interval (main.py:107-116) —
-    * the catch-up rule that runs immediately after downtime. */
-  def isTickDue(spark: SparkSession, statusPath: String,
-                now: Timestamp, intervalHours: Int = 4): Boolean =
-    Watermarks.lastUpdated(spark, statusPath, JobSource) match {
-      case None => true
-      case Some(last) =>
-        now.getTime - last.getTime >= intervalHours * 3600L * 1000L
-    }
 
   /** Hash-bucket count of the CVE snapshot layout (PartitionedSnapshot).
     * Sized like the pair snapshot's: each bucket stays a rewrite-cheap
@@ -56,8 +36,11 @@ object CveJob {
     * init has no sidecar and re-runs; a mid-merge crash leaves each
     * bucket fully-old or fully-new (per-bucket backup-then-rename
     * swaps), healed on the next read, and the keyed upsert is
-    * idempotent — so callers (DailyLoop's one-marker tick, runTick's
-    * watermark stamp) can re-run the whole step under the same batch. */
+    * idempotent — so DailyLoop's one-marker tick can re-run the whole
+    * step under the same batch. Day zero is inferred from the missing
+    * sidecar (quirk #1, SURVEY §2.11: the reference documents --init /
+    * --update flags it does not have and infers the mode from a missing
+    * job watermark, main.py:232-238). */
   def mergeLanded(spark: SparkSession, landing: CvePipeline.Landing,
                   snapshotPath: String, now: Timestamp): Unit = {
     import graft.operators.PartitionedSnapshot
@@ -76,36 +59,5 @@ object CveJob {
         postMerge = CvePipeline.prioritize)
     }
     ()
-  }
-
-  /** One tick: run the landed sources through the bounded merge, stamp
-    * the job watermark (main.py:98). `landing` sources that are absent
-    * are skipped — the per-source freshness gate (P11) lives with the
-    * caller because it needs each source's upstream stamp. */
-  def runTick(spark: SparkSession, landing: CvePipeline.Landing,
-              snapshotPath: String, statusPath: String,
-              now: Timestamp): Unit = {
-    mergeLanded(spark, landing, snapshotPath, now)
-    Watermarks.upsert(spark, statusPath, JobSource, now)
-  }
-
-  /** T1/T6: the scheduler loop as a driver function — tick when due,
-    * sleep otherwise, stop cooperatively. Production deployments would
-    * use an external scheduler or Trigger.ProcessingTime; this mirrors
-    * the reference's in-process loop (main.py:123-147). */
-  def loop(spark: SparkSession, landing: CvePipeline.Landing,
-           snapshotPath: String, statusPath: String,
-           intervalHours: Int, shouldStop: () => Boolean,
-           clock: () => Timestamp = () => new Timestamp(System.currentTimeMillis()),
-           sleepMs: Long = 1000L): Int = {
-    var ticks = 0
-    while (!shouldStop()) {
-      val now = clock()
-      if (isTickDue(spark, statusPath, now, intervalHours)) {
-        runTick(spark, landing, snapshotPath, statusPath, now)
-        ticks += 1
-      } else Thread.sleep(sleepMs)
-    }
-    ticks
   }
 }

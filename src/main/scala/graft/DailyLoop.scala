@@ -18,7 +18,7 @@ import graft.streaming.DocsStream
   * commits the tick atomically.
   *
   * Crash model — ONE commit point per tick. A tick touches the eight
-  * stores of [[Paths]]: the CVE snapshot, the watermark table, the pair
+  * stores of [[Paths]]: the CVE snapshot, the watermark record, the pair
   * snapshot, the shingle store, the band index, the PQ and IVF-posting
   * ANN chains and the raw-vector store. Two store protocols carry most
   * of that state: [[operators.BatchStore]] (the shingle and raw-vector
@@ -71,7 +71,7 @@ object DailyLoop {
   /** Everything a tick persists, rooted under one directory. */
   final case class Paths(root: String) {
     val snapshot = s"$root/snapshot"   // CVE K1 merge target
-    val status   = s"$root/status"     // per-source watermark table
+    val status   = s"$root/status"     // per-source watermark record (a text file)
     val index    = s"$root/idx"        // layered band index
     val store    = s"$root/shingles"   // bucketed shingle store
     val pairs    = s"$root/pairs"      // verified near-dup pairs
@@ -99,7 +99,7 @@ object DailyLoop {
 
   /** Committed tick count and the last committed tick's stamp — read
     * from the marker files, the loop's ONLY source of tick-completion
-    * truth (the watermark table is freshness metadata for P11 consumers,
+    * truth (the watermark record is freshness metadata for P11 consumers,
     * not a commit flag). */
   def committedTick(spark: SparkSession, p: Paths): (Long, Option[Timestamp]) = {
     val f = SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, p.ticks)
@@ -130,14 +130,14 @@ object DailyLoop {
     }
 
   /** One daily tick. Steps, in order: (1) K1 merge of the landed CVE
-    * sources into the snapshot + prioritize (CveJob.runTick without its
-    * watermark stamp — the COMBINED tick owns commit), (2) the indexed
-    * dedup tick over the landed document delta, (2b) the ANN ingest of
-    * the landed embedding delta (batch-stamped build/append +
-    * answer-invariant compaction, see below), (3) compaction when the
-    * layer chain exceeds `maxChain` (full rebuild from the store under
-    * the index's OWN layout — a compaction must never change the hash
-    * family), (4) freshness stamp, (5) the marker commit. */
+    * sources into the snapshot + prioritize (CveJob.mergeLanded), (2)
+    * the indexed dedup tick over the landed document delta, (2b) the
+    * ANN ingest of the landed embedding delta (batch-stamped
+    * build/append + answer-invariant compaction, see below), (3)
+    * compaction when the layer chain exceeds `maxChain` (full rebuild
+    * from the store under the index's OWN layout — a compaction must
+    * never change the hash family), (4) freshness stamp, (5) the marker
+    * commit. */
   def runTick(spark: SparkSession, landing: CvePipeline.Landing,
               docsDelta: DataFrame, p: Paths, now: Timestamp,
               threshold: Double = 0.8, maxChain: Int = Int.MaxValue,
@@ -238,14 +238,14 @@ object DailyLoop {
     // chain's per-layer id blooms (map-only) and pays the exact id scan
     // only on a hit, so a violation aborts the tick loudly instead of
     // silently doubling sums (AnnIndex.guardStats).
-    // A zero-row delta skips the whole step (one limit-1 probe): a
-    // day-zero build on it would train an EMPTY codebook and poison
-    // every later append; an append of it would only grow the chain.
-    val annDelta = JobLabel(spark, s"tick $batchId: ann delta probe") {
-      embDelta.filter(!_.limit(1).isEmpty)
+    // A zero-row delta or removal set skips the whole step (one limit-1
+    // probe each): a day-zero build on it would train an EMPTY codebook
+    // and poison every later append; an append of it would only grow
+    // the chain.
+    val (annDelta, annRem) = JobLabel(spark, s"tick $batchId: ann delta probe") {
+      (embDelta.filter(!_.limit(1).isEmpty),
+        vecRemovals.map(_.select("vec_id").distinct()).filter(!_.limit(1).isEmpty))
     }
-    val annRem = vecRemovals.map(_.select("vec_id").distinct())
-      .filter(!_.limit(1).isEmpty)
     // the refresh cadence is an exact batch-key match retraining FROM
     // THE STORE — it must fire even on a tick that lands neither
     // vectors nor removals, or a vector-less day silently defers the
@@ -798,27 +798,17 @@ object DailyLoop {
   }
 
   /** The scheduler loop (T1/T6 shape, marker clock): tick when due,
-    * sleep otherwise, stop cooperatively. Returns ticks run. BOTH
-    * inputs are per-tick functions of the tick seq — a long-running
-    * deployment lands a fresh set of source files each day, so a fixed
-    * Landing would re-merge day one's files forever (idempotent but
-    * wasted work and stale data). */
-  def loop(spark: SparkSession,
-           landing: (Long, Timestamp) => CvePipeline.Landing,
-           docsDelta: Long => DataFrame, p: Paths,
-           intervalHours: Double, shouldStop: () => Boolean,
-           clock: () => Timestamp,
-           threshold: Double = 0.8, maxChain: Int = Int.MaxValue,
-           sleepMs: Long = 1000L,
-           embDelta: Long => Option[DataFrame] = _ => None,
-           annMaxChain: Int = Int.MaxValue,
-           docRemovals: Long => Option[DataFrame] = _ => None,
-           vecRemovals: Long => Option[DataFrame] = _ => None,
-           pairRebuildEvery: Int = 0,
-           leaseStaleMs: Long = LeaseStaleMs,
-           annRefreshEvery: Int = 0,
-           trainSampleMax: Long = 0L): Int = {
-    withLease(spark, p, "", leaseStaleMs) { hb =>
+    * sleep otherwise, stop cooperatively, all under the single-writer
+    * lease. Returns ticks run. `tick(seq, now, leaseCheck)` runs one
+    * tick — typically [[runTick]] over the seq's landed inputs: a
+    * long-running deployment lands a fresh set of files each day, so
+    * the inputs must be built per seq (a fixed Landing would re-merge
+    * day one's files forever), and an in-process fetch windows its
+    * paginated pulls to (stored, now] with the tick's OWN stamp. */
+  def loop(spark: SparkSession, p: Paths, intervalHours: Double,
+           shouldStop: () => Boolean, clock: () => Timestamp,
+           sleepMs: Long = 1000L)(tick: (Long, Timestamp, () => Unit) => Unit): Int =
+    withLease(spark, p, "") { hb =>
       var ticks = 0
       while (!shouldStop()) {
         // liveness is the background heartbeat's job (it refreshes and
@@ -828,20 +818,10 @@ object DailyLoop {
         hb.check()
         val now = clock()
         if (isTickDue(spark, p, now, intervalHours)) {
-          val seq = committedTick(spark, p)._1 + 1
-          // the tick's OWN stamp feeds the landing builder: an in-
-          // process fetch windows its paginated pulls to (stored, now]
-          runTick(spark, landing(seq, now), docsDelta(seq), p, now, threshold,
-            maxChain, embDelta = embDelta(seq), annMaxChain = annMaxChain,
-            docRemovals = docRemovals(seq), vecRemovals = vecRemovals(seq),
-            pairRebuildEvery = pairRebuildEvery,
-            annRefreshEvery = annRefreshEvery,
-            trainSampleMax = trainSampleMax,
-            leaseCheck = () => hb.check())
+          tick(committedTick(spark, p)._1 + 1, now, () => hb.check())
           ticks += 1
         } else Thread.sleep(sleepMs)
       }
       ticks
     }
-  }
 }

@@ -740,18 +740,23 @@ object Main {
     // codebook as max(10k, numCodes·100) — the r20-measured floor
     // below which sampling costs recall)
     val trainSampleMax = conf.getLong("dedup", "train_sample_max", 0L)
-    def landing(seq: Long, now: Timestamp) = {
+    // one tick over the seq's landing dir — the --once run and the loop
+    // share it
+    def tick(seq: Long, now: Timestamp, leaseCheck: () => Unit): Unit = {
       val dir = s"$root/landing/$seq"
+      // the tick's OWN stamp windows an in-process fetch to (stored, now]
       if (fetch) fetchLanding(spark, conf, dir, statusPath = Some(p.status),
         now = now, shouldStop = () => stop.get())
-      landingFrom(dir)
+      DailyLoop.runTick(spark, landingFrom(dir), docsDeltaFrom(spark, dir), p, now,
+        threshold, maxChain, embDelta = embDeltaFrom(spark, dir),
+        annMaxChain = annMaxChain,
+        docRemovals = removalsFrom(spark, dir, "removals.parquet", "doc_id"),
+        vecRemovals = removalsFrom(spark, dir, "vec_removals.parquet", "vec_id"),
+        pairRebuildEvery = pairRebuildEvery,
+        annRefreshEvery = annRefreshEvery,
+        trainSampleMax = trainSampleMax,
+        leaseCheck = leaseCheck)
     }
-    def delta(seq: Long) = docsDeltaFrom(spark, s"$root/landing/$seq")
-    def emb(seq: Long) = embDeltaFrom(spark, s"$root/landing/$seq")
-    def docRem(seq: Long) = removalsFrom(spark, s"$root/landing/$seq",
-      "removals.parquet", "doc_id")
-    def vecRem(seq: Long) = removalsFrom(spark, s"$root/landing/$seq",
-      "vec_removals.parquet", "vec_id")
 
     if (once) {
       Log.info("[Job] Starting", "main")
@@ -761,15 +766,7 @@ object Main {
       // run can neither interleave with a running loop nor with a
       // second concurrent --once against the same root
       DailyLoop.withLease(spark, p, "once:") { hb =>
-        val seq = DailyLoop.committedTick(spark, p)._1 + 1
-        val tickNow = clock()
-        DailyLoop.runTick(spark, landing(seq, tickNow), delta(seq), p, tickNow,
-          threshold, maxChain, embDelta = emb(seq), annMaxChain = annMaxChain,
-          docRemovals = docRem(seq), vecRemovals = vecRem(seq),
-          pairRebuildEvery = pairRebuildEvery,
-          annRefreshEvery = annRefreshEvery,
-          trainSampleMax = trainSampleMax,
-          leaseCheck = () => hb.check())
+        tick(DailyLoop.committedTick(spark, p)._1 + 1, clock(), () => hb.check())
         // surface a loss the heartbeat observed during the tick's last
         // step loudly, even though the tick itself is already done
         hb.check()
@@ -786,14 +783,8 @@ object Main {
       val ih = if (intervalHours == intervalHours.toLong.toDouble)
         intervalHours.toLong.toString else intervalHours.toString
       Log.info(s"[Scheduler] Update frequency: every ${ih}h", "main")
-      val ticks = DailyLoop.loop(spark, landing, delta, p, intervalHours,
-        shouldStop = () => stop.get(), clock = clock,
-        threshold = threshold, maxChain = maxChain, sleepMs = sleepMs,
-        embDelta = emb, annMaxChain = annMaxChain,
-        docRemovals = docRem, vecRemovals = vecRem,
-        pairRebuildEvery = pairRebuildEvery,
-        annRefreshEvery = annRefreshEvery,
-        trainSampleMax = trainSampleMax)
+      val ticks = DailyLoop.loop(spark, p, intervalHours,
+        shouldStop = () => stop.get(), clock = clock, sleepMs = sleepMs)(tick)
       Log.info("[Scheduler] Shutdown event detected. Exiting scheduler loop.", "main")
       ticks
     }

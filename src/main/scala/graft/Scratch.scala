@@ -31,4 +31,21 @@ object Scratch {
   }
   private val registered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** A fresh, empty directory per call, `<prefix><n>` under the one
+    * `graft_work` [[dir]] of this process: for work whose output is read
+    * lazily after the call returns (a stream replay's sink), so a later
+    * call must not reuse it. Deleted with its parent on JVM exit, or
+    * reclaimed by the next run after a kill. A name left by an earlier
+    * process of the same PID is skipped. */
+  def fresh(prefix: String): java.nio.file.Path = {
+    import java.nio.file.{FileAlreadyExistsException, Files, Paths}
+    val parent = Files.createDirectories(Paths.get(dir("graft_work")))
+    Iterator.continually(parent.resolve(s"$prefix${children.incrementAndGet()}"))
+      .find { d =>
+        try { Files.createDirectory(d); true }
+        catch { case _: FileAlreadyExistsException => false }
+      }.get
+  }
+  private val children = new java.util.concurrent.atomic.AtomicLong()
 }

@@ -1,12 +1,15 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 
 /** Crash-safe directory swap shared by every snapshot-rewrite site: the
-  * whole-dir rewrites go through [[replace]] (Watermarks.upsertAll,
-  * EventsStream.mergeSink, DocsStream.rebuildPairs, BatchStore
-  * consolidation), PartitionedSnapshot.mergeDelta swaps per bucket.
+  * whole-dir rewrites go through [[replace]] (DocsStream.rebuildPairs,
+  * BatchStore consolidation), PartitionedSnapshot.mergeDelta swaps per
+  * bucket. Small control-plane records (layout and version sidecars,
+  * the watermark record) commit through [[writeRecord]] instead.
   *
   * The naive delete(dst) + rename(tmp, dst) has a window where a crash
   * destroys the snapshot; because init-vs-update mode is inferred from the
@@ -86,13 +89,37 @@ object SnapshotIO {
       .count(name => recover(conf, new Path(p, name.stripSuffix("_bak")).toString))
   }
 
-  /** Existence probe through the SAME FileSystem as swap/recover — a
-    * java.io.File check silently disagrees with a non-local filesystem
-    * and would flip callers into from-scratch rebuild paths. Non-empty =
-    * exists with at least one child. */
-  def nonEmpty(conf: Configuration, dir: String): Boolean = {
-    val fs = this.fs(conf, dir)
-    val p = new Path(dir)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
+  /** The filesystem of `path` without its checksum layer: a checksummed
+    * one keeps a `.crc` beside each file and renames the two in separate
+    * steps, so a crash between them would leave a record that fails its
+    * checksum. */
+  private def rawFs(conf: Configuration, path: Path): FileSystem =
+    fs(conf, path.toString) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+
+  /** Commit a small record: `text` is written to `<file>.tmp` and renamed
+    * over `file` (POSIX rename replaces it atomically), so a crash leaves
+    * the old record or the new one, never a torn one. A filesystem whose
+    * rename refuses an existing target fails the rewrite loudly. */
+  def writeRecord(conf: Configuration, file: Path, text: String): Unit = {
+    val f = rawFs(conf, file)
+    val tmp = file.suffix(".tmp")
+    val out = f.create(tmp, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    if (!f.rename(tmp, file))
+      throw new java.io.IOException(s"record rename failed: $tmp -> $file")
   }
+
+  /** The text [[writeRecord]] committed at `file`; None when there is no
+    * such file (one open, no separate existence probe). */
+  def readRecord(conf: Configuration, file: Path): Option[String] =
+    try {
+      val in = rawFs(conf, file).open(file)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    } catch {
+      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => None
+    }
 }

@@ -1,8 +1,6 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedAttribute, UnresolvedFunction}
@@ -72,34 +70,20 @@ object PartitionedSnapshot {
     * fails loudly instead of scattering rows. */
   private case class Meta(buckets: Int, key: String, schema: StructType)
 
-  /** The sidecar goes through the RAW filesystem: a checksummed one keeps
-    * a `.crc` beside it and renames the two in separate steps, so a crash
-    * between them would leave a sidecar that fails its checksum. */
-  private def metaFs(spark: SparkSession, path: String): FileSystem =
-    graft.SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, path) match {
-      case c: ChecksumFileSystem => c.getRawFileSystem
-      case f => f
-    }
+  private def metaPath(path: String) = new Path(path, MetaFile)
 
-  /** Written under a temp name and renamed over the old sidecar (POSIX
-    * rename replaces it atomically), so a crash leaves the old sidecar or
-    * the new one, never a torn one that [[isInitialized]] would still
-    * report. A filesystem whose rename refuses an existing target fails
-    * the rewrite loudly instead. */
-  private def writeMeta(spark: SparkSession, path: String, m: Meta): Unit = {
-    val f = metaFs(spark, path)
-    val tmp = new Path(path, MetaFile + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(s"${m.buckets}\n${m.key}\n${m.schema.json}".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    require(f.rename(tmp, new Path(path, MetaFile)), s"layout sidecar rename failed under $path")
-  }
+  /** Committed through [[graft.SnapshotIO.writeRecord]]: a crash leaves
+    * the old sidecar or the new one, never a torn one that
+    * [[isInitialized]] would still report. */
+  private def writeMeta(spark: SparkSession, path: String, m: Meta): Unit =
+    graft.SnapshotIO.writeRecord(spark.sparkContext.hadoopConfiguration,
+      metaPath(path), s"${m.buckets}\n${m.key}\n${m.schema.json}")
 
   private def readMeta(spark: SparkSession, path: String): Meta = {
-    val in = metaFs(spark, path).open(new Path(path, MetaFile))
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split("\n", 3)
-      finally in.close()
+    val text = graft.SnapshotIO.readRecord(spark.sparkContext.hadoopConfiguration,
+      metaPath(path)).getOrElse(throw new java.io.FileNotFoundException(
+        s"no layout sidecar at $path/$MetaFile: not a partitioned snapshot"))
+    val lines = text.split("\n", 3)
     require(lines.length == 3 && lines(2).trim.nonEmpty,
       s"layout sidecar $path/$MetaFile has no schema line (line 3, the union " +
         "schema as StructType JSON): the snapshot predates stored schemas; rebuild it")
@@ -149,7 +133,7 @@ object PartitionedSnapshot {
   /** Whether the layout sidecar exists — the day-zero probe. */
   def isInitialized(spark: SparkSession, path: String): Boolean =
     graft.SnapshotIO.fs(spark.sparkContext.hadoopConfiguration, path)
-      .exists(new Path(path, MetaFile))
+      .exists(metaPath(path))
 
   /** Day-zero commit of an EMPTY bucketed snapshot: only the sidecar,
     * whose stored schema is `empty`'s, so [[read]] returns zero rows of
@@ -158,6 +142,18 @@ object PartitionedSnapshot {
   def initEmpty(empty: DataFrame, path: String, key: String = "id",
                 buckets: Int = 64): Unit =
     writeMeta(empty.sparkSession, path, Meta(buckets, key, empty.schema))
+
+  /** The keyed sink: the first write commits an EMPTY layout with
+    * `delta`'s schema (Merge.init'ed), then `delta` merges exactly like
+    * every later one, so the first batch and the hundredth take the same
+    * bounded path. Returns the touched bucket ids. */
+  def upsert(delta: DataFrame, path: String, key: String, buckets: Int,
+             now: Column = current_timestamp()): Seq[Long] = {
+    val spark = delta.sparkSession
+    if (!isInitialized(spark, path))
+      initEmpty(Merge.init(delta.limit(0)), path, key, buckets)
+    mergeDelta(spark, path, delta, key, now)
+  }
 
   /** The stored schema widened by `merged`'s new columns, appended in
     * `merged`'s order. A stored column whose type changed fails loudly:

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -89,18 +87,14 @@ private[operators] final class VersionedChain(metaFile: String,
     * cannot tell a slow in-flight build from a crashed one), committing
     * would publish a directory whose data may already be half-deleted —
     * fail loudly and abandon the version instead; the caller re-runs and
-    * claims a fresh number. Then the sidecar is written under a temp name
-    * and renamed into place. */
+    * claims a fresh number. Then the sidecar commits through
+    * [[graft.SnapshotIO.writeRecord]]. */
   def commit(spark: SparkSession, path: String, v: Int, meta: String): Unit = {
-    val f = fs(spark, path)
-    require(f.exists(claimFile(path, v)),
+    require(fs(spark, path).exists(claimFile(path, v)),
       s"version $v under $path lost its claim file mid-build (a concurrent " +
         "writer pruned it) — abandoning this version; re-run")
-    val vd = vdir(path, v)
-    val tmp = new Path(vd, metaFile + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(meta.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    require(f.rename(tmp, new Path(vd, metaFile)), s"sidecar commit rename failed under $vd")
+    graft.SnapshotIO.writeRecord(spark.sparkContext.hadoopConfiguration,
+      new Path(vdir(path, v), metaFile), meta)
   }
 
   /** Publish a base version: claim the next number, hand its directory
@@ -117,17 +111,10 @@ private[operators] final class VersionedChain(metaFile: String,
   }
 
   /** One sidecar read that doubles as the commit probe: a missing sidecar
-    * means "uncommitted", never an error — one FS round-trip where
-    * exists()+open() was two. */
+    * means "uncommitted", never an error. */
   private def tryMeta(spark: SparkSession, path: String, v: Int): Option[String] =
-    try {
-      val in = fs(spark, path).open(new Path(vdir(path, v), metaFile))
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    } catch {
-      case _: java.io.FileNotFoundException => None
-      case _: java.nio.file.NoSuchFileException => None
-    }
+    graft.SnapshotIO.readRecord(spark.sparkContext.hadoopConfiguration,
+      new Path(vdir(path, v), metaFile)).map(_.trim)
 
   private def newestCommitted(spark: SparkSession, path: String,
                               vs: Seq[Int]): Option[(Int, String)] =

@@ -2,45 +2,55 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 
-import graft.sources.Schemas
-
-/** K3/T2: the persisted per-source watermark table (`update_status`) —
-  * the reference's streaming-checkpoint analog (handlers/
-  * mongodb_handler.py:212-225, 291-307). One TimestampType column for
-  * freshness (quirk #7: the reference mixes datetimes and ISO strings).
+/** K3/T2: the persisted per-source watermarks (`update_status`) — the
+  * reference's streaming-checkpoint analog (handlers/
+  * mongodb_handler.py:212-225, 291-307). One stamp type for freshness
+  * (quirk #7: the reference mixes datetimes and ISO strings).
   *
-  * Control-plane only: rows = number of sources (≤10), so the
-  * read-modify-overwrite of a tiny parquet is deliberate — it is NOT a
-  * data-plane pattern.
+  * Control-plane only: one row per source (≤10), kept as ONE small text
+  * record committed through [[graft.SnapshotIO.writeRecord]] like every
+  * other control-plane file, one line per source:
+  * `<source>\t<last_updated>\t<source_last_update>`, both epoch millis,
+  * the upstream stamp empty until a fetch has probed one. Reads and
+  * writes run no Spark job.
   */
 object Watermarks {
 
-  def read(spark: SparkSession, path: String): DataFrame = {
-    graft.SnapshotIO.recover(spark.sparkContext.hadoopConfiguration, path)
-    if (graft.SnapshotIO.nonEmpty(spark.sparkContext.hadoopConfiguration, path))
-      spark.read.schema(Schemas.updateStatus).parquet(path)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Schemas.updateStatus)
+  /** A source's stamps: its last successful run, and the upstream
+    * publication stamp last seen (P11), if any. */
+  type Stamps = (Timestamp, Option[Timestamp])
+
+  /** Every source's stamps; a missing record reads as none. A record
+    * that does not parse fails loudly, naming the file. */
+  def read(spark: SparkSession, path: String): Map[String, Stamps] =
+    graft.SnapshotIO.readRecord(spark.sparkContext.hadoopConfiguration, new Path(path))
+      .fold(Map.empty[String, Stamps])(parse(path, _))
+
+  private def parse(path: String, text: String): Map[String, Stamps] = {
+    def stamp(s: String) = s.toLongOption.map(new Timestamp(_))
+    text.split("\n").iterator.filter(_.nonEmpty).map { line =>
+      line.split("\t", -1) match {
+        case Array(source, lu, slu)
+            if source.nonEmpty && stamp(lu).nonEmpty && (slu.isEmpty || stamp(slu).nonEmpty) =>
+          source -> (stamp(lu).get, stamp(slu))
+        case _ =>
+          throw new IllegalArgumentException(s"watermark record $path: cannot parse " +
+            s"line '$line' (want <source>\\t<last_updated millis>\\t<source_last_update millis or empty>)")
+      }
+    }.toMap
   }
 
-  /** Last successful run for a source (main.py:217; nvd_handler.py:139).
-    * flatMap(Option(_)): a persisted null stamp must yield None, not
-    * Some(null) — callers compare .getTime on the value. */
+  /** Last successful run for a source (main.py:217; nvd_handler.py:139). */
   def lastUpdated(spark: SparkSession, path: String, source: String): Option[Timestamp] =
-    read(spark, path).filter(col("data_source") === source)
-      .select("last_updated").collect().headOption
-      .flatMap(r => Option(r.getTimestamp(0)))
+    read(spark, path).get(source).map(_._1)
 
   /** Upstream publication stamp (P11 freshness short-circuit input). */
   def sourceLastUpdate(spark: SparkSession, path: String,
                        source: String): Option[Timestamp] =
-    read(spark, path).filter(col("data_source") === source)
-      .select("source_last_update").collect().headOption
-      .flatMap(r => Option(r.getTimestamp(0)))
+    read(spark, path).get(source).flatMap(_._2)
 
   /** Upsert one source row (update_status / update_source_status). */
   def upsert(spark: SparkSession, path: String, source: String,
@@ -48,40 +58,25 @@ object Watermarks {
              sourceLastUpdate: Option[Timestamp] = None): Unit =
     upsertAll(spark, path, Seq((source, lastUpdated, sourceLastUpdate)))
 
-  /** Upsert several source rows in ONE read-modify-swap — what the
+  /** Upsert several source rows in ONE read-modify-write — what the
     * daily tick's freshness stamp uses (the job row plus one row per
-    * source that actually fetched): N sequential [[upsert]]s would
-    * rewrite the tiny parquet N times per tick for nothing. A None
-    * `sourceLastUpdate` preserves the stored upstream stamp. */
+    * source that actually fetched). A None `sourceLastUpdate` preserves
+    * the stored upstream stamp. */
   def upsertAll(spark: SparkSession, path: String,
                 entries: Seq[(String, Timestamp, Option[Timestamp])]): Unit = {
     if (entries.isEmpty) return
-    val existing = read(spark, path).collect()
-      .map(r => (r.getString(0), (Option(r.getTimestamp(1)), Option(r.getTimestamp(2)))))
-      .toMap
-    val merged = entries.foldLeft(existing) {
+    val merged = entries.foldLeft(read(spark, path)) {
       case (acc, (source, lastUpdated, sourceLastUpdate)) =>
+        require(source.nonEmpty && !source.exists(c => c == '\t' || c == '\n'),
+          s"watermark source name '$source' must be non-empty, without tabs or newlines")
         acc.updated(source,
-          (Some(lastUpdated),
-            sourceLastUpdate.orElse(acc.get(source).flatMap(_._2))))
+          (lastUpdated, sourceLastUpdate.orElse(acc.get(source).flatMap(_._2))))
     }
-    val rows = merged.toSeq.sortBy(_._1).map { case (s, (lu, slu)) =>
-      org.apache.spark.sql.Row(s, lu.orNull, slu.orNull)
-    }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), Schemas.updateStatus)
-    // staged then swapped: the source of the read is the target
-    graft.SnapshotIO.replace(spark.sparkContext.hadoopConfiguration, path) { tmp =>
-      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
+    graft.SnapshotIO.writeRecord(spark.sparkContext.hadoopConfiguration, new Path(path),
+      merged.toSeq.sortBy(_._1).map { case (s, (lu, slu)) =>
+        s"$s\t${lu.getTime}\t${slu.fold("")(_.getTime.toString)}\n"
+      }.mkString)
   }
-
-  /** T3: catch-up window start — last success, else now minus the
-    * cold-start lookback (nvd_handler.py:142-147: 24 h). */
-  def windowStart(spark: SparkSession, path: String, source: String,
-                  now: Timestamp, lookbackHours: Int = 24): Timestamp =
-    lastUpdated(spark, path, source).getOrElse(
-      new Timestamp(now.getTime - lookbackHours * 3600L * 1000L))
 
   /** P11: skip the source when the upstream stamp is not newer than what
     * we stored (epss_handler.py:111-120 and friends). */

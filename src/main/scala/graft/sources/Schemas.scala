@@ -153,11 +153,4 @@ object Schemas {
     StructField("Related_Weaknesses", ArrayType(StructType(Seq(
       StructField("id", StringType),
       StructField("nature", StringType)))))))
-
-  /** Control-plane watermark table (handlers/mongodb_handler.py:212-225,
-    * 291-307; one TimestampType per SURVEY.md quirk #7). */
-  val updateStatus: StructType = StructType(Seq(
-    StructField("data_source", StringType, nullable = false),
-    StructField("last_updated", TimestampType),
-    StructField("source_last_update", TimestampType)))
 }

@@ -76,7 +76,7 @@ object DocsStream {
     * dedup bounds state WITHIN the horizon; the keyed sink makes
     * re-observations BEYOND it (and re-delivered batches after a crash)
     * idempotent — together: exactly-once curated output from at-least-
-    * once input. Same crash-safe swap as the CVE merge sink. */
+    * once input. Same bounded bucket merge as the CVE snapshot. */
   def curatedSink(curated: org.apache.spark.sql.DataFrame, snapshotPath: String,
                   checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     EventsStream.mergeSink(curated, snapshotPath, "digest", checkpoint)
@@ -88,15 +88,13 @@ object DocsStream {
     * deterministically from doc_id (1 s apart). This is what turns the
     * streaming pipeline into an oracle-checkable catalog entry (q85):
     * the snapshot's deterministic columns must equal the batch curation
-    * of the same input. Work dirs live under a fresh temp directory,
-    * removed on JVM exit. */
+    * of the same input. Work dirs live under a fresh
+    * [[graft.Scratch.fresh]] directory. */
   def replayDocuments(spark: org.apache.spark.sql.SparkSession,
                       dir: String, horizon: String = "2 hours"): DataFrame = {
     val path = s"$dir/documents.parquet"
     val schema = spark.read.parquet(path).schema
-    val work = java.nio.file.Files.createTempDirectory("graft_docs_replay_")
-    // symlink-safe: the input dir holds links into the source table
-    scala.sys.addShutdownHook(graft.sources.Landing.deleteNoFollow(work.toFile))
+    val work = graft.Scratch.fresh("docs_replay_")
     val snap = s"$work/snapshot"
     val ckpt = s"$work/ckpt"
     // the file stream source requires a DIRECTORY; link (or copy) the
@@ -109,7 +107,8 @@ object DocsStream {
     val q = EventsStream.runAvailableNow(
       curatedSink(pipeline(stream, horizon), snap, ckpt))
     q.awaitTermination()
-    spark.read.parquet(snap)
+    graft.operators.PartitionedSnapshot.read(spark, snap)
+      .drop(graft.operators.PartitionedSnapshot.BucketCol)
   }
 
   /** doc_id hash buckets of the shingle store ([[shingleStore]]). */
@@ -143,16 +142,13 @@ object DocsStream {
   def rebuildPairs(corpusSh: DataFrame, snap: String, threshold: Double,
                    numHashes: Int, bands: Int,
                    now: org.apache.spark.sql.Column): Unit = {
-    import graft.operators.{Dedup, Merge, PartitionedSnapshot}
     val spark = corpusSh.sparkSession
-    val pairs = Dedup.minhashPairsFrom(corpusSh, threshold, numHashes, bands)
+    val pairs = graft.operators.Dedup.minhashPairsFrom(corpusSh, threshold, numHashes, bands)
       .withColumn("pk", concat_ws(":", col("a_id"), col("b_id")))
     graft.SnapshotIO.replace(spark.sparkContext.hadoopConfiguration, snap) { tmp =>
       // sidecar-first staging: a zero-pair corpus still publishes a
       // readable snapshot (the sidecar carries the schema)
-      PartitionedSnapshot.initEmpty(Merge.init(pairs.limit(0)), tmp,
-        "pk", PairBuckets)
-      PartitionedSnapshot.mergeDelta(spark, tmp, pairs, "pk", now)
+      graft.operators.PartitionedSnapshot.upsert(pairs, tmp, "pk", PairBuckets, now)
     }
   }
 
@@ -206,7 +202,7 @@ object DocsStream {
                        store: String, snap: String,
                        threshold: Double,
                        removals: Option[DataFrame] = None): Unit = {
-    import graft.operators.{BandIndex, Dedup, Merge, PartitionedSnapshot}
+    import graft.operators.{BandIndex, Dedup, PartitionedSnapshot}
     val s = batch.sparkSession
     val sh = shingleStore(store)
     // the tick's removal set (doc ids to delete): within the tick a
@@ -296,10 +292,7 @@ object DocsStream {
         // crash-safe swaps + the idempotent keyed upsert make a
         // re-delivered batch converge on any mid-merge crash state.
         graft.JobLabel(s, "pair merge") {
-          if (!PartitionedSnapshot.isInitialized(s, snap))
-            PartitionedSnapshot.initEmpty(Merge.init(pairs.limit(0)), snap,
-              "pk", PairBuckets)
-          PartitionedSnapshot.mergeDelta(s, snap, pairs, "pk")
+          PartitionedSnapshot.upsert(pairs, snap, "pk", PairBuckets)
         }
       } finally pairs.unpersist()
       // The two O(batch) appends touch DISJOINT stores (the band index's
@@ -348,8 +341,7 @@ object DocsStream {
     import graft.operators.{BandIndex, Dedup}
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
-    val work = java.nio.file.Files.createTempDirectory("graft_docs_incdedup_")
-    scala.sys.addShutdownHook(graft.sources.Landing.deleteNoFollow(work.toFile))
+    val work = graft.Scratch.fresh("docs_incdedup_")
     // deterministic multi-file input so AvailableNow + maxFilesPerTrigger
     // genuinely exercises the incremental path (a single-file table would
     // collapse into one all-delta batch)

@@ -256,29 +256,26 @@ object EventsStream {
         joinType)
       .drop(col(s"r.$key"))
 
-  /** T4: idempotent snapshot merge as a foreachBatch sink — each
-    * micro-batch runs the K1 upsert against the parquet snapshot and
-    * rewrites it (what MERGE INTO does on an ACID table). Re-delivery of
-    * a batch converges to the same snapshot. */
+  /** Hash buckets of a [[mergeSink]] snapshot. */
+  val SinkBuckets = 32
+
+  /** T4: idempotent keyed merge as a foreachBatch sink — each
+    * micro-batch is collapsed to its last row per key and merged into a
+    * [[graft.operators.PartitionedSnapshot]] of [[SinkBuckets]] buckets,
+    * rewriting only the buckets its keys touch (what MERGE INTO does on
+    * an ACID table). Re-delivery of a batch converges to the same
+    * snapshot. Read it back with `PartitionedSnapshot.read`. */
   def mergeSink(delta: DataFrame, snapshotPath: String, key: String = "id",
                 checkpoint: String): DataStreamWriter[Row] =
     delta.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
         val collapsed = Merge.lastWriterWins(
           batch.withColumn("_pos", monotonically_increasing_id()), key,
           col("_pos")).drop("_pos")
-        graft.SnapshotIO.recover(spark.sparkContext.hadoopConfiguration, snapshotPath)
-        val snapshot =
-          if (graft.SnapshotIO.nonEmpty(spark.sparkContext.hadoopConfiguration,
-                                        snapshotPath))
-            spark.read.parquet(snapshotPath)
-          else Merge.init(collapsed.limit(0))
-        val merged = Merge.upsert(snapshot, collapsed, key)
-        graft.SnapshotIO.replace(spark.sparkContext.hadoopConfiguration,
-          snapshotPath)(merged.write.mode("overwrite").parquet(_))
+        graft.operators.PartitionedSnapshot.upsert(collapsed, snapshotPath, key, SinkBuckets)
+        ()
       }
 
   /** T3: drain everything currently available, then stop (the reference's
@@ -326,16 +323,14 @@ object EventsStream {
   }
 
   /** Stage the events table behind a file-source stream: per-part-file
-    * links in a fresh work dir (symlink-safe cleanup) + the nanos-long →
+    * links in a fresh [[graft.Scratch.fresh]] dir + the nanos-long →
     * micros-timestamp normalization Tables.load applies. Returns the
     * streaming frame and the work dir for checkpoints/output. */
   private def stagedEvents(spark: SparkSession,
                            dir: String): (DataFrame, java.nio.file.Path) = {
     val path = s"$dir/events.parquet"
     val schema = spark.read.parquet(path).schema
-    val work = java.nio.file.Files.createTempDirectory("graft_events_replay_")
-    // symlink-safe: the input dir holds links into the source table
-    scala.sys.addShutdownHook(graft.sources.Landing.deleteNoFollow(work.toFile))
+    val work = graft.Scratch.fresh("events_replay_")
     // file stream source needs a directory; link (or copy) the table in
     val in = java.nio.file.Files.createDirectory(work.resolve("in"))
     linkTable(in, path)
@@ -352,7 +347,7 @@ object EventsStream {
     * so ONLY watermark-closed windows emit — over the bounded events
     * table, and return the emitted rows. The oracle mirrors the close
     * condition exactly: windows whose end ≤ max(ts) − the 2 h lateness
-    * bound. Work dirs are temp, removed on JVM exit. */
+    * bound. Work dirs are per-call [[graft.Scratch.fresh]] dirs. */
   private def replayEvents(spark: SparkSession, dir: String,
                            agg: DataFrame => DataFrame): DataFrame = {
     val (events, work) = stagedEvents(spark, dir)

@@ -14,7 +14,7 @@ object StreamDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = GraftSession.build("4")
     spark.sparkContext.setLogLevel("WARN")
-    val work = java.nio.file.Files.createTempDirectory("streamdemo").toString
+    val work = graft.Scratch.fresh("streamdemo_").toString
 
     // Stage events parquet as a file-source backlog, then drain with
     // AvailableNow through the windowed aggregation (T3/T5).

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.CvePipeline.Landing
+import graft.operators.{PartitionedSnapshot, Watermarks}
 
 class CveJobSpec extends SparkSpec {
 
@@ -15,45 +16,35 @@ class CveJobSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  test("quirk#1: init vs update inferred from the job watermark") {
-    val work = SparkSpec.tempDir("job").toString
-    val status = s"$work/status"
-    assert(CveJob.isInitRun(spark, status))
-    CveJob.runTick(spark, landing, s"$work/snap", status, ts("2025-04-01 00:00:00"))
-    assert(!CveJob.isInitRun(spark, status))
-    assert(spark.read.parquet(s"$work/snap").count() > 0)
+  test("quirk#1: init vs update inferred from the snapshot layout") {
+    val snap = SparkSpec.tempDir("job").toString + "/snap"
+    assert(!PartitionedSnapshot.isInitialized(spark, snap))
+    CveJob.mergeLanded(spark, landing, snap, ts("2025-04-01 00:00:00"))
+    assert(PartitionedSnapshot.isInitialized(spark, snap))
+    val n = PartitionedSnapshot.read(spark, snap).count()
+    assert(n > 0)
+    // the second call takes the update path: matched rows keep their
+    // created_at and take the new updated_at, no row is duplicated
+    CveJob.mergeLanded(spark, landing, snap, ts("2025-04-02 00:00:00"))
+    val s2 = PartitionedSnapshot.read(spark, snap)
+    assert(s2.count() == n)
+    val stamps = s2.agg(min(col("created_at")), max(col("created_at")),
+      min(col("updated_at"))).head()
+    assert(stamps.getTimestamp(0) == ts("2025-04-01 00:00:00"))
+    assert(stamps.getTimestamp(1) == ts("2025-04-01 00:00:00"))
+    assert(stamps.getTimestamp(2) == ts("2025-04-02 00:00:00"))
   }
 
   test("T3: tick due at interval boundary and after downtime, not before") {
-    val work = SparkSpec.tempDir("job2").toString
-    val status = s"$work/status"
-    assert(CveJob.isTickDue(spark, status, ts("2025-04-01 00:00:00"))) // cold
-    CveJob.runTick(spark, landing, s"$work/snap", status, ts("2025-04-01 00:00:00"))
-    assert(!CveJob.isTickDue(spark, status, ts("2025-04-01 03:59:00")))
-    assert(CveJob.isTickDue(spark, status, ts("2025-04-01 04:00:00")))
-    assert(CveJob.isTickDue(spark, status, ts("2025-04-03 12:00:00"))) // downtime
-  }
-
-  test("T1/T6: loop ticks when due and stops cooperatively") {
-    val work = SparkSpec.tempDir("job3").toString
-    val status = s"$work/status"
-    var calls = 0
-    val clockTimes = Seq(
-      ts("2025-04-01 00:00:00"), // tick 1 (init)
-      ts("2025-04-01 01:00:00"), // not due
-      ts("2025-04-01 05:00:00"), // tick 2
-      ts("2025-04-01 06:00:00")) // stop before this is evaluated
-    val ticks = CveJob.loop(spark, landing, s"$work/snap", status,
-      intervalHours = 4,
-      shouldStop = () => calls >= clockTimes.length - 1,
-      clock = () => { val t = clockTimes(math.min(calls, clockTimes.length - 1)); calls += 1; t },
-      sleepMs = 1L)
-    assert(ticks == 2)
-    // updated_at of the second tick's merge survives in the snapshot
-    val snap = spark.read.parquet(s"$work/snap")
-    assert(snap.agg(max(col("updated_at"))).head().getTimestamp(0)
-      == ts("2025-04-01 05:00:00"))
-    // idempotence across ticks: one row per id
-    assert(snap.select("id").distinct().count() == snap.count())
+    val p = DailyLoop.Paths(SparkSpec.tempDir("job2").toString)
+    val noDocs = Main.docsDeltaFrom(spark, s"${p.root}/no_docs")
+    assert(DailyLoop.isTickDue(spark, p, ts("2025-04-01 00:00:00"), 4)) // cold
+    DailyLoop.runTick(spark, landing, noDocs, p, ts("2025-04-01 00:00:00"))
+    // the tick stamps the job watermark with its own clock
+    assert(Watermarks.lastUpdated(spark, p.status, CveJob.JobSource)
+      .contains(ts("2025-04-01 00:00:00")))
+    assert(!DailyLoop.isTickDue(spark, p, ts("2025-04-01 03:59:00"), 4))
+    assert(DailyLoop.isTickDue(spark, p, ts("2025-04-01 04:00:00"), 4))
+    assert(DailyLoop.isTickDue(spark, p, ts("2025-04-03 12:00:00"), 4)) // downtime
   }
 }

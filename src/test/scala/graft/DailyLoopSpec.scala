@@ -31,6 +31,11 @@ class DailyLoopSpec extends SparkSpec {
   private def work() =
     SparkSpec.tempDir("graft_dailyloop_").toString
 
+  /** The loop's tick: the CVE fixtures plus the seq's document delta. */
+  private def cveAndDocsTick(p: DailyLoop.Paths)(seq: Long, now: Timestamp,
+                                                 leaseCheck: () => Unit): Unit =
+    DailyLoop.runTick(spark, landing, delta(seq), p, now, leaseCheck = leaseCheck)
+
   private def pairSet(p: DailyLoop.Paths) =
     graft.streaming.DocsStream.readPairs(spark, p.pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -46,14 +51,13 @@ class DailyLoopSpec extends SparkSpec {
       ts("2025-04-02 00:00:00"), // tick 2
       ts("2025-04-03 00:00:00"), // tick 3
       ts("2025-04-03 12:00:00")) // not due — sleeps
-    val ticks = DailyLoop.loop(spark, (_, _) => landing, delta, p,
-      intervalHours = 24,
+    val ticks = DailyLoop.loop(spark, p, intervalHours = 24,
       shouldStop = () => calls >= clockTimes.length,
       clock = () => {
         val t = clockTimes(math.min(calls, clockTimes.length - 1))
         calls += 1; t
       },
-      sleepMs = 1L)
+      sleepMs = 1L)(cveAndDocsTick(p))
     assert(ticks == 3)
     assert(DailyLoop.committedTick(spark, p)._1 == 3L)
     // the dedup state converged to the full-corpus batch answer
@@ -160,8 +164,8 @@ class DailyLoopSpec extends SparkSpec {
     // version numbers and duplicate every tick's work)
     DailyLoop.acquireLease(spark, p, "writer-a")
     val err = intercept[IllegalStateException] {
-      DailyLoop.loop(spark, (_, _) => landing, delta, p, intervalHours = 24,
-        shouldStop = () => true, clock = () => ts("2025-04-01 00:00:00"))
+      DailyLoop.loop(spark, p, intervalHours = 24,
+        shouldStop = () => true, clock = () => ts("2025-04-01 00:00:00"))(cveAndDocsTick(p))
     }
     assert(err.getMessage.contains("leased by 'writer-a'"))
     // a crashed holder never releases — but its heartbeat goes stale
@@ -174,12 +178,11 @@ class DailyLoopSpec extends SparkSpec {
     // the loop releases on exit: a fresh run right after one finishes
     // must acquire cleanly
     DailyLoop.releaseLease(spark, p)
-    val ticks = DailyLoop.loop(spark, (_, _) => landing, delta, p,
-      intervalHours = 24, shouldStop = () => true,
-      clock = () => ts("2025-04-01 00:00:00"))
+    val ticks = DailyLoop.loop(spark, p, intervalHours = 24,
+      shouldStop = () => true, clock = () => ts("2025-04-01 00:00:00"))(cveAndDocsTick(p))
     assert(ticks == 0)
-    DailyLoop.loop(spark, (_, _) => landing, delta, p, intervalHours = 24,
-      shouldStop = () => true, clock = () => ts("2025-04-01 00:00:00"))
+    DailyLoop.loop(spark, p, intervalHours = 24,
+      shouldStop = () => true, clock = () => ts("2025-04-01 00:00:00"))(cveAndDocsTick(p))
   }
 
   test("decoupled retention never resurrects deleted pairs at consolidation") {

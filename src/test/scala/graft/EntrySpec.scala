@@ -28,17 +28,21 @@ class EntrySpec extends SparkSpec {
 
   test("lifecycle entries rerun in one scratch dir: same rows, no new dirs under tmpdir") {
     val dir = "/root/testdata/sf0.001"
-    // the scratch-dir name prefixes of the two entries run below
-    val prefixes = Seq("graft_dailyq_", "graft_annpq_")
+    // the scratch-dir name prefixes of the entries run below: the two
+    // lifecycle stores, the replays' per-call work dirs' parent, and the
+    // names those work dirs once had directly under tmpdir
+    val prefixes = Seq("graft_dailyq_", "graft_annpq_", "graft_work_",
+      "graft_docs_replay_", "graft_events_replay_")
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))
     def scratchDirs(): Int = Option(tmp.listFiles).fold(0)(_.count(f =>
       f.isDirectory && prefixes.exists(f.getName.startsWith)))
     def run(name: String) = SparkEntry.queries(name)(spark, dir).collect().toSeq
-    val names = Seq("q119_daily_loop_dedup", "q120_ann_pq_persisted")
+    val names = Seq("q119_daily_loop_dedup", "q120_ann_pq_persisted",
+      "q85_stream_curate", "q91_stream_hourly")
     val first = names.map(run)
     val dirsAfterFirst = scratchDirs()
     val second = names.map(run)
-    assert(first(1).nonEmpty)
+    assert(first(1).nonEmpty && first(2).nonEmpty && first(3).nonEmpty)
     assert(second == first)
     assert(scratchDirs() <= dirsAfterFirst,
       s"rerunning ${names.mkString(", ")} left new scratch dirs in $tmp")

@@ -26,12 +26,14 @@ class FetchE2eSpec extends SparkSpec {
 
   test("S1 e2e: paginated init fetch + watermark-windowed incremental tick") {
     val work = SparkSpec.tempDir("fetch_e2e").toString
-    val status = s"$work/status"
-    val snap = s"$work/snap"
+    val p = DailyLoop.Paths(work)
+    val status = p.status
+    val snap = p.snapshot
+    val noDocs = Main.docsDeltaFrom(spark, s"$work/no_docs")
     val policy = Policy(resultsPerPage = 2, retryDelayMs = 1L)
 
     // ---- §3.1 init: no watermark → full pull ---------------------------
-    assert(CveJob.isInitRun(spark, status))
+    assert(Watermarks.lastUpdated(spark, status, CveJob.JobSource).isEmpty)
     attempts.clear()
 
     // The reference learns totalResults from the first response and
@@ -49,9 +51,8 @@ class FetchE2eSpec extends SparkSpec {
     assert(attempts.get(0L).get() >= 2) // probe + distributed fetch
 
     val t0 = ts("2025-04-01 00:00:00")
-    CveJob.runTick(spark, CvePipeline.Landing(nvd = Some(s"$work/land1")),
-      snap, status, t0)
-    assert(!CveJob.isInitRun(spark, status))
+    DailyLoop.runTick(spark, CvePipeline.Landing(nvd = Some(s"$work/land1")),
+      noDocs, p, t0)
     assert(Watermarks.lastUpdated(spark, status, CveJob.JobSource).contains(t0))
 
     val s1 = spark.read.parquet(snap)
@@ -74,8 +75,8 @@ class FetchE2eSpec extends SparkSpec {
     assert(landed2 == 1L)
 
     val t1 = ts("2025-04-01 04:00:00")
-    CveJob.runTick(spark, CvePipeline.Landing(nvd = Some(s"$work/land2")),
-      snap, status, t1)
+    DailyLoop.runTick(spark, CvePipeline.Landing(nvd = Some(s"$work/land2")),
+      noDocs, p, t1)
     assert(Watermarks.lastUpdated(spark, status, CveJob.JobSource).contains(t1))
 
     val s2 = spark.read.parquet(snap)
@@ -139,8 +140,8 @@ class FetchE2eSpec extends SparkSpec {
       assert(landed == 3L)
       // the 503 went over the wire and the client-side retry re-fetched
       assert(srvHits.get(1L).get() == 2)
-      CveJob.runTick(spark, CvePipeline.Landing(nvd = Some(s"$work/land")),
-        s"$work/snap", s"$work/status", ts("2025-04-01 00:00:00"))
+      CveJob.mergeLanded(spark, CvePipeline.Landing(nvd = Some(s"$work/land")),
+        s"$work/snap", ts("2025-04-01 00:00:00"))
       val snap = spark.read.parquet(s"$work/snap")
       assert(snap.count() == 5)
       assert(snap.filter(col("id") === "CVE-2025-0001")

@@ -45,7 +45,7 @@ class SnapshotIOSpec extends SparkSpec {
     assert(!SnapshotIO.recover(conf, s"$work/snap"))
   }
 
-  test("swap, recover and nonEmpty resolve the filesystem from the path, not fs.defaultFS") {
+  test("swap, recover and records resolve the filesystem from the path, not defaultFS") {
     val work = SparkSpec.tempDir("swapfs").toUri.toString.stripSuffix("/")
     writeDir(s"$work/snap", "old")
     writeDir(s"$work/tmp", "new")
@@ -54,7 +54,10 @@ class SnapshotIOSpec extends SparkSpec {
     other.set("fs.defaultFS", "graftnofs:///")
     SnapshotIO.swap(other, s"$work/tmp", s"$work/snap")
     assert(readTag(s"$work/snap") == "new")
-    assert(SnapshotIO.nonEmpty(other, s"$work/snap"))
+    val rec = new org.apache.hadoop.fs.Path(s"$work/rec")
+    SnapshotIO.writeRecord(other, rec, "a\n")
+    assert(SnapshotIO.readRecord(other, rec).contains("a\n"))
+    assert(SnapshotIO.readRecord(other, new org.apache.hadoop.fs.Path(s"$work/none")).isEmpty)
     val fs = new org.apache.hadoop.fs.Path(work).getFileSystem(conf)
     fs.rename(new org.apache.hadoop.fs.Path(s"$work/snap"),
       new org.apache.hadoop.fs.Path(s"$work/snap_bak"))
@@ -64,12 +67,11 @@ class SnapshotIOSpec extends SparkSpec {
 
   test("a mid-swap bucket crash does not flip the next tick into an init rebuild") {
     val work = SparkSpec.tempDir("rec2").toString
-    val status = s"$work/status"
     val landing = Landing(
       nvd = Some(res("nvd_page.json")),
       epss = Some(res("epss_scores.csv")),
       kev = Some(res("known_exploited_vulnerabilities.json")))
-    CveJob.runTick(spark, landing, s"$work/snap", status,
+    CveJob.mergeLanded(spark, landing, s"$work/snap",
       Timestamp.valueOf("2025-04-01 00:00:00"))
     val created0 = operators.PartitionedSnapshot.read(spark, s"$work/snap")
       .filter(col("id") === "CVE-2024-0001").select("created_at")
@@ -84,7 +86,7 @@ class SnapshotIOSpec extends SparkSpec {
       .head.getName
     fs.rename(new org.apache.hadoop.fs.Path(s"$work/snap/$bucket"),
       new org.apache.hadoop.fs.Path(s"$work/snap/${bucket}_bak"))
-    CveJob.runTick(spark, landing, s"$work/snap", status,
+    CveJob.mergeLanded(spark, landing, s"$work/snap",
       Timestamp.valueOf("2025-04-02 00:00:00"))
     val r = operators.PartitionedSnapshot.read(spark, s"$work/snap")
       .filter(col("id") === "CVE-2024-0001")
@@ -95,16 +97,15 @@ class SnapshotIOSpec extends SparkSpec {
 
   test("update tick refreshes sources beyond epss/kev/nvd (ADVICE r1)") {
     val work = SparkSpec.tempDir("allsrc").toString
-    val status = s"$work/status"
-    CveJob.runTick(spark,
+    CveJob.mergeLanded(spark,
       Landing(nvd = Some(res("nvd_page.json"))),
-      s"$work/snap", status, Timestamp.valueOf("2025-04-01 00:00:00"))
+      s"$work/snap", Timestamp.valueOf("2025-04-01 00:00:00"))
     assert(!spark.read.parquet(s"$work/snap").columns.contains("exploitdb"))
     // Second tick lands a multi-row source that the old code ignored.
-    CveJob.runTick(spark,
+    CveJob.mergeLanded(spark,
       Landing(exploitDb = Some(res("files_exploits.csv")),
         debian = Some(res("debian.json"))),
-      s"$work/snap", status, Timestamp.valueOf("2025-04-02 00:00:00"))
+      s"$work/snap", Timestamp.valueOf("2025-04-02 00:00:00"))
     // a widening delta adds columns only to TOUCHED buckets — the
     // union schema in the layout sidecar is the layout's contract
     val snap = operators.PartitionedSnapshot.read(spark, s"$work/snap")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.operators.PartitionedSnapshot
 import graft.streaming.EventsStream
 
 case class Ev(ts: Timestamp, user_id: Long, event_type: String, value: Double)
@@ -128,10 +129,15 @@ class StreamingSpec extends SparkSpec {
     val q1 = EventsStream.runAvailableNow(
       EventsStream.mergeSink(stream, snap, "id", ckpt))
     q1.awaitTermination()
-    val after1 = spark.read.parquet(snap)
+    val after1 = PartitionedSnapshot.read(spark, snap)
     assert(after1.count() == 2)
     val created1 = after1.filter($"id" === "CVE-1")
       .select("created_at").head().getTimestamp(0)
+    // every data file of the snapshot: bucket dir -> (file name, mtime)
+    def files(): Map[String, Set[(String, Long)]] =
+      new java.io.File(snap).listFiles.filter(_.getName.startsWith(PartitionedSnapshot.BucketCol + "="))
+        .map(d => d.getName -> d.listFiles.map(f => (f.getName, f.lastModified)).toSet).toMap
+    val files1 = files()
 
     // batch 2: update CVE-1, add CVE-3 — catch-up tick picks up only new files
     Seq(("CVE-1", 0.9), ("CVE-3", 0.3)).toDF("id", "epss")
@@ -140,8 +146,17 @@ class StreamingSpec extends SparkSpec {
       EventsStream.mergeSink(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$srcDir/*"), snap, "id", ckpt))
     q2.awaitTermination()
-    val after2 = spark.read.parquet(snap)
+    val after2 = PartitionedSnapshot.read(spark, snap)
     assert(after2.count() == 3)
+    // the second batch rewrote only the buckets of its own keys: the
+    // other buckets' files are the same files, untouched
+    val touched = Seq("CVE-1", "CVE-3").map(id => s"${PartitionedSnapshot.BucketCol}=" +
+      spark.range(1).select(PartitionedSnapshot.bucketOf(lit(id), EventsStream.SinkBuckets))
+        .head().getLong(0)).toSet
+    val untouched = files1.keySet -- touched
+    assert(untouched.nonEmpty, s"CVE-2 must hash outside the batch-2 buckets $touched")
+    val files2 = files()
+    untouched.foreach(b => assert(files2(b) == files1(b), b))
     assert(after2.filter($"id" === "CVE-1").select("epss").head().getDouble(0) == 0.9)
     // T4: created_at preserved across the re-merge
     assert(after2.filter($"id" === "CVE-1")
@@ -226,7 +241,7 @@ class StreamingSpec extends SparkSpec {
       q.awaitTermination()
     }
     run()
-    val after1 = spark.read.parquet(snap)
+    val after1 = PartitionedSnapshot.read(spark, snap)
     assert(after1.count() == 1) // dup collapsed, short doc gated
     val created1 = after1.select("created_at").head().getTimestamp(0)
 
@@ -240,7 +255,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("ts", "doc_id", "text", "lang", "source")
       .write.parquet(s"$src/b2")
     run()
-    assert(spark.read.parquet(snap).count() == 2)
+    assert(PartitionedSnapshot.read(spark, snap).count() == 2)
 
     // re-deliver the same payload beyond the horizon plus one new doc:
     // dedup state no longer holds the digest, so the duplicate REACHES
@@ -250,7 +265,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("ts", "doc_id", "text", "lang", "source")
       .write.parquet(s"$src/b3")
     run()
-    val after3 = spark.read.parquet(snap)
+    val after3 = PartitionedSnapshot.read(spark, snap)
     assert(after3.count() == 3, s"got ${after3.count()}")
     val goodRow = after3.filter($"doc_id".isin(1L, 7L))
     assert(goodRow.count() == 1) // one row per distinct content

@@ -24,14 +24,6 @@ class WatermarksSpec extends SparkSpec {
     assert(Watermarks.sourceLastUpdate(spark, dir, "epss").get == ts("2025-04-01T12:00:00Z"))
   }
 
-  test("T3: window start falls back to 24h lookback on cold start") {
-    val dir = SparkSpec.tempDir("wm2").toString + "/status"
-    val now = ts("2025-04-10T12:00:00Z")
-    assert(Watermarks.windowStart(spark, dir, "nvd", now) == ts("2025-04-09T12:00:00Z"))
-    Watermarks.upsert(spark, dir, "nvd", ts("2025-04-10T00:00:00Z"))
-    assert(Watermarks.windowStart(spark, dir, "nvd", now) == ts("2025-04-10T00:00:00Z"))
-  }
-
   test("upsertAll: one read-modify-swap equals sequential upserts; preserves omitted stamps") {
     val a = SparkSpec.tempDir("wm3").toString + "/batched"
     val b = SparkSpec.tempDir("wm3").toString + "/sequential"
@@ -48,9 +40,7 @@ class WatermarksSpec extends SparkSpec {
       ("kev", ts("2025-04-02T00:00:00Z"), None)) // fetched, but probe failed
     Watermarks.upsertAll(spark, a, entries)
     entries.foreach { case (s, lu, slu) => Watermarks.upsert(spark, b, s, lu, slu) }
-    val rows = (d: String) => Watermarks.read(spark, d).collect()
-      .map(r => (r.getString(0), r.getTimestamp(1), r.getTimestamp(2))).sortBy(_._1).toSeq
-    assert(rows(a) == rows(b))
+    assert(Watermarks.read(spark, a) == Watermarks.read(spark, b))
     assert(Watermarks.sourceLastUpdate(spark, a, "epss").get == ts("2025-04-01T20:00:00Z"))
     assert(Watermarks.sourceLastUpdate(spark, a, "kev").get == ts("2025-03-31T06:00:00Z"))
     assert(Watermarks.sourceLastUpdate(spark, a, "job").isEmpty)
@@ -58,6 +48,54 @@ class WatermarksSpec extends SparkSpec {
     val c = SparkSpec.tempDir("wm3").toString + "/empty"
     Watermarks.upsertAll(spark, c, Seq.empty)
     assert(!new java.io.File(c).exists())
+  }
+
+  test("the record is read and written without a Spark job") {
+    val dir = SparkSpec.tempDir("wm4").toString + "/status"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        descs.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("")); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Watermarks.upsertAll(spark, dir, Seq(
+        ("cvemate", ts("2025-04-02T00:00:00Z"), None),
+        ("epss", ts("2025-04-02T00:00:00Z"), Some(ts("2025-04-01T20:00:00Z")))))
+      assert(Watermarks.lastUpdated(spark, dir, "cvemate").contains(ts("2025-04-02T00:00:00Z")))
+      // the listener bus delivers in order but asynchronously: a labelled
+      // sentinel job arrives after any job the two calls ran
+      spark.sparkContext.setJobDescription("sentinel")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 10000
+      while (!descs.contains("sentinel") && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(descs.contains("sentinel"))
+    assert(descs.toArray.forall(_ == "sentinel"), s"watermark jobs ran: $descs")
+    // one line per source, epoch millis, an empty upstream stamp for none
+    assert(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir)), "UTF-8") ==
+      s"cvemate\t${ts("2025-04-02T00:00:00Z").getTime}\t\n" +
+        s"epss\t${ts("2025-04-02T00:00:00Z").getTime}\t${ts("2025-04-01T20:00:00Z").getTime}\n")
+  }
+
+  test("a crash between the temp write and the rename leaves the old values readable") {
+    val dir = SparkSpec.tempDir("wm5").toString + "/status"
+    Watermarks.upsert(spark, dir, "nvd", ts("2025-04-01T00:00:00Z"), Some(ts("2025-03-31T00:00:00Z")))
+    // the next write died after its temp file, torn, before the rename
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir + ".tmp"), "nvd\t17435".getBytes("UTF-8"))
+    assert(Watermarks.lastUpdated(spark, dir, "nvd").contains(ts("2025-04-01T00:00:00Z")))
+    assert(Watermarks.sourceLastUpdate(spark, dir, "nvd").contains(ts("2025-03-31T00:00:00Z")))
+    // the re-run replaces the stale temp file and commits
+    Watermarks.upsert(spark, dir, "nvd", ts("2025-04-02T00:00:00Z"))
+    assert(Watermarks.lastUpdated(spark, dir, "nvd").contains(ts("2025-04-02T00:00:00Z")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir + ".tmp")))
+    // a record that does not parse fails loudly, naming the file
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir), "nvd 1743465600000\n".getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](Watermarks.lastUpdated(spark, dir, "nvd"))
+    assert(e.getMessage.contains(dir), e.getMessage)
   }
 
   test("P11: freshness short-circuit semantics") {
