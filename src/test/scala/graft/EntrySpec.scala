@@ -29,8 +29,8 @@ class EntrySpec extends SparkSpec {
   test("lifecycle entries rerun in one scratch dir: same rows, no new dirs under tmpdir") {
     val dir = "/root/testdata/sf0.001"
     // the scratch-dir name prefixes of the entries run below: the two
-    // lifecycle stores, the replays' per-call work dirs' parent, and the
-    // names those work dirs once had directly under tmpdir
+    // lifecycle stores, the replays' per-call work dirs' parent, and a
+    // replay work dir made directly under tmpdir
     val prefixes = Seq("graft_dailyq_", "graft_annpq_", "graft_work_",
       "graft_docs_replay_", "graft_events_replay_")
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))
