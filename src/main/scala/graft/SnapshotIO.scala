@@ -100,26 +100,52 @@ object SnapshotIO {
     }
 
   /** Commit a small record: `text` is written to `<file>.tmp` and renamed
-    * over `file` (POSIX rename replaces it atomically), so a crash leaves
-    * the old record or the new one, never a torn one. A filesystem whose
-    * rename refuses an existing target fails the rewrite loudly. */
+    * over `file`, so a crash leaves the old record or the new one, never a
+    * torn one. POSIX rename replaces the target atomically; a filesystem
+    * whose rename refuses an existing target (HDFS, object stores) gets
+    * [[swap]]'s sequence instead — the old record renamed to `<file>_bak`,
+    * the new one into place, the backup deleted — and [[readRecord]] reads
+    * the backup when a crash struck between those renames. A directory at
+    * `file` fails loudly: a local rename would copy the record into it. */
   def writeRecord(conf: Configuration, file: Path, text: String): Unit = {
     val f = rawFs(conf, file)
+    if (isDir(f, file)) throw notARecord(file)
     val tmp = file.suffix(".tmp")
     val out = f.create(tmp, true)
     try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (!f.rename(tmp, file))
-      throw new java.io.IOException(s"record rename failed: $tmp -> $file")
+    if (!f.rename(tmp, file)) {
+      val bak = file.suffix("_bak")
+      f.delete(bak, false)
+      if (!f.rename(file, bak) || !f.rename(tmp, file))
+        throw new java.io.IOException(s"record rename failed: $tmp -> $file")
+      f.delete(bak, false)
+    }
   }
 
-  /** The text [[writeRecord]] committed at `file`; None when there is no
-    * such file (one open, no separate existence probe). */
-  def readRecord(conf: Configuration, file: Path): Option[String] =
-    try {
-      val in = rawFs(conf, file).open(file)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    } catch {
-      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => None
+  /** The text [[writeRecord]] committed at `file` — or at its backup, when
+    * a crash struck between the backup and the commit rename; None when
+    * there is neither (one open, no existence probe on the common path).
+    * A directory at `file` fails loudly, naming it. */
+  def readRecord(conf: Configuration, file: Path): Option[String] = {
+    val f = rawFs(conf, file)
+    def read(p: Path): Option[String] =
+      try {
+        val in = f.open(p)
+        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+        finally in.close()
+      } catch {
+        case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => None
+      }
+    read(file).orElse {
+      if (isDir(f, file)) throw notARecord(file)
+      read(file.suffix("_bak"))
     }
+  }
+
+  private def isDir(f: FileSystem, p: Path): Boolean =
+    try f.getFileStatus(p).isDirectory
+    catch { case _: java.io.FileNotFoundException => false }
+
+  private def notARecord(file: Path) =
+    new java.io.IOException(s"record $file is a directory, not a record file")
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import java.sql.Timestamp
+import java.time.Instant
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -13,9 +14,11 @@ import org.apache.spark.sql.SparkSession
   * Control-plane only: one row per source (≤10), kept as ONE small text
   * record committed through [[graft.SnapshotIO.writeRecord]] like every
   * other control-plane file, one line per source:
-  * `<source>\t<last_updated>\t<source_last_update>`, both epoch millis,
-  * the upstream stamp empty until a fetch has probed one. Reads and
-  * writes run no Spark job.
+  * `<source>\t<last_updated>\t<source_last_update>`, both ISO-8601 UTC
+  * instants (`2025-04-01T00:00:00.1011Z`) at the stamp's full precision —
+  * an upstream stamp must read back equal, or [[isFresh]] would never
+  * hold for one with sub-millisecond digits — the upstream stamp empty
+  * until a fetch has probed one. Reads and writes run no Spark job.
   */
 object Watermarks {
 
@@ -30,7 +33,7 @@ object Watermarks {
       .fold(Map.empty[String, Stamps])(parse(path, _))
 
   private def parse(path: String, text: String): Map[String, Stamps] = {
-    def stamp(s: String) = s.toLongOption.map(new Timestamp(_))
+    def stamp(s: String) = scala.util.Try(Timestamp.from(Instant.parse(s))).toOption
     text.split("\n").iterator.filter(_.nonEmpty).map { line =>
       line.split("\t", -1) match {
         case Array(source, lu, slu)
@@ -38,7 +41,7 @@ object Watermarks {
           source -> (stamp(lu).get, stamp(slu))
         case _ =>
           throw new IllegalArgumentException(s"watermark record $path: cannot parse " +
-            s"line '$line' (want <source>\\t<last_updated millis>\\t<source_last_update millis or empty>)")
+            s"line '$line' (want <source>\\t<last_updated instant>\\t<source_last_update instant or empty>)")
       }
     }.toMap
   }
@@ -74,7 +77,7 @@ object Watermarks {
     }
     graft.SnapshotIO.writeRecord(spark.sparkContext.hadoopConfiguration, new Path(path),
       merged.toSeq.sortBy(_._1).map { case (s, (lu, slu)) =>
-        s"$s\t${lu.getTime}\t${slu.fold("")(_.getTime.toString)}\n"
+        s"$s\t${lu.toInstant}\t${slu.fold("")(_.toInstant.toString)}\n"
       }.mkString)
   }
 

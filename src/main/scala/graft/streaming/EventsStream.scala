@@ -271,10 +271,14 @@ object EventsStream {
       .option("checkpointLocation", checkpoint)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        // upsert runs two actions on it (the touched-bucket probe, the
+        // bucket write): persisted so the batch and its collapse run once
         val collapsed = Merge.lastWriterWins(
           batch.withColumn("_pos", monotonically_increasing_id()), key,
           col("_pos")).drop("_pos")
-        graft.operators.PartitionedSnapshot.upsert(collapsed, snapshotPath, key, SinkBuckets)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try graft.operators.PartitionedSnapshot.upsert(collapsed, snapshotPath, key, SinkBuckets)
+        finally collapsed.unpersist()
         ()
       }
 

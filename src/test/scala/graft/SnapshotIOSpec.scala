@@ -65,6 +65,29 @@ class SnapshotIOSpec extends SparkSpec {
     assert(readTag(s"$work/snap") == "new")
   }
 
+  test("a record commits on a filesystem whose rename refuses an existing target") {
+    val refusing = new org.apache.hadoop.conf.Configuration(conf)
+    refusing.set("fs.graftrefuse.impl", classOf[SnapshotIOSpec.RefusingRenameFs].getName)
+    refusing.setBoolean("fs.graftrefuse.impl.disable.cache", true)
+    val work = SparkSpec.tempDir("refuse").toString
+    val rec = new org.apache.hadoop.fs.Path(s"graftrefuse://$work/rec")
+    def local(name: String) = java.nio.file.Paths.get(work, name)
+    SnapshotIO.writeRecord(refusing, rec, "a\n")
+    SnapshotIO.writeRecord(refusing, rec, "b\n") // the rewrite: its target exists
+    assert(SnapshotIO.readRecord(refusing, rec).contains("b\n"))
+    assert(!java.nio.file.Files.exists(local("rec_bak")))
+    assert(!java.nio.file.Files.exists(local("rec.tmp")))
+    // a crash between the backup rename and the commit rename: only the
+    // backup holds the record, and it still reads
+    java.nio.file.Files.move(local("rec"), local("rec_bak"))
+    assert(SnapshotIO.readRecord(refusing, rec).contains("b\n"))
+    SnapshotIO.writeRecord(refusing, rec, "c\n")
+    assert(SnapshotIO.readRecord(refusing, rec).contains("c\n"))
+    SnapshotIO.writeRecord(refusing, rec, "d\n")
+    assert(SnapshotIO.readRecord(refusing, rec).contains("d\n"))
+    assert(!java.nio.file.Files.exists(local("rec_bak")))
+  }
+
   test("a mid-swap bucket crash does not flip the next tick into an init rebuild") {
     val work = SparkSpec.tempDir("rec2").toString
     val landing = Landing(
@@ -127,5 +150,16 @@ class SnapshotIOSpec extends SparkSpec {
     // never read as a speedup (ADVICE r19)
     assert(results.toMap.apply("boom").isEmpty)
     assert(results.toMap.apply("ok").exists(_ >= 0.0))
+  }
+}
+
+object SnapshotIOSpec {
+
+  /** The local filesystem under its own scheme, with the rename of HDFS
+    * and object stores: it refuses (returns false) when the target exists. */
+  class RefusingRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("graftrefuse:///")
+    override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+      !exists(dst) && super.rename(src, dst)
   }
 }

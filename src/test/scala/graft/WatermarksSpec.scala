@@ -75,10 +75,22 @@ class WatermarksSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(descs.contains("sentinel"))
     assert(descs.toArray.forall(_ == "sentinel"), s"watermark jobs ran: $descs")
-    // one line per source, epoch millis, an empty upstream stamp for none
+    // one line per source, ISO instants, an empty upstream stamp for none
     assert(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir)), "UTF-8") ==
-      s"cvemate\t${ts("2025-04-02T00:00:00Z").getTime}\t\n" +
-        s"epss\t${ts("2025-04-02T00:00:00Z").getTime}\t${ts("2025-04-01T20:00:00Z").getTime}\n")
+      "cvemate\t2025-04-02T00:00:00Z\t\n" +
+        "epss\t2025-04-02T00:00:00Z\t2025-04-01T20:00:00Z\n")
+  }
+
+  test("sub-millisecond stamps round-trip, so a stamped upstream reads as fresh") {
+    val dir = SparkSpec.tempDir("wm6").toString + "/status"
+    // KEV's dateReleased carries four fractional digits; a probe may carry nine
+    val kev = ts("2024-07-23T14:01:05.1011Z")
+    val probe = ts("2024-07-23T14:01:05.101100001Z")
+    Watermarks.upsertAll(spark, dir, Seq(("kev", kev, Some(kev)), ("probe", probe, Some(probe))))
+    assert(Watermarks.sourceLastUpdate(spark, dir, "kev").contains(kev))
+    assert(Watermarks.lastUpdated(spark, dir, "probe").contains(probe))
+    assert(Watermarks.isFresh(Watermarks.sourceLastUpdate(spark, dir, "kev"), kev))
+    assert(Watermarks.isFresh(Watermarks.sourceLastUpdate(spark, dir, "probe"), probe))
   }
 
   test("a crash between the temp write and the rename leaves the old values readable") {
@@ -96,6 +108,19 @@ class WatermarksSpec extends SparkSpec {
     java.nio.file.Files.write(java.nio.file.Paths.get(dir), "nvd 1743465600000\n".getBytes("UTF-8"))
     val e = intercept[IllegalArgumentException](Watermarks.lastUpdated(spark, dir, "nvd"))
     assert(e.getMessage.contains(dir), e.getMessage)
+    // so does a directory at the record's path (an old parquet status
+    // table): it must not read as "no watermarks", nor take the write
+    val old = SparkSpec.tempDir("wm5").toString + "/status"
+    spark.range(1).write.parquet(old)
+    val r = intercept[java.io.IOException](Watermarks.lastUpdated(spark, old, "nvd"))
+    assert(r.getMessage.contains(old) && r.getMessage.contains("directory"), r.getMessage)
+    val w = intercept[java.io.IOException](
+      Watermarks.upsertAll(spark, old, Seq(("nvd", ts("2025-04-02T00:00:00Z"), None))))
+    assert(w.getMessage.contains(old), w.getMessage)
+    val direct = intercept[java.io.IOException](SnapshotIO.writeRecord(
+      spark.sparkContext.hadoopConfiguration, new org.apache.hadoop.fs.Path(old), "x\n"))
+    assert(direct.getMessage.contains(old), direct.getMessage)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(old, "status.tmp")))
   }
 
   test("P11: freshness short-circuit semantics") {
